@@ -21,8 +21,8 @@ import org.apache.spark.sql.{Column, DataFrame}
   * [[graft.sources.Landing]], [[graft.etl.Clean]] and
   * [[graft.etl.Medallion]]; for the Structured Streaming surface see
   * [[graft.streaming.StreamingDemo]]; for the Catalyst extensions
-  * (auto-binned range joins, plan-time money folding, bounded top-k
-  * physical operator) see [[graft.plans.GraftExtensions]]. */
+  * (auto-binned range joins, plan-time money folding, sort before
+  * project, bounded top-k physical operator) see [[graft.plans.GraftExtensions]]. */
 object Graft {
 
   // ---- session wiring ------------------------------------------------
@@ -31,7 +31,9 @@ object Graft {
     * the SQL functions (`parse_money` UDF + `exact_money_sum` UDAF,
     * codegen'd `parse_money_native` and `dot_f` expressions), the
     * optimizer rules (BinRangeJoin auto-binning, plan-time
-    * parse_money_native constant folding) and the TopKPerKey planner
+    * parse_money_native constant folding, SortBeforeProject — a global
+    * sort's computed projection runs once, after the range shuffle;
+    * `Tables.read` also installs this one) and the TopKPerKey planner
     * strategy — the runtime twin of setting
     * `spark.sql.extensions=graft.plans.GraftExtensions` at session
     * build (the cluster-deployment path, which remains preferred when
@@ -48,6 +50,7 @@ object Graft {
     if (!spark.experimental.extraOptimizations.contains(plans.FoldParseMoney))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ plans.FoldParseMoney
+    plans.SortBeforeProject.register(spark)
     if (!spark.experimental.extraStrategies.contains(plans.TopKPerKeyStrategy))
       spark.experimental.extraStrategies =
         spark.experimental.extraStrategies :+ plans.TopKPerKeyStrategy

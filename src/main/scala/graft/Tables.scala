@@ -120,12 +120,17 @@ object Tables {
   // queries that scan the same table in one session — re-listing and
   // re-resolving per query is pure overhead. DataFrames are immutable
   // plans, so sharing is safe; SessionMemo holds sessions weakly so
-  // stopped sessions (and their relations) can be collected.
-  def read(spark: SparkSession, dir: String, name: String): DataFrame =
+  // stopped sessions (and their relations) can be collected. Every
+  // registry query reads through here, so it also installs the
+  // SortBeforeProject rule once per session: sessions built without
+  // the extensions get it too.
+  def read(spark: SparkSession, dir: String, name: String): DataFrame = {
+    graft.plans.SortBeforeProject.register(spark)
     SessionMemo.getOrElseUpdate(spark, s"table:$dir/$name") {
       if (name == "events") readEvents(spark, s"$dir/events.parquet")
       else spark.read.schema(schemas(name)).parquet(s"$dir/$name.parquet")
     }
+  }
 
   /** Footer-unit-aware events reader.
     *

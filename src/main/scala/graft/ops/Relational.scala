@@ -1771,15 +1771,15 @@ object Relational {
       // the SNAPSHOT scan's optimizer size estimate — parquet-footer
       // bytes, plan-stable — not the join output's (join estimates
       // are child-size products, useless as a gate). One-slot pin
-      // (r19 verdict #4): repeated invocations hold one live
-      // snapshot, never a pile of dead ones.
+      // (r19 verdict #4), keyed by dataset: repeated invocations hold
+      // one live snapshot per dataset, never a pile of dead ones.
       val deltaRaw = qSnapshotDiff.fn(s, d)
       val snapBytes =
         try snapOld(s, d).queryExecution.optimizedPlan.stats.sizeInBytes
         catch { case _: Exception => BigInt(Long.MaxValue) }
       val delta =
         if (snapBytes < BigInt(64L * 1024 * 1024)) deltaRaw
-        else graft.SessionMemo.pinnedSlot("mergeUpsert_delta")(deltaRaw)
+        else graft.SessionMemo.pinnedSlot(s"mergeUpsert_delta:$d")(deltaRaw)
       val upserts = delta.filter(col("change_type") =!= "removed")
         .select(col("o_orderkey"), col("price_new").as("price"), lit(1).as("pri"))
       val tombstones = delta.filter(col("change_type") === "removed")

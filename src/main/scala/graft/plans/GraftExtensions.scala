@@ -32,10 +32,17 @@ object FoldParseMoney extends Rule[LogicalPlan] {
     }
 }
 
+/** Installs every Catalyst extension of the engine at session build:
+  *  - [[FoldParseMoney]]: plan-time `parse_money_native` folding;
+  *  - [[BinRangeJoin]]: auto-binned range joins;
+  *  - [[SortBeforeProject]]: a global sort's computed projection runs
+  *    once, after the range shuffle;
+  *  - [[TopKPerKeyStrategy]]: the bounded top-k physical operator. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(extensions: SparkSessionExtensions): Unit = {
     extensions.injectOptimizerRule(_ => FoldParseMoney)
     extensions.injectOptimizerRule(_ => BinRangeJoin)
+    extensions.injectOptimizerRule(_ => SortBeforeProject)
     extensions.injectPlannerStrategy(_ => TopKPerKeyStrategy)
   }
 }

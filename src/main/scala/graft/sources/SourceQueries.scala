@@ -22,6 +22,14 @@ import org.apache.spark.sql.functions._
   * contract; the sum is decimal-exact per [[graft.Num]]). */
 object SourceQueries {
 
+  /** Sink directory of the `<format>` round-trip query over dataset
+    * `d` (tsv, orc, csv or json), resolved through the drains'
+    * `tmpBase` lifecycle: pid-suffixed, shutdown-hook cleaned and
+    * stale-swept by prefix on a crash. Specs that inspect the written
+    * files read this path. */
+  def sinkDir(format: String, d: String): java.nio.file.Path =
+    graft.streaming.StreamQueries.tmpBase(s"graft_stream_${format}_rt_", d)
+
   val qTsvRoundtrip = Q(
     (s, d) => {
       val fmt = classOf[graft.sources.v2.TsvDataSource].getName
@@ -34,11 +42,7 @@ object SourceQueries {
       // shared OS disk only coupled the number to foreign I/O (the
       // r15 drain bimodality class); at cluster scale the analog is a
       // dedicated staging volume/object store, not the OS tmp disk.
-      // r20 (r19 ADVICE): through the drains' tmpBase lifecycle —
-      // pid-suffixed (two concurrent JVMs never race one dest),
-      // shutdown-hook cleaned, and stale-swept by prefix on a crash.
-      val dest = graft.streaming.StreamQueries
-        .tmpBase("graft_stream_tsv_rt_", d).toString
+      val dest = sinkDir("tsv", d).toString
       // all four header types on the wire: long, string, int, double
       Tables.supplier(s, d)
         .select(col("s_suppkey"), col("s_name"),
@@ -68,9 +72,7 @@ object SourceQueries {
     * conversion in this path). */
   val qOrcRoundtrip = Q(
     (s, d) => {
-      // same tmpBase lifecycle as q_tsv_roundtrip (r20, r19 ADVICE)
-      val dest = graft.streaming.StreamQueries
-        .tmpBase("graft_stream_orc_rt_", d).toString
+      val dest = sinkDir("orc", d).toString
       Tables.lineitem(s, d)
         .select(col("l_orderkey"), col("l_quantity"),
           col("l_extendedprice"), col("l_returnflag"))
@@ -108,9 +110,7 @@ object SourceQueries {
     * escapes newlines at produce time and keeps splittable reads. */
   val qCsvRoundtrip = Q(
     (s, d) => {
-      // same tmpBase lifecycle as q_tsv_roundtrip (r20, r19 ADVICE)
-      val dest = graft.streaming.StreamQueries
-        .tmpBase("graft_stream_csv_rt_", d).toString
+      val dest = sinkDir("csv", d).toString
       Tables.supplier(s, d)
         .select(col("s_suppkey"), col("s_nationkey"), col("s_acctbal"),
           concat(col("s_name"), lit(",\"\n#"),
@@ -155,9 +155,7 @@ object SourceQueries {
     * Oracle recomputes from the source parquet. */
   val qJsonRoundtrip = Q(
     (s, d) => {
-      // same tmpBase lifecycle as q_tsv_roundtrip (r20, r19 ADVICE)
-      val dest = graft.streaming.StreamQueries
-        .tmpBase("graft_stream_json_rt_", d).toString
+      val dest = sinkDir("json", d).toString
       Tables.supplier(s, d)
         .select(col("s_suppkey"), col("s_nationkey"), col("s_acctbal"),
           // comma, quote, backslash, newline, non-ASCII — every class

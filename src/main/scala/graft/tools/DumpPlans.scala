@@ -51,7 +51,7 @@ object DumpPlans {
       "q_json_roundtrip", "q_stream_totals_v2", "q_audio_decode",
       "q_stream_windowed", "q_stream_sessions", "q_stream_dedup",
       "q_stream_join", "q_stream_join_outer", "q_video_decode",
-      "q_media_meta_permissive")
+      "q_media_meta_permissive", "q_parse_money_native", "q_financial_silver")
     val sb = new StringBuilder
     sb.append("# Headline physical plans\n\n")
     sb.append("Generated by `graft.tools.DumpPlans` (sf0.001, local[4], AQE\n")

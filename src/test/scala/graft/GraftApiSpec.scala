@@ -561,6 +561,8 @@ class GraftApiSpec extends SparkSpec {
       .count(_ == plans.BinRangeJoin) === 1)
     assert(spark.experimental.extraOptimizations
       .count(_ == plans.FoldParseMoney) === 1)
+    assert(spark.experimental.extraOptimizations
+      .count(_ == plans.SortBeforeProject) === 1)
     assert(spark.experimental.extraStrategies
       .count(_ == plans.TopKPerKeyStrategy) === 1)
     // SQL surface is live: UDF, UDAF, and both native expressions

@@ -258,6 +258,88 @@ class PlanSpec extends SparkSpec {
       df.collect().map(r => (r.getString(0), r.getLong(1))).toSeq)
   }
 
+  /** Rows of `df`'s analyzed plan, optimized without SortBeforeProject. */
+  private def rowsWithoutSortBeforeProject(df: org.apache.spark.sql.DataFrame) = {
+    val saved = spark.experimental.extraOptimizations
+    spark.experimental.extraOptimizations = saved.filterNot(_ == plans.SortBeforeProject)
+    try {
+      val plain = org.apache.spark.sql.graft.Bridge.ofRows(spark, df.queryExecution.analyzed)
+      assert(!projectsAfterGlobalSort(plain), plain.queryExecution.optimizedPlan.treeString)
+      plain.collect().toSeq
+    } finally spark.experimental.extraOptimizations = saved
+  }
+
+  /** True when the optimized plan holds `Project(computed, Sort(global))`. */
+  private def projectsAfterGlobalSort(df: org.apache.spark.sql.DataFrame): Boolean = {
+    import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute}
+    import org.apache.spark.sql.catalyst.plans.logical.{Project, Sort}
+    df.queryExecution.optimizedPlan.exists {
+      case Project(list, Sort(_, true, _, _)) =>
+        list.exists { case _: Attribute | Alias(_: Attribute, _) => false; case _ => true }
+      case _ => false
+    }
+  }
+
+  test("SortBeforeProject: the money parse runs after the only range exchange") {
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.types.StringType
+    val df = SparkEntry.queries("q_parse_money_native")(spark, sfDir)
+    val plan = df.queryExecution.executedPlan
+    val helper = new AdaptiveSparkPlanHelper {}
+    val ranges = helper.collect(plan) {
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+    }
+    assert(ranges.size === 1, plan.toString)
+    val parses = (p: org.apache.spark.sql.execution.SparkPlan) => helper.collect(p) {
+      case n if n.expressions.exists(_.exists(_.isInstanceOf[functions.ParseMoneyExpr])) => n
+    }
+    assert(parses(plan).nonEmpty, plan.toString)
+    assert(parses(ranges.head).isEmpty, s"parse_money_native below the range exchange:\n$plan")
+    assert(!ranges.head.child.output.exists(_.dataType == StringType),
+      s"the range exchange shuffles a string column:\n$plan")
+  }
+
+  test("SortBeforeProject: silver and money-parse rows equal the unrewritten plan's") {
+    for (name <- Seq("q_parse_money_native", "q_financial_silver", "q_udf_parse_money")) {
+      val df = SparkEntry.queries(name)(spark, sfDir)
+      assert(projectsAfterGlobalSort(df), s"$name not rewritten:\n${df.queryExecution.optimizedPlan}")
+      val rows = df.collect().toSeq
+      assert(rows.nonEmpty, name)
+      assert(rows === rowsWithoutSortBeforeProject(df), name)
+    }
+  }
+
+  test("SortBeforeProject leaves nondeterministic, sort-on-computed and narrowing projections") {
+    val items = Tables.lineitem(spark, sfDir)
+    val randomized = items
+      .select(col("l_orderkey"), (col("l_quantity") + rand(7)).as("q"))
+      .orderBy(col("l_orderkey"))
+    val byComputed = items
+      .select(col("l_orderkey"), col("l_extendedprice"),
+        (col("l_extendedprice") * 2).as("doubled"))
+      .orderBy(col("doubled"))
+    val narrowing = Tables.documents(spark, sfDir)
+      .select(col("doc_id"), length(col("text")).as("len"))
+      .orderBy(col("doc_id"))
+    for ((what, df) <- Seq("rand()" -> randomized, "computed key" -> byComputed,
+        "narrowing" -> narrowing))
+      assert(!projectsAfterGlobalSort(df),
+        s"$what rewritten:\n${df.queryExecution.optimizedPlan}")
+  }
+
+  test("SortBeforeProject keeps orderBy.limit on TakeOrderedAndProject") {
+    val df = Tables.lineitem(spark, sfDir)
+      .select(col("l_orderkey"), col("l_linenumber"),
+        (col("l_extendedprice") * 2).as("doubled"))
+      .orderBy(col("l_orderkey").desc, col("l_linenumber"))
+      .limit(5)
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("TakeOrderedAndProject"), plan)
+    assert(df.collect().toSeq === rowsWithoutSortBeforeProject(df))
+  }
+
   test("BinRangeJoin guards empty intervals and caps oversized ones") {
     if (!spark.experimental.extraOptimizations.contains(graft.plans.BinRangeJoin))
       spark.experimental.extraOptimizations =
@@ -671,9 +753,7 @@ class PlanSpec extends SparkSpec {
       s"balance filter not pushed into CSV:\n${plan.take(1500)}")
     // multiLine parallelism is per-file: the staging repartition(4)
     // must actually have produced multiple csv part files
-    val dest = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"),
-      "graft_csv_roundtrip_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_"))
+    val dest = graft.sources.SourceQueries.sinkDir("csv", sfDir)
     val parts = new java.io.File(dest.toString).listFiles()
       .count(f => f.getName.endsWith(".csv"))
     assert(parts >= 2, s"expected multiple staged csv files, got $parts")
@@ -690,9 +770,7 @@ class PlanSpec extends SparkSpec {
     // escaped newlines keep JSONL line-splittable — no multiLine, so
     // the staged files must still be multiple (per-file AND intra-file
     // parallelism both available at scale)
-    val dest = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"),
-      "graft_json_roundtrip_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_"))
+    val dest = graft.sources.SourceQueries.sinkDir("json", sfDir)
     val parts = new java.io.File(dest.toString).listFiles()
       .count(f => f.getName.endsWith(".json"))
     assert(parts >= 2, s"expected multiple staged json files, got $parts")

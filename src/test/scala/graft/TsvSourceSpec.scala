@@ -209,9 +209,7 @@ class TsvSourceSpec extends SparkSpec {
       .getOrElse(fail("no BatchScanExec in the graded round-trip plan"))
     assert(scan.toString.contains("GreaterThan(s_acctbal"),
       s"filter not pushed to the TSV reader: $scan")
-    val dest = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"),
-      "graft_tsv_roundtrip_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_"))
+    val dest = graft.sources.SourceQueries.sinkDir("tsv", sfDir)
     val expected = Files.list(dest).iterator().asScalaCompat
       .filter(_.toString.endsWith(".tsv"))
       .map(f => math.max(1L, (Files.size(f) + 16383) / 16384)).sum
