@@ -116,7 +116,7 @@ object Bench {
       // by keeping maintenance out of the measurement window.
       // Env-tunable for A/B like the periodic-GC knob above.
       // Since r15 the drain harness also unloads all providers at
-      // each drain's completion (StreamQueries.withStatePartitions —
+      // each drain's completion (StreamQueries.Drain, via runDrain —
       // deferring maintenance alone let DEAD providers accumulate and
       // their pinned state maps tax later drains: q_stream_sessions
       // climbed 11 → 58 s over 6 in-JVM invocations, flat 3-4 s with

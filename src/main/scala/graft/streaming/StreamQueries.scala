@@ -1,39 +1,34 @@
 package graft.streaming
 
 import graft.{Q, Tables}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.attribute.FileTime
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType, TimestampType}
 
-/** Graded TRUE-streaming exhibit (round-10 verdict #4): until now the
-  * Structured Streaming surface was pinned only by StreamingSpec; the
-  * batch twins carried the oracle. This query puts the streaming path
-  * itself under the driver's hash gate: the rate-spike pipeline
-  * (`StreamingDemo.startRateSpikeSink` — per-micro-batch PARTIAL
-  * hourly counts appended to a batch-id-partitioned ledger, spike
-  * table recomputed from the merged ledger) is driven end-to-end with
-  * `Trigger.AvailableNow` over a file stream, and the drained sink is
-  * read back as the result. The oracle is the SAME SQL as the batch
-  * twin q_events_rate_spike, so the hash matches iff splitting the
-  * events across micro-batches, partial-aggregating per batch, and
-  * re-merging the ledger loses nothing vs one batch pass — the
-  * algebraic-partials claim, now graded instead of asserted.
+/** The graded Structured Streaming drains: each `q_stream_*` query runs
+  * one stateful or stateless `StreamingDemo` operator end to end with
+  * `Trigger.AvailableNow` over staged parquet files, and its drained
+  * output sits under the same DuckDB hash gate as the batch queries.
+  * Every drain is the same chain:
+  *  1. staging — [[stageFiles]] writes the corpus slices once per
+  *     (session, dataset), one file each, with increasing mtimes;
+  *  2. the drain — a [[Drain]] wipes its sink and checkpoint, runs the
+  *     query through [[runDrain]] into the idempotent `batch_id=<id>`
+  *     ledger of [[StreamingDemo.startPartitionedBatchSink]];
+  *  3. the claims — [[Drain.claims]] requires >= 2 emitting
+  *     micro-batches (a one-batch drain would grade only the case
+  *     where per-batch state IS the final answer), plus each drain's
+  *     own checks, all failing with the drain's name.
   *
-  * Determinism: hourly counts are integers (no FP re-association
-  * across batch splits), the checkpoint is reset per invocation so
-  * every run is a full re-drain with batch ids from 0, and the whole
-  * sink dir is wiped first — ledger partitions are keyed by batch id,
-  * so a stale partition from a previous (differently-split) run would
-  * otherwise double-count. */
+  * Determinism: a fresh checkpoint and an empty ledger per call make
+  * every run a full re-drain with batch ids from 0 (a stale `batch_id`
+  * partition from a differently split run would otherwise be read
+  * back), and every graded value is an integer or a decimal sum, so
+  * merging partials across any batch split is exact. */
 object StreamQueries {
-
-  /** Minimal projection the pipeline consumes; staged to parquet so
-    * `readStream` gets one stable schema — the raw corpus' physical
-    * ts unit varies across testdata generations (ns vs µs, see
-    * [[graft.Tables.readEvents]]) and the staged copy absorbs that
-    * through the batch reader that already handles it. */
-  private val stagedSchema = StructType(Seq(
-    StructField("ts", TimestampType),
-    StructField("event_type", StringType)))
 
   /** Run one AvailableNow drain: `start` the query under the drain
     * session settings, wait for it to finish (bounded, so a wedged
@@ -63,9 +58,8 @@ object StreamQueries {
     *    checkpoints still go through Spark's default manager.
     *  - `extra`: a drain's own settings (state-store provider, no-data
     *    batches). */
-  private def runDrain(s: org.apache.spark.sql.SparkSession, name: String,
-                       extra: (String, String)*)(
-      start: => org.apache.spark.sql.streaming.StreamingQuery): Unit = {
+  private def runDrain(s: SparkSession, name: String, extra: (String, String)*)(
+      start: => StreamingQuery): Unit = {
     val scoped = Seq(
       "spark.sql.shuffle.partitions" -> "4",
       "spark.sql.streaming.checkpointFileManagerClass" ->
@@ -105,27 +99,57 @@ object StreamQueries {
     }
   }
 
-  /** Per-JVM tmpdir base for a drain's staging/sink/checkpoint tree.
-    * Keyed on (drain name, dataset path, process pid): previously the
-    * key was the dataset path alone, so two concurrent JVMs on the
-    * same sf dir (e.g. a Verify and a Bench) shared one tree — and
-    * since every invocation rmRf's its sink/checkpoint, one process
-    * could delete the other's in-flight drain state mid-run (r12
-    * ADVICE; flaky-run risk, not result corruption). The pid suffix
-    * gives each process its own tree, same convention as Bench's
-    * run-stamped detail files; within a process the session-memoized
-    * staging still reuses one tree.
+  /** One graded drain, named once: its sink and checkpoint live under
+    * `tmpBase` for that name and are wiped here, and every failure it
+    * raises names it. `conf` is the drain's own [[runDrain]] settings. */
+  private[graft] final class Drain(s: SparkSession, name: String, d: String,
+                                   conf: (String, String)*) {
+    private val base = tmpBase(s"graft_${name.stripPrefix("q_")}_", d)
+    val sink: String = base.resolve("sink").toString
+    val ckpt: String = base.resolve("ckpt").toString
+    rmRf(base.resolve("ckpt")); rmRf(base.resolve("sink"))
+
+    def run(start: => StreamingQuery): Unit = runDrain(s, name, conf: _*)(start)
+
+    /** Drain `out` into the `batch_id=<id>` ledger at [[sink]] (every
+      * micro-batch leaves its partition, empty batches included) and
+      * return the ledger. */
+    def ledger(out: DataFrame, outputMode: String = "append"): DataFrame = {
+      run(StreamingDemo.startPartitionedBatchSink(
+        out, sink, Some(ckpt), outputMode, availableNow = true))
+      s.read.parquet(sink)
+    }
+
+    /** The shared claim, in one job with the drain's own aggregates
+      * `more`: rows of `ledger` were emitted in >= 2 distinct
+      * micro-batches. Returns the row (distinct batch count first). */
+    def claims(ledger: DataFrame, more: Column*): Row = {
+      val r = ledger.agg(countDistinct(col("batch_id")), more: _*).head
+      check(r.getLong(0) >= 2, s"emitted in ${r.getLong(0)} micro-batch(es) " +
+        "— the graded cross-batch claim needs >= 2; check the staged file " +
+        "count vs maxFilesPerTrigger")
+      r
+    }
+
+    def check(ok: Boolean, failure: => String): Unit =
+      if (!ok) throw new IllegalStateException(s"$name: $failure")
+  }
+
+  /** Per-JVM tmpdir base for a drain's staging/sink/checkpoint tree,
+    * keyed on (prefix, dataset path, process pid). Every invocation
+    * wipes its sink and checkpoint, so two JVMs on one dataset (a
+    * Verify beside a Bench) must never share a tree; the pid suffix
+    * gives each process its own, and within a process the
+    * session-memoized staging reuses one tree.
     *
-    * Lifecycle (r13 ADVICE — "ages out with tmpdir" was wishful on
-    * Linux hosts, where /tmp survives for the uptime): every created
+    * Lifecycle: `/tmp` survives for the host's uptime, so every created
     * base is recorded and a JVM shutdown hook rmRf's them on normal
-    * exit, so repeated Bench/Verify runs leave nothing behind; trees
-    * orphaned by a CRASHED process are swept at first use by any
-    * later graft JVM — a `graft_stream_*_p<pid>` tree whose pid is no
-    * longer alive belongs to no running drain by construction of the
-    * pid suffix, so deleting it can never race an in-flight run. */
+    * exit; trees orphaned by a crashed process are swept at first use
+    * by any later graft JVM — a `graft_stream_*_p<pid>` tree whose pid
+    * is no longer alive belongs to no running drain, so deleting it can
+    * never race an in-flight run. */
   private val createdBases =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[java.nio.file.Path]()
+    java.util.concurrent.ConcurrentHashMap.newKeySet[Path]()
   private lazy val tmpLifecycle: Unit = {
     Runtime.getRuntime.addShutdownHook(new Thread(() =>
       createdBases.forEach(p =>
@@ -134,26 +158,19 @@ object StreamQueries {
     // run under the RAM-backed override must not orphan trees that a
     // later default-root process would never look at (and vice versa)
     (Set(streamTmpRoot, sys.props("java.io.tmpdir")))
-      .foreach(r => sweepStaleTrees(java.nio.file.Paths.get(r)))
+      .foreach(r => sweepStaleTrees(Paths.get(r)))
   }
 
   /** Sweep `graft_stream_*_p<pid>` trees whose owning pid is no
-    * longer alive. Parsing is fully guarded (r14 ADVICE): the pid
-    * suffix goes through `toLongOption` after a non-empty check, so a
-    * foreign `/tmp` entry named `graft_stream_x_p` (empty suffix) or
-    * one with a >Long digit run is simply ignored — and the whole
-    * sweep is try-wrapped besides, because tmp HYGIENE must never be
-    * able to take down a DRAIN (previously a NumberFormatException
-    * escaped the `Files.list` filter straight out of tmpLifecycle).
-    * Pid-reuse caveat (r14 ADVICE): a crash orphan whose pid the OS
-    * has since handed to an unrelated live process is kept — reading
-    * liveness as ownership is deliberately conservative (deleting can
-    * never race an in-flight drain); such a tree is swept as soon as
-    * that pid dies, and every tree the CURRENT process creates is
-    * covered by the shutdown hook regardless. */
-  private[graft] def sweepStaleTrees(tmp: java.nio.file.Path): Unit =
+    * longer alive. A foreign entry with an empty, non-digit or >Long
+    * pid suffix is ignored, and the whole sweep is try-wrapped: tmp
+    * hygiene must never take down a drain. A crash orphan whose pid
+    * the OS has since given to an unrelated live process is kept —
+    * liveness is read as ownership, so deleting never races an
+    * in-flight drain; it is swept once that pid dies. */
+  private[graft] def sweepStaleTrees(tmp: Path): Unit =
     try {
-      val stale = java.nio.file.Files.list(tmp)
+      val stale = Files.list(tmp)
       try stale.filter { p =>
         val n = p.getFileName.toString
         n.startsWith("graft_stream_") && {
@@ -168,32 +185,28 @@ object StreamQueries {
       }.forEach(p => try rmRf(p) catch { case _: Exception => () })
       finally stale.close()
     } catch { case _: Exception => () }
+
   /** Root for the per-drain trees. `SPARK_GRAFT_STREAM_TMP` (env) or
     * `graft.stream.tmp` (sysprop, set by Bench) overrides
-    * `java.io.tmpdir` — the drain-bimodality knob (r15 verdict #1):
-    * on this host /tmp is DISK-backed, so every state-store commit's
-    * rename+fsync lands on a device shared with sbt, spill, and the
-    * OS writeback queue, and identical-code drains measured 2.2 vs
-    * 9.2 s across passes while the CPU probe read clean both times.
-    * Pointing the tree at a RAM-backed dir (/dev/shm) removes the
-    * foreign-I/O coupling; at cluster scale the analog is a dedicated
-    * checkpoint volume (local NVMe / object store), not a shared OS
-    * disk. Correctness is indifferent — every drain wipes and
-    * re-creates its tree regardless of where it lives. */
+    * `java.io.tmpdir`. Where /tmp is disk-backed, every state-store
+    * commit's rename+fsync shares a device with the build, spill and
+    * the OS writeback queue, and identical drains measured 2.2 vs
+    * 9.2 s across passes; a RAM-backed root (/dev/shm) removes that
+    * coupling (at cluster scale: a dedicated checkpoint volume).
+    * Correctness is indifferent — every drain wipes and re-creates its
+    * tree wherever it lives. */
   private[graft] def streamTmpRoot: String =
     sys.props.get("graft.stream.tmp")
       .orElse(sys.env.get("SPARK_GRAFT_STREAM_TMP"))
       .getOrElse(sys.props("java.io.tmpdir"))
 
   /** `private[graft]`: the format round-trip sinks (SourceQueries,
-    * Medallion's gold mart) share this lifecycle too (r19 ADVICE —
-    * their r19 move to `streamTmpRoot` bypassed the pid suffix, the
-    * shutdown hook and the stale-tree sweep, so a crashed run's
-    * leftovers on a RAM-backed root held memory until reboot and two
-    * concurrent JVMs raced on one shared dest path). */
-  private[graft] def tmpBase(prefix: String, d: String): java.nio.file.Path = {
+    * Medallion's gold mart) share this lifecycle — pid suffix,
+    * shutdown hook and stale-tree sweep — so their trees are neither
+    * orphaned on a RAM-backed root nor shared between two JVMs. */
+  private[graft] def tmpBase(prefix: String, d: String): Path = {
     tmpLifecycle
-    val base = java.nio.file.Paths.get(
+    val base = Paths.get(
       streamTmpRoot,
       prefix + d.replaceAll("[^A-Za-z0-9.]", "_") +
         "_p" + ProcessHandle.current().pid())
@@ -201,238 +214,170 @@ object StreamQueries {
     base
   }
 
-  private[graft] def rmRf(root: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(root)) {
-      val stream = java.nio.file.Files.walk(root)
+  private[graft] def rmRf(root: Path): Unit =
+    if (Files.exists(root)) {
+      val stream = Files.walk(root)
       try stream.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
+        .forEach(p => { Files.deleteIfExists(p); () })
       finally stream.close()
     }
 
+  /** Stage `slices` as `slice_<i>.parquet` under `staging`, one file
+    * each, once per (session, `memoKey`): staging is setup, a pure
+    * function of the corpus, so graded samples time the drain, not a
+    * parquet copy. The mtimes increase a minute apart in slice order
+    * and the file source (latestFirst=false) reads oldest first, so
+    * slice i is consumed no later than slice i + 1 however
+    * maxFilesPerTrigger groups them — the order discipline a
+    * time-ordered source (Kafka partition order, time-partitioned
+    * landing dirs) gives a production stream. */
+  private def stageFiles(s: SparkSession, memoKey: String, staging: Path,
+                         slices: => Seq[DataFrame]): String = {
+    graft.SessionMemo.oncePerSession(s, memoKey) {
+      rmRf(staging)
+      Files.createDirectories(staging)
+      val tmp = staging.resolveSibling(s"${staging.getFileName}_tmp")
+      val mtime0 = System.currentTimeMillis() - 3600000L
+      slices.zipWithIndex.foreach { case (slice, i) =>
+        slice.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+        val files = Files.list(tmp)
+        val part = try files.filter(_.getFileName.toString.endsWith(".parquet"))
+          .findFirst().orElseThrow()
+        finally files.close()
+        val dest = staging.resolve(s"slice_$i.parquet")
+        Files.move(part, dest, StandardCopyOption.REPLACE_EXISTING)
+        Files.setLastModifiedTime(dest, FileTime.fromMillis(mtime0 + i * 60000L))
+        rmRf(tmp)
+      }
+    }
+    staging.toString
+  }
+
+  private def stagingDir(name: String, d: String): Path =
+    tmpBase("graft_stream_staging_", d).resolve(name)
+
+  /** Columns of every staged events file. One schema keeps `readStream`
+    * independent of the corpus' physical ts unit (ns vs µs across
+    * testdata generations, see [[graft.Tables.readEvents]]): the
+    * staged copy went through the batch reader that handles it. */
+  private val stagedEvents = StructType(Seq(
+    StructField("ts", TimestampType),
+    StructField("user_id", LongType),
+    StructField("event_id", LongType),
+    StructField("event_type", StringType),
+    StructField("value", DoubleType)))
+
+  /** A file stream over the staged `files`, projected to `cols`. */
+  private def staged(s: SparkSession, staging: String, perTrigger: Int,
+                     files: String, cols: String*): DataFrame =
+    s.readStream.schema(StructType(cols.map(stagedEvents(_))))
+      .option("maxFilesPerTrigger", perTrigger.toLong)
+      .option("pathGlobFilter", files)
+      .parquet(staging)
+
+  /** The events corpus as slices 0–3, four time-contiguous quarters,
+    * plus slice 4, one far-future SENTINEL row. Per-user sequences
+    * (transitions) must not interleave across batches, so the quarters
+    * are time ranges; the drains whose updates are split-invariant
+    * (totals_v2) merely reuse them. The sentinel is what makes
+    * append-mode emission deterministic for the watermark drains: once
+    * its batch's watermark (sentinel ts − delay) is committed, every
+    * real window and session ends below it, so the final no-data
+    * micro-batch closes and emits them ALL — otherwise those inside
+    * the last `delay` of the corpus would stay open and the result
+    * would depend on where the corpus ends. Its own window never
+    * closes, and its pseudo-user −1 is filtered defensively anyway. */
+  private def eventsStaging(s: SparkSession, d: String): String =
+    stageFiles(s, s"stream_events_staging:$d", stagingDir("events", d), {
+      val ev = Tables.events(s, d).select(col("ts"), col("user_id"),
+        col("event_id"), col("event_type"), col("value"))
+      val us = unix_micros(col("ts"))
+      val b = ev.agg(min(us), max(us)).head
+      val (lo, hi) = (b.getLong(0), b.getLong(1))
+      (0 until 4).map(i => ev.filter(us >= lo + (hi - lo + 1) * i / 4 &&
+        us < lo + (hi - lo + 1) * (i + 1) / 4)) :+
+        s.range(1).select(timestamp_micros(lit(hi + 86400000000L)).as("ts"),
+          lit(-1L).as("user_id"), lit(-1L).as("event_id"),
+          lit("zzz_sentinel").as("event_type"), lit(0.0).as("value"))
+    })
+  private val quarters = "slice_[0-3].parquet"
+  private val allSlices = "slice_*.parquet"
+
+  /** The algebraic-partials drain: the rate-spike pipeline
+    * (`StreamingDemo.startRateSpikeSink` — per-micro-batch PARTIAL
+    * hourly counts appended to a batch-id-partitioned ledger, spike
+    * table recomputed from the merged ledger). The oracle is the batch
+    * twin q_events_rate_spike's SQL, so the hash matches iff splitting
+    * the events across micro-batches, partial-aggregating per batch
+    * and re-merging the ledger loses nothing vs one batch pass. */
   val qStreamDrain = Q(
     (s, d) => {
-      val base = tmpBase("graft_stream_drain_", d)
-      val staging = base.resolve("staging").toString
-      val sink = base.resolve("sink").toString
-      val ckpt = base.resolve("ckpt").toString
-      // fresh checkpoint + empty ledger per invocation: every call is
-      // a full deterministic re-drain (ledger partitions are keyed by
-      // batch id, which restarts at 0 with the checkpoint). The
-      // STAGING copy, by contrast, is setup, not exhibit — its
-      // contents are a pure function of (corpus, projection), so it
-      // is written once per (session, dataset) and the graded samples
-      // measure the drain, not a repeated parquet copy.
-      rmRf(base.resolve("ckpt")); rmRf(base.resolve("sink"))
-      // 4 staged files + maxFilesPerTrigger=2 → the drain runs as 2+
-      // micro-batches, so the graded result genuinely crosses a
-      // batch boundary (a single-batch drain would grade only the
-      // degenerate case where partials ARE the totals).
-      // repartition, NOT coalesce (r11 ADVICE): events.parquet is one
-      // small file → one read partition, and coalesce can only merge
-      // partitions, so it silently staged ONE file and the drain ran
-      // as a single micro-batch — the multi-batch claim degenerated.
-      // The shuffled row placement is immaterial: hourly counts are
-      // algebraic, so the result is split-invariant by construction.
+      val drain = new Drain(s, "q_stream_drain", d)
+      // 4 files, 2 per trigger → 2 micro-batches. repartition, not
+      // coalesce: the corpus may be one small file, which coalesce
+      // cannot split, and a random spread puts an hour's partials in
+      // both batches (counts are algebraic, so the result is
+      // split-invariant by construction).
+      val staging = stagingDir("drain", d).toString
       graft.SessionMemo.oncePerSession(s, s"stream_drain_staging:$d") {
         Tables.events(s, d).select(col("ts"), col("event_type"))
           .repartition(4)
           .write.mode("overwrite").parquet(staging)
       }
-      val stream = s.readStream.schema(stagedSchema)
-        .option("maxFilesPerTrigger", "2")
-        .parquet(staging)
-      runDrain(s, "q_stream_drain") {
-        StreamingDemo.startRateSpikeSink(
-          stream, sink, Some(ckpt), availableNow = true)
-      }
-      // the multi-batch claim, asserted instead of assumed (r11
-      // ADVICE): the ledger is batch-id-partitioned, so the number of
-      // distinct batch_id values IS the micro-batch count — if a
-      // future change re-degenerates the drain to one batch, this
-      // query fails loudly by name rather than silently grading the
-      // trivial case
-      val nBatches = s.read.parquet(s"$sink/hourly_parts")
-        .select(countDistinct(col("batch_id"))).head.getLong(0)
-      if (nBatches < 2) throw new IllegalStateException(
-        s"q_stream_drain: drain ran as $nBatches micro-batch(es) — the " +
-          "graded partial-agg claim needs >= 2; check the staged file " +
-          "count vs maxFilesPerTrigger")
+      drain.run(StreamingDemo.startRateSpikeSink(
+        staged(s, staging, 2, "*.parquet", "ts", "event_type"),
+        drain.sink, Some(drain.ckpt), availableNow = true))
+      drain.claims(s.read.parquet(s"${drain.sink}/hourly_parts"))
       // parquet loses order; re-impose the batch twin's sort so the
       // frame is row-for-row the oracle's
-      s.read.parquet(s"$sink/spikes")
+      s.read.parquet(s"${drain.sink}/spikes")
         .orderBy(col("event_type"), col("hr"))
     },
     // the batch twin's oracle verbatim — one source of truth, so the
     // two queries can never drift apart silently
     graft.ops.EventsOps.qEventsRateSpike.oracle.get)
 
-  private val stagedSchema4 = StructType(Seq(
-    StructField("ts", TimestampType),
-    StructField("user_id", LongType),
-    StructField("event_id", LongType),
-    StructField("event_type", StringType)))
-
-  /** Stage the events corpus as four time-contiguous parquet files
-    * with strictly increasing modification times, once per (session,
-    * dataset). Shared by [[qStreamTransitions]] (which NEEDS the time
-    * order — per-user sequences must not interleave across batches)
-    * and [[qStreamTotalsV2]] (whose state updates are split-invariant
-    * and merely reuse the staged corpus; each stream reads only its
-    * own column subset — parquet prunes the rest). Returns the
-    * staging directory. */
-  private def timeOrderedStaging(s: org.apache.spark.sql.SparkSession,
-                                 d: String): java.nio.file.Path = {
-    val base = tmpBase("graft_stream_staged_", d)
-    val staging = base.resolve("staging")
-    graft.SessionMemo.oncePerSession(s, s"stream_timeordered_staging:$d") {
-      rmRf(staging)
-      java.nio.file.Files.createDirectories(staging)
-      val ev = Tables.events(s, d)
-        .select(col("ts"), col("user_id"), col("event_id"),
-          col("event_type"), col("value"))
-      val b = ev.agg(min(unix_micros(col("ts"))).as("lo"),
-        max(unix_micros(col("ts"))).as("hi")).head
-      val (lo, hi) = (b.getLong(0), b.getLong(1))
-      val mtime0 = System.currentTimeMillis() - 3600000L
-      (0 until 4).foreach { i =>
-        val from = lo + (hi - lo + 1) * i / 4
-        val until = lo + (hi - lo + 1) * (i + 1) / 4
-        val tmp = base.resolve(s"stage_tmp_$i")
-        ev.filter(unix_micros(col("ts")) >= from &&
-            unix_micros(col("ts")) < until)
-          .coalesce(1)
-          .write.mode("overwrite").parquet(tmp.toString)
-        val stream = java.nio.file.Files.list(tmp)
-        val part = try stream.filter(p =>
-            p.getFileName.toString.endsWith(".parquet"))
-          .findFirst().orElseThrow()
-        finally stream.close()
-        val dest = staging.resolve(s"quarter_$i.parquet")
-        java.nio.file.Files.copy(part, dest,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        // strictly increasing mtimes, minutes apart: the file
-        // source's oldest-first order is then unambiguous
-        java.nio.file.Files.setLastModifiedTime(dest,
-          java.nio.file.attribute.FileTime.fromMillis(mtime0 + i * 60000L))
-        rmRf(tmp)
-      }
-    }
-    staging
-  }
-
-  /** The STATEFUL streaming drain (r11 verdict #8) — the
-    * flatMapGroupsWithState analog of [[qStreamDrain]]'s
-    * algebraic-partials claim: `StreamingDemo.transitionPairs`
-    * carries each user's LAST event as keyed state across micro-batch
-    * boundaries, so the pair straddling two batches comes out of the
-    * STATE STORE, not out of any single batch's data. The emitted
-    * pairs are aggregated through the batch twin's own matrix step
-    * and checked against q_event_transitions' oracle verbatim — the
-    * hash matches iff no cross-batch pair was lost or duplicated.
-    *
-    * Unlike the hourly counts, transition pairs are NOT
-    * split-invariant: they depend on each user's global event ORDER,
-    * so the staged corpus must arrive time-contiguously. Staging
-    * writes four files covering four contiguous ts ranges and stamps
-    * them with strictly increasing modification times — the file
-    * source (latestFirst=false) processes oldest-first, so batch k's
-    * events all precede batch k+1's, and within a batch the processor
-    * sorts its (bounded, per-user-per-batch) buffer. That ordering
-    * discipline is exactly what a production deployment gets from a
-    * time-ordered source (Kafka per-partition order, time-partitioned
-    * landing dirs); the staging step makes it explicit rather than
-    * assuming it. */
+  /** The STATEFUL (flatMapGroupsWithState) drain:
+    * `StreamingDemo.transitionPairs` carries each user's LAST event as
+    * keyed state across micro-batch boundaries, so the pair straddling
+    * two batches comes out of the STATE STORE, not out of any single
+    * batch's data. Transition pairs depend on each user's global event
+    * order, so the quarters arrive oldest first and the processor sorts
+    * its bounded per-user-per-batch buffer. The emitted pairs go
+    * through the batch twin's own matrix step against
+    * q_event_transitions' oracle — the hash matches iff no cross-batch
+    * pair was lost or duplicated. */
   val qStreamTransitions = Q(
     (s, d) => {
-      val base = tmpBase("graft_stream_transitions_", d)
-      val sink = base.resolve("sink").toString
-      val ckpt = base.resolve("ckpt").toString
-      rmRf(base.resolve("ckpt")); rmRf(base.resolve("sink"))
-      val staging = timeOrderedStaging(s, d)
-      val stream = s.readStream.schema(stagedSchema4)
-        .option("maxFilesPerTrigger", "2")
-        .parquet(staging.toString)
-      runDrain(s, "q_stream_transitions") {
-        StreamingDemo.transitionPairs(s, stream)
-          .writeStream
-          .foreachBatch {
-            (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-             batchId: Long) =>
-              batch.write.mode("overwrite")
-                .parquet(s"$sink/pairs/batch_id=$batchId")
-          }
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      val pairs = s.read.parquet(s"$sink/pairs")
-      val nBatches = pairs.select(countDistinct(col("batch_id"))).head.getLong(0)
-      if (nBatches < 2) throw new IllegalStateException(
-        s"q_stream_transitions: drain ran as $nBatches micro-batch(es) — " +
-          "the graded cross-batch-state claim needs >= 2; check the " +
-          "staged file count vs maxFilesPerTrigger")
-      // the batch twin's OWN matrix step over the state-store-emitted
-      // pairs — one code path, so the two can never drift silently
+      val drain = new Drain(s, "q_stream_transitions", d)
+      val pairs = drain.ledger(StreamingDemo.transitionPairs(s, staged(s,
+        eventsStaging(s, d), 2, quarters, "ts", "user_id", "event_id", "event_type")))
+      drain.claims(pairs)
       graft.ops.EventsOps.transitionsFromPairs(
         pairs.select(col("from_type"), col("to_type")))
     },
-    // the batch twin's oracle verbatim — same single-source-of-truth
-    // contract as q_stream_drain
     graft.ops.EventsOps.qEventTransitions.oracle.get)
 
-  private val stagedSchemaTotals = StructType(Seq(
-    StructField("ts", TimestampType),
-    StructField("user_id", LongType),
-    StructField("event_id", LongType),
-    StructField("value", DoubleType)))
-
   /** The v2 arbitrary-stateful-processing drain — `transformWithState`
-    * with NAMED state variables on the RocksDB provider, under the
-    * hash gate. [[StreamingDemo.DeterministicTotalsProcessor]] keeps a
-    * running-totals ValueState (exact integer micro-units) and a
-    * recent-3 ListState (set-merge of the newest (ts, id) events) per
-    * user; both update rules are order- and split-invariant, so the
-    * drained snapshots are deterministic under any micro-batch
-    * partition of the input and the oracle can recompute them from
-    * the events table directly. The sink keeps every per-batch
-    * snapshot in a batch-id-partitioned ledger; the result takes each
-    * user's LATEST snapshot — which therefore reflects state carried
-    * across the (asserted, >= 2) micro-batches, the cross-batch claim
-    * this query grades. RocksDB is required by the engine for v2
-    * state and is the production store once state outgrows executor
-    * heap; the conf is set for the drain and restored after. */
+    * with NAMED state variables on the RocksDB provider (the engine
+    * requires it for v2 state; the production store once state
+    * outgrows executor heap). [[StreamingDemo.DeterministicTotalsProcessor]]
+    * keeps a running-totals ValueState (exact integer micro-units) and
+    * a recent-3 ListState (set-merge of the newest (ts, id) events)
+    * per user; both update rules are order- and split-invariant, so
+    * the oracle recomputes them from the events table. The ledger
+    * keeps every per-batch snapshot (update mode); the result takes
+    * each user's LATEST, which reflects state carried across the
+    * micro-batches. */
   val qStreamTotalsV2 = Q(
     (s, d) => {
-      val base = tmpBase("graft_stream_totals_", d)
-      val sink = base.resolve("sink").toString
-      val ckpt = base.resolve("ckpt").toString
-      rmRf(base.resolve("ckpt")); rmRf(base.resolve("sink"))
-      val staging = timeOrderedStaging(s, d)
-      val stream = s.readStream.schema(stagedSchemaTotals)
-        .option("maxFilesPerTrigger", "2")
-        .parquet(staging.toString)
-      runDrain(s, "q_stream_totals_v2",
+      val drain = new Drain(s, "q_stream_totals_v2", d,
         "spark.sql.streaming.stateStore.providerClass" ->
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
-        StreamingDemo.runningTotalsV2Graded(s, stream)
-          .writeStream
-          .foreachBatch {
-            (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-             batchId: Long) =>
-              batch.write.mode("overwrite")
-                .parquet(s"$sink/snapshots/batch_id=$batchId")
-          }
-          .outputMode("update")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      val snaps = s.read.parquet(s"$sink/snapshots")
-      val nBatches = snaps.select(countDistinct(col("batch_id"))).head.getLong(0)
-      if (nBatches < 2) throw new IllegalStateException(
-        s"q_stream_totals_v2: drain ran as $nBatches micro-batch(es) — " +
-          "the graded cross-batch-state claim needs >= 2; check the " +
-          "staged file count vs maxFilesPerTrigger")
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      val snaps = drain.ledger(StreamingDemo.runningTotalsV2Graded(s, staged(s,
+        eventsStaging(s, d), 2, quarters, "ts", "user_id", "event_id", "value")),
+        "update")
+      drain.claims(snaps)
       // each user's LATEST snapshot: the per-user window is bounded by
       // the micro-batch count, never the corpus
       val w = org.apache.spark.sql.expressions.Window
@@ -453,122 +398,27 @@ object StreamQueries {
              FROM events) t
        GROUP BY user_id ORDER BY user_id""")
 
-  private val stagedSchemaWindowed = StructType(Seq(
-    StructField("ts", TimestampType),
-    StructField("event_type", StringType),
-    StructField("value", DoubleType)))
-
-  /** Staging for [[qStreamWindowed]]: the four time-contiguous
-    * quarters (copied from [[timeOrderedStaging]] — same bytes, fresh
-    * mtimes) plus a single far-future SENTINEL file stamped last.
-    * The sentinel is what makes append-mode emission deterministic:
-    * once the sentinel batch's watermark (sentinel ts − delay) is
-    * committed, every REAL window's end is below it, so the engine's
-    * final no-data micro-batch — the eviction pass AvailableNow runs
-    * after the last data batch — closes and emits ALL real windows.
-    * Without it, windows inside the last `delay` of the corpus would
-    * stay open forever and the graded result would depend on where
-    * the corpus happens to end. The sentinel's own window never
-    * closes (nothing arrives after it), and is filtered defensively
-    * anyway. */
-  private def windowedStaging(s: org.apache.spark.sql.SparkSession,
-                              d: String): java.nio.file.Path = {
-    val base = tmpBase("graft_stream_windowed_", d)
-    val staging = base.resolve("staging")
-    graft.SessionMemo.oncePerSession(s, s"stream_windowed_staging:$d") {
-      val src = timeOrderedStaging(s, d)
-      rmRf(staging)
-      java.nio.file.Files.createDirectories(staging)
-      val mtime0 = System.currentTimeMillis() - 3600000L
-      (0 until 4).foreach { i =>
-        val dest = staging.resolve(s"quarter_$i.parquet")
-        java.nio.file.Files.copy(src.resolve(s"quarter_$i.parquet"), dest,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        java.nio.file.Files.setLastModifiedTime(dest,
-          java.nio.file.attribute.FileTime.fromMillis(mtime0 + i * 60000L))
-      }
-      val hi = Tables.events(s, d)
-        .agg(max(unix_micros(col("ts"))).as("hi")).head.getLong(0)
-      val tmp = base.resolve("stage_tmp_sentinel")
-      s.range(1).select(
-        timestamp_micros(lit(hi + 86400000000L)).as("ts"),
-        lit(-1L).as("user_id"), lit(-1L).as("event_id"),
-        lit("zzz_sentinel").as("event_type"), lit(0.0).as("value"))
-        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val stream = java.nio.file.Files.list(tmp)
-      val part = try stream.filter(p =>
-          p.getFileName.toString.endsWith(".parquet"))
-        .findFirst().orElseThrow()
-      finally stream.close()
-      val dest = staging.resolve("sentinel_4.parquet")
-      java.nio.file.Files.copy(part, dest,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      java.nio.file.Files.setLastModifiedTime(dest,
-        java.nio.file.attribute.FileTime.fromMillis(mtime0 + 4 * 60000L))
-      rmRf(tmp)
-    }
-    staging
-  }
-
-  /** The WATERMARK-APPEND drain — the fourth and last canonical
-    * streaming shape (stateless partials, flatMapGroupsWithState and
-    * transformWithState are the other three): a tumbling-window
-    * aggregation under a real watermark in APPEND output mode, where
-    * the ENGINE decides when a window is final — a window row is
-    * emitted exactly once, only after the committed watermark passes
-    * its end, out of the state store. The graded claims: no window is
-    * emitted twice (append-mode finality), no late/duplicate merge is
-    * lost (windows straddling a quarter boundary take rows from two
-    * micro-batches before closing), and watermark-driven eviction
-    * emits every real window given the sentinel (see
-    * [[windowedStaging]]). The oracle recomputes the same epoch-
-    * aligned buckets from the events table; the hash matches iff the
-    * engine's incremental, state-store-merged, watermark-closed
-    * windows equal the one-pass batch aggregation. Counts and
-    * micro-unit sums are integers, so partial merges commute across
-    * any batch split. */
+  /** The WATERMARK-APPEND drain: a tumbling-window aggregation under a
+    * real watermark in APPEND mode, where the ENGINE decides when a
+    * window is final — a window row is emitted exactly once, only after
+    * the committed watermark passes its end, out of the state store.
+    * Windows straddling a quarter boundary merge rows from two
+    * micro-batches before closing, and the sentinel lets eviction emit
+    * every real window. The oracle recomputes the same epoch-aligned
+    * buckets; the hash matches iff the incremental, watermark-closed
+    * windows equal the one-pass batch aggregation.
+    *
+    * 3 files per trigger over the 5 slices → batches {q0,q1,q2},
+    * {q3,sentinel} and the final no-data flush (every micro-batch pays
+    * a fixed checkpoint commit, so no more are run): batch 1 closes the
+    * windows batch 0's watermark passed, the flush closes the rest, so
+    * emissions still spread over >= 2 batches. */
   val qStreamWindowed = Q(
     (s, d) => {
-      val base = tmpBase("graft_stream_windowed_", d)
-      val sink = base.resolve("sink").toString
-      val ckpt = base.resolve("ckpt").toString
-      rmRf(base.resolve("ckpt")); rmRf(base.resolve("sink"))
-      val staging = windowedStaging(s, d)
-      // 3 files per trigger over the 5 staged files → batches
-      // {q0,q1,q2}, {q3,sentinel}, final no-data flush — one
-      // micro-batch fewer than a 2/2/1 split (each batch pays a fixed
-      // checkpoint commit, see runDrain), with the graded claims
-      // intact: windows straddling the q2|q3 boundary still
-      // merge rows from two micro-batches, and emissions still spread
-      // over ≥ 2 batches (batch 1 closes the windows the batch-0
-      // watermark passed; the final no-data batch flushes the rest
-      // under the sentinel's watermark).
-      val stream = s.readStream.schema(stagedSchemaWindowed)
-        .option("maxFilesPerTrigger", "3")
-        .parquet(staging.toString)
-      runDrain(s, "q_stream_windowed") {
-        StreamingDemo.windowedCountsGraded(stream)
-          .writeStream
-          .outputMode("append")
-          .foreachBatch {
-            (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-             batchId: Long) =>
-              batch.write.mode("overwrite")
-                .parquet(s"$sink/closed/batch_id=$batchId")
-          }
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      val closed = s.read.parquet(s"$sink/closed")
-      // windows must have closed INCREMENTALLY — emissions spread over
-      // >= 2 micro-batches, or the watermark machinery degenerated to
-      // a single flush and the incremental-finality claim is untested
-      val nBatches = closed.select(countDistinct(col("batch_id"))).head.getLong(0)
-      if (nBatches < 2) throw new IllegalStateException(
-        s"q_stream_windowed: windows closed in $nBatches micro-batch(es) " +
-          "— the graded incremental-watermark claim needs >= 2; check " +
-          "the staged file count vs maxFilesPerTrigger")
+      val drain = new Drain(s, "q_stream_windowed", d)
+      val closed = drain.ledger(StreamingDemo.windowedCountsGraded(staged(s,
+        eventsStaging(s, d), 3, allSlices, "ts", "event_type", "value")))
+      drain.claims(closed)
       closed.filter(col("event_type") =!= "zzz_sentinel")
         .select(col("bucket_start"), col("event_type"), col("n"),
           col("total_micros"))
@@ -579,196 +429,83 @@ object StreamQueries {
        CAST(SUM(CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT)) AS BIGINT) AS total_micros
        FROM events GROUP BY 1, 2 ORDER BY bucket_start, event_type""")
 
-  private val stagedSchemaSessions = StructType(Seq(
-    StructField("ts", TimestampType),
-    StructField("user_id", LongType),
-    StructField("value", DoubleType)))
-
-  /** The SESSION-WINDOW drain — the merging-state shape: unlike
-    * tumbling windows (fixed bounds, state rows merge partials into a
-    * known bucket), session windows have DATA-DEFINED bounds, and the
-    * state store must merge overlapping in-flight sessions — a
-    * session straddling a quarter boundary is two state entries until
-    * the engine's session-merge pass fuses them. Append mode emits a
-    * session exactly once, after the watermark passes its (merged)
-    * end. The staged corpus and sentinel are [[windowedStaging]]'s
-    * (shared memo — the sentinel's far-future record advances the
-    * watermark past every real session's end; its own pseudo-user −1
-    * session never closes and is filtered defensively). The oracle is
-    * the batch twin q_events_session's gaps-and-islands SQL verbatim,
-    * so the hash matches iff cross-batch session merging loses or
-    * double-counts nothing; counts are integers and the value sum is
-    * the twin's decimal cast, whose partials commute across any batch
-    * split. */
+  /** The SESSION-WINDOW drain — the merging-state shape: session
+    * windows have DATA-DEFINED bounds, so a session straddling a
+    * quarter boundary is two state entries until the engine's
+    * session-merge pass fuses them, and append mode emits it once,
+    * after the watermark passes its merged end. Same slices and 3/2
+    * trigger split as [[qStreamWindowed]]. The oracle is the batch twin
+    * q_events_session's gaps-and-islands SQL, so the hash matches iff
+    * cross-batch session merging loses or double-counts nothing. */
   val qStreamSessions = Q(
     (s, d) => {
-      val base = tmpBase("graft_stream_sessions_", d)
-      val sink = base.resolve("sink").toString
-      val ckpt = base.resolve("ckpt").toString
-      rmRf(base.resolve("ckpt")); rmRf(base.resolve("sink"))
-      val staging = windowedStaging(s, d)
-      // same 3/2 trigger split as qStreamWindowed (one fewer
-      // micro-batch); sessions straddling the q2|q3 boundary still
-      // merge state across two micro-batches, and session emissions
-      // still spread over ≥ 2 batches.
-      val stream = s.readStream.schema(stagedSchemaSessions)
-        .option("maxFilesPerTrigger", "3")
-        .parquet(staging.toString)
-      runDrain(s, "q_stream_sessions") {
-        StreamingDemo.sessionCountsGraded(stream)
-          .writeStream
-          .outputMode("append")
-          .foreachBatch {
-            (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-             batchId: Long) =>
-              batch.write.mode("overwrite")
-                .parquet(s"$sink/closed/batch_id=$batchId")
-          }
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      val closed = s.read.parquet(s"$sink/closed")
-      val nBatches = closed.select(countDistinct(col("batch_id"))).head.getLong(0)
-      if (nBatches < 2) throw new IllegalStateException(
-        s"q_stream_sessions: sessions closed in $nBatches micro-batch(es) " +
-          "— the graded merging-state claim needs >= 2; check the " +
-          "staged file count vs maxFilesPerTrigger")
+      val drain = new Drain(s, "q_stream_sessions", d)
+      val closed = drain.ledger(StreamingDemo.sessionCountsGraded(staged(s,
+        eventsStaging(s, d), 3, allSlices, "ts", "user_id", "value")))
+      drain.claims(closed)
       closed.filter(col("user_id") >= 0L) // drop the sentinel pseudo-user
         .select(col("user_id"), col("session_start"), col("session_end"),
           col("n_events"), col("session_value"))
         .orderBy(col("user_id"), col("session_start"))
     },
-    // the batch twin's oracle verbatim — same single-source-of-truth
-    // contract as the other drains
     graft.ops.EventsOps.qEventsSession.oracle.get)
 
-  private val stagedSchemaDedup = StructType(Seq(
-    StructField("ts", TimestampType),
-    StructField("user_id", LongType),
-    StructField("event_id", LongType),
-    StructField("event_type", StringType)))
-
-  /** Staging for [[qStreamDedup]]: file 0 carries exactly the per-key
-    * FIRST events (min (ts, event_id) per (user_id, event_type)),
-    * files 1–2 carry every duplicate, stamped later. Two reasons this
-    * shape, stated openly: (1) determinism — within a micro-batch,
-    * which duplicate `dropDuplicates` keeps is arrival-order
-    * (partition-)dependent, so a graded hash needs each key's first
-    * batch-1 occurrence to BE its corpus-wide first; (2) strength —
-    * with every survivor in batch 0 and every duplicate behind a
-    * batch boundary, 100% of the suppression is cross-batch, i.e.
-    * entirely the state store's doing. */
-  private def dedupStaging(s: org.apache.spark.sql.SparkSession,
-                           d: String): java.nio.file.Path = {
-    val base = tmpBase("graft_stream_dedup_", d)
-    val staging = base.resolve("staging")
-    graft.SessionMemo.oncePerSession(s, s"stream_dedup_staging:$d") {
-      rmRf(staging)
-      java.nio.file.Files.createDirectories(staging)
+  /** Slice 0 carries exactly the per-key FIRST events (min (ts,
+    * event_id) per (user_id, event_type)), slices 1–2 every duplicate.
+    * Within a micro-batch, which duplicate `dropDuplicates` keeps
+    * depends on arrival order, so a graded hash needs each key's
+    * batch-0 occurrence to BE its corpus-wide first; and with every
+    * duplicate behind a batch boundary, all of the suppression is the
+    * state store's doing. Two duplicate slices, not more: every
+    * micro-batch pays a fixed checkpoint commit. */
+  private def dedupStaging(s: SparkSession, d: String): String =
+    stageFiles(s, s"stream_dedup_staging:$d", stagingDir("dedup", d), {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("user_id"), col("event_type"))
         .orderBy(col("ts").asc, col("event_id").asc)
       val ranked = Tables.events(s, d)
         .select(col("ts"), col("user_id"), col("event_id"), col("event_type"))
         .withColumn("rn", row_number().over(w))
-      val mtime0 = System.currentTimeMillis() - 3600000L
-      // 2 duplicate slices, not more: every micro-batch pays a fixed
-      // checkpoint commit whatever its rows (see runDrain).
-      // The claim stays total: batch 0 still carries exactly the
-      // per-key first events, and EVERY duplicate still sits behind a
-      // batch boundary, re-presented to the state store across two
-      // later batches.
-      val slices = Seq[org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame](
-        df => df.filter(col("rn") === 1),
-        df => df.filter(col("rn") > 1 && pmod(col("rn"), lit(2)) === 0),
-        df => df.filter(col("rn") > 1 && pmod(col("rn"), lit(2)) === 1))
-      slices.zipWithIndex.foreach { case (slice, i) =>
-        val tmp = base.resolve(s"stage_tmp_$i")
-        slice(ranked).drop("rn")
-          .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val stream = java.nio.file.Files.list(tmp)
-        val part = try stream.filter(p =>
-            p.getFileName.toString.endsWith(".parquet"))
-          .findFirst().orElseThrow()
-        finally stream.close()
-        val dest = staging.resolve(s"slice_$i.parquet")
-        java.nio.file.Files.copy(part, dest,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        java.nio.file.Files.setLastModifiedTime(dest,
-          java.nio.file.attribute.FileTime.fromMillis(mtime0 + i * 60000L))
-        rmRf(tmp)
-      }
-    }
-    staging
-  }
+      Seq(col("rn") === 1,
+        col("rn") > 1 && pmod(col("rn"), lit(2)) === 0,
+        col("rn") > 1 && pmod(col("rn"), lit(2)) === 1)
+        .map(p => ranked.filter(p).drop("rn"))
+    })
 
-  /** The DEDUP-STATE drain — `dropDuplicatesWithinWatermark` under
-    * the hash gate: the state store remembers every key it has passed
-    * and suppresses later arrivals, across micro-batch boundaries.
-    * With [[dedupStaging]]'s layout the claim is total: batch 0 emits
-    * one survivor per (user_id, event_type) — its corpus-wide first
-    * event — and batches 1–2 re-present every duplicate to the store,
-    * which must emit NOTHING (asserted). The watermark delay exceeds
-    * the corpus span, so no key's state evicts mid-drain (the delay
-    * is the production knob bounding state size vs how long a
-    * duplicate can arrive). The oracle recomputes first-seen per key
-    * from the events table; the hash matches iff no key was lost,
-    * duplicated, or re-emitted. */
+  /** The DEDUP-STATE drain — `dropDuplicatesWithinWatermark`: the state
+    * store remembers every key it has passed and suppresses later
+    * arrivals across micro-batch boundaries. With [[dedupStaging]] the
+    * claim is total: batch 0 emits one survivor per (user_id,
+    * event_type), batches 1–2 re-present every duplicate, and the store
+    * must emit NOTHING for them (asserted). The watermark delay exceeds
+    * the corpus span, so no key's state evicts mid-drain (in production
+    * the delay bounds state size against how late a duplicate may
+    * arrive). The oracle recomputes first-seen per key. */
   val qStreamDedup = Q(
     (s, d) => {
-      val base = tmpBase("graft_stream_dedup_", d)
-      val sink = base.resolve("sink").toString
-      val ckpt = base.resolve("ckpt").toString
-      rmRf(base.resolve("ckpt")); rmRf(base.resolve("sink"))
-      val staging = dedupStaging(s, d)
-      val stream = s.readStream.schema(stagedSchemaDedup)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staging.toString)
-      runDrain(s, "q_stream_dedup") {
-        StreamingDemo
-          .dedupFirstPerKey(stream, "400 days", "user_id", "event_type")
-          .writeStream
-          .foreachBatch {
-            (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-             batchId: Long) =>
-              batch.write.mode("overwrite")
-                .parquet(s"$sink/kept/batch_id=$batchId")
-          }
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      // every processed batch leaves a ledger dir (foreachBatch runs
-      // for empty batches too) — the duplicate batches must have RUN...
-      val dirStream = java.nio.file.Files.list(
-        java.nio.file.Paths.get(sink, "kept"))
-      val nBatchDirs = try dirStream.filter(p =>
-          p.getFileName.toString.startsWith("batch_id=")).count()
-      finally dirStream.close()
-      if (nBatchDirs < 3) throw new IllegalStateException(
-        s"q_stream_dedup: only $nBatchDirs micro-batches ran — the " +
-          "3-slice staging should yield 3; check maxFilesPerTrigger")
-      val kept = s.read.parquet(s"$sink/kept")
-      // ...and emitted nothing: 100% of the duplicate volume is
-      // suppressed by state carried across batch boundaries. One
-      // per-batch count job instead of the old min + filtered-count
-      // pair (r19); the collect is bounded by the micro-batch count
-      // (= staged file count, 3), never the corpus.
+      val drain = new Drain(s, "q_stream_dedup", d)
+      val kept = drain.ledger(StreamingDemo.dedupFirstPerKey(staged(s,
+        dedupStaging(s, d), 1, allSlices, "ts", "user_id", "event_id", "event_type"),
+        "400 days", "user_id", "event_type"))
+      // the duplicate batches must have RUN (each leaves a ledger
+      // dir, empty or not)...
+      val dirs = Files.list(Paths.get(drain.sink))
+      val nBatchDirs = try dirs.filter(
+        _.getFileName.toString.startsWith("batch_id=")).count()
+      finally dirs.close()
+      drain.check(nBatchDirs >= 3, s"only $nBatchDirs micro-batches ran — " +
+        "the 3-slice staging should yield 3; check maxFilesPerTrigger")
+      // ...and emitted nothing. One per-batch count job; the collect is
+      // bounded by the micro-batch count, never the corpus.
       val perBatch = kept.groupBy(col("batch_id").cast("long").as("b"))
         .agg(count(lit(1)).as("n")).collect()
-      // named diagnostic instead of a bare empty.min (r19 ADVICE): a
-      // kept sink with no survivors means batch 0 emitted nothing —
-      // the staging degenerated, and the error should say so
-      if (perBatch.isEmpty) throw new IllegalStateException(
-        "q_stream_dedup: the kept sink is empty — batch 0 emitted no " +
-          "survivors; the first-events staging slice degenerated")
+      drain.check(perBatch.nonEmpty, "the kept sink is empty — batch 0 " +
+        "emitted no survivors; the first-events staging slice degenerated")
       val firstBatch = perBatch.map(_.getLong(0)).min
       val leaked = perBatch.collect {
         case r if r.getLong(0) > firstBatch => r.getLong(1) }.sum
-      if (leaked > 0) throw new IllegalStateException(
-        s"q_stream_dedup: $leaked duplicate(s) escaped the dedup state " +
-          "in later micro-batches")
+      drain.check(leaked == 0,
+        s"$leaked duplicate(s) escaped the dedup state in later micro-batches")
       kept.select(col("user_id"), col("event_type"),
           col("ts").cast("long").as("first_seen"))
         .orderBy(col("user_id"), col("event_type"))
@@ -778,158 +515,73 @@ object StreamQueries {
        FROM events GROUP BY user_id, event_type
        ORDER BY user_id, event_type""")
 
-  /** Staging for [[qStreamJoin]]: ALL view rows in one file stamped
-    * FIRST, the click rows as two time-halves stamped AFTER — so the
-    * drain ingests every view before the first click, and every
-    * joined pair must match a view held in BUFFERED STATE from an
-    * earlier micro-batch (the total form of the both-sides claim,
-    * same convention as [[dedupStaging]]). Holding the click side
-    * back does not evict or drop anything: the engine's global
-    * watermark is the MINIMUM across sources, and the click source's
-    * watermark stays unset until its files flow, so view state
-    * outlives the wait by construction.
-    *
-    * Four files, not six: a micro-batch costs the same fixed
-    * checkpoint work whatever its rows (a 1-row sentinel batch as much
-    * as a 10k-row data batch — offset and commit log entries plus a
-    * delta and checksum per state store, see runDrain), so the view
-    * side is one file and the two per-side sentinels share one
-    * COMBINED file (each source filters its own event_type, so one
-    * physical file feeds both sides). That is 5 batches per drain
-    * instead of 7 with every graded claim intact: views still occupy
-    * their own first batch, clicks still arrive across TWO later
-    * batches (pairs emit in ≥ 2 batches), and the sentinel batch
-    * still advances both watermarks for the outer variant's
-    * final-flush. */
-  private def joinStaging(s: org.apache.spark.sql.SparkSession,
-                          d: String): java.nio.file.Path = {
-    val base = tmpBase("graft_stream_join_", d)
-    val staging = base.resolve("staging")
-    graft.SessionMemo.oncePerSession(s, s"stream_join_staging:$d") {
-      rmRf(staging)
-      java.nio.file.Files.createDirectories(staging)
+  /** Slice 0: every view; slices 1–2: the clicks as two time halves;
+    * slice 3: one far-future sentinel per side. Every view is ingested
+    * before the first click, so every joined pair must match a view
+    * held in BUFFERED STATE from an earlier micro-batch. Holding the
+    * clicks back evicts nothing: the global watermark is the MINIMUM
+    * across sources, and the click side's stays unset until its files
+    * flow. The sentinels serve the outer drain: only when BOTH sides'
+    * watermarks pass every real view's window end may the engine emit
+    * the unmatched views, which the final no-data batch then does. One
+    * file carries both, because each source filters its own
+    * event_type; the inner join never matches their negative
+    * pseudo-users. */
+  private def joinStaging(s: SparkSession, d: String): String =
+    stageFiles(s, s"stream_join_staging:$d", stagingDir("join", d), {
       val ev = Tables.events(s, d)
         .select(col("ts"), col("user_id"), col("event_id"), col("event_type"))
         .filter(col("event_type").isin("view", "click"))
-      val b = ev.agg(min(unix_micros(col("ts"))).as("lo"),
-        max(unix_micros(col("ts"))).as("hi")).head
+      val us = unix_micros(col("ts"))
+      val b = ev.agg(min(us), max(us)).head
       val (lo, hi) = (b.getLong(0), b.getLong(1))
       val mid = lo + (hi - lo + 1) / 2
-      val mtime0 = System.currentTimeMillis() - 3600000L
-      // slice 3: the far-future sentinels for BOTH sides in one file,
-      // stamped last. The inner join ignores them (negative
-      // pseudo-users never match, and an unmatched row needs the
-      // outer variant to emit); the OUTER drain needs both, because
-      // the global watermark is the min across sources — only when
-      // BOTH sides' watermarks pass every real view's window end may
-      // the engine emit the unmatched views, and the final no-data
-      // batch then flushes them deterministically. One physical file
-      // serves both sides because each source filters its own
-      // event_type from the shared staging dir.
       def sentinel(tpe: String, uid: Long) = s.range(1).select(
         timestamp_micros(lit(hi + 2592000000000L)).as("ts"),
         lit(uid).as("user_id"), lit(uid).as("event_id"),
         lit(tpe).as("event_type"))
-      val slices = Seq[org.apache.spark.sql.DataFrame](
-        ev.filter(col("event_type") === "view"),
-        ev.filter(col("event_type") === "click" &&
-          unix_micros(col("ts")) < mid),
-        ev.filter(col("event_type") === "click" &&
-          unix_micros(col("ts")) >= mid),
+      val click = col("event_type") === "click"
+      Seq(ev.filter(col("event_type") === "view"),
+        ev.filter(click && us < mid), ev.filter(click && us >= mid),
         sentinel("view", -2L).unionAll(sentinel("click", -1L)))
-      slices.zipWithIndex.foreach { case (slice, i) =>
-        val tmp = base.resolve(s"stage_tmp_$i")
-        slice.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val stream = java.nio.file.Files.list(tmp)
-        val part = try stream.filter(p =>
-            p.getFileName.toString.endsWith(".parquet"))
-          .findFirst().orElseThrow()
-        finally stream.close()
-        val dest = staging.resolve(s"slice_$i.parquet")
-        java.nio.file.Files.copy(part, dest,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        java.nio.file.Files.setLastModifiedTime(dest,
-          java.nio.file.attribute.FileTime.fromMillis(mtime0 + i * 60000L))
-        rmRf(tmp)
-      }
-    }
-    staging
-  }
+    })
 
-  /** The STREAM-STREAM JOIN drain — the shape where the state store
-    * buffers BOTH sides: an inner interval join (click within one day
-    * after the same user's view) over two file streams. With
-    * [[joinStaging]]'s layout the claim is total: both sources read
-    * the same file sequence (each filtering its own side), all view
-    * files precede all click files, so EVERY joined pair matches a
-    * view out of state buffered in an earlier micro-batch — none can
-    * form within one batch. Inner matches emit in the batch where the
-    * click arrives, so no sentinel is needed; at steady state the
-    * watermark + interval bound is what lets the engine evict view
-    * state once no matching click can still arrive (state is a
-    * window's worth per side, never the corpus — the 100 TB
-    * posture). The oracle recomputes the pairs with a plain interval
-    * self-join; the hash matches iff no cross-batch pair was lost,
-    * duplicated, or mis-joined. */
+  /** One side of a join drain: every staged file in order, one per
+    * trigger, filtered to `eventType`. */
+  private def joinSide(s: SparkSession, staging: String, files: String,
+                       eventType: String): DataFrame =
+    staged(s, staging, 1, files, "ts", "user_id", "event_id", "event_type")
+      .filter(col("event_type") === eventType)
+
+  /** The STREAM-STREAM JOIN drain — the state store buffers BOTH sides:
+    * an inner interval join (click within one day after the same
+    * user's view). With [[joinStaging]] the claim is total: every
+    * joined pair matches a view out of state buffered in an earlier
+    * micro-batch, so batch 0 emits nothing (asserted). At steady state
+    * the watermark plus the interval bound lets the engine evict view
+    * state once no matching click can still arrive — a window's worth
+    * per side, never the corpus. The oracle is a plain interval
+    * self-join.
+    *
+    * The inner join needs neither the sentinel slice nor the trailing
+    * no-data eviction batch (eviction emits nothing for an inner join,
+    * and a terminating drain discards its checkpoint; a LIVE
+    * deployment keeps no-data batches on, where eviction bounds state
+    * size), so it reads slices 0–2 with no-data batches off: 3
+    * micro-batches, views alone in batch 0, clicks across two later
+    * batches. */
   val qStreamJoin = Q(
     (s, d) => {
-      val base = tmpBase("graft_stream_join_", d)
-      val sink = base.resolve("sink").toString
-      val ckpt = base.resolve("ckpt").toString
-      rmRf(base.resolve("ckpt")); rmRf(base.resolve("sink"))
+      val drain = new Drain(s, "q_stream_join", d,
+        "spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
       val staging = joinStaging(s, d)
-      // Every micro-batch pays a fixed checkpoint commit (see
-      // runDrain), so batches that emit nothing are pure overhead.
-      // The INNER join needs neither the sentinel file (it exists to
-      // advance both watermarks for the OUTER variant's null-flush;
-      // inner matches emit in the batch where the click arrives) nor
-      // the trailing no-data eviction batch (state eviction emits
-      // nothing for an inner join, and a terminating AvailableNow
-      // drain discards its checkpoint anyway — a LIVE deployment keeps
-      // no-data batches on, where eviction timeliness bounds state
-      // size). Excluding the shared staging's sentinel via
-      // pathGlobFilter and skipping the no-data batch drops the drain
-      // 5 -> 3 micro-batches with the graded claims intact: views
-      // still occupy batch 0 alone, clicks still arrive across TWO
-      // later batches, every pair still matches a view out of
-      // cross-batch buffered state.
-      def side(types: String) = s.readStream.schema(stagedSchemaDedup)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "slice_[012].parquet")
-        .parquet(staging.toString)
-        .filter(col("event_type") === types)
-      runDrain(s, "q_stream_join",
-          "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") {
-        StreamingDemo
-          .viewClickAttribution(side("view"), side("click"))
-          .writeStream
-          .foreachBatch {
-            (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-             batchId: Long) =>
-              batch.write.mode("overwrite")
-                .parquet(s"$sink/pairs/batch_id=$batchId")
-          }
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      val pairs = s.read.parquet(s"$sink/pairs")
-      // both assertions in ONE aggregation job (r19: they were two
-      // sequential jobs per graded sample; the second scanned the
-      // same few-KB sink again just to count early rows)
-      val chk = pairs.agg(countDistinct(col("batch_id")),
-        coalesce(sum(when(col("batch_id") < 1, 1L)), lit(0L))).head
-      val nBatches = chk.getLong(0)
-      if (nBatches < 2) throw new IllegalStateException(
-        s"q_stream_join: pairs emitted in $nBatches micro-batch(es) — " +
-          "the graded both-sides-buffered claim needs >= 2; check the " +
-          "staged file count vs maxFilesPerTrigger")
-      // totality: the view batch (0) must emit NOTHING — every
-      // pair matches out of state buffered in an earlier batch
-      val early = chk.getLong(1)
-      if (early > 0) throw new IllegalStateException(
-        s"q_stream_join: $early pair(s) emitted before any click file " +
-          "was staged — the staging's view/click ordering degenerated")
+      val pairs = drain.ledger(StreamingDemo.viewClickAttribution(
+        joinSide(s, staging, "slice_[012].parquet", "view"),
+        joinSide(s, staging, "slice_[012].parquet", "click")))
+      val early = drain.claims(pairs,
+        coalesce(sum(when(col("batch_id") < 1, 1L)), lit(0L))).getLong(1)
+      drain.check(early == 0, s"$early pair(s) emitted before any click " +
+        "file was staged — the staging's view/click ordering degenerated")
       pairs.select(col("user_id"), col("ad_id"), col("click_id"),
           col("imp_us"), col("click_us"))
         .orderBy(col("user_id"), col("ad_id"), col("click_id"))
@@ -941,62 +593,29 @@ object StreamQueries {
        WHERE v.event_type = 'view' AND c.event_type = 'click'
        ORDER BY v.user_id, ad_id, click_id""")
 
-  /** The LEFT-OUTER stream-stream join drain — the watermark-gated
-    * NULL EMISSION semantic: a view with no in-window click may only
-    * emit (with null click columns) once the state store can PROVE no
-    * matching click will still arrive, i.e. once the global watermark
-    * — the minimum across both sources — passes the view's window
-    * end. [[joinStaging]]'s per-side far-future sentinels advance both
-    * watermarks past every real view's window, so the engine's final
-    * no-data batch flushes every unmatched view deterministically;
-    * matched pairs emit earlier, in the batch where the click arrives.
-    * Null click columns are coalesced to −1 on both engines (exact on
-    * integers), and the sentinels' negative pseudo-users are filtered.
-    * The oracle is the batch LEFT JOIN; the hash matches iff the
-    * engine emitted every unmatched view exactly once, none early,
-    * and no matched view leaked a spurious null row. */
+  /** The LEFT-OUTER stream-stream join drain — watermark-gated NULL
+    * EMISSION: a view with no in-window click may only emit (null click
+    * columns) once the global watermark, the minimum across both
+    * sources, passes the view's window end. [[joinStaging]]'s sentinels
+    * advance both watermarks past every real view's window, so the
+    * final no-data batch flushes every unmatched view; matched pairs
+    * emit earlier, in their click's batch, so rows land in >= 2
+    * batches, and >= 1 null emission is asserted. Null click columns
+    * are coalesced to −1 on both engines. The oracle is the batch LEFT
+    * JOIN: the hash matches iff every unmatched view emitted exactly
+    * once, none early, and no matched view leaked a null row. */
   val qStreamJoinOuter = Q(
     (s, d) => {
-      val base = tmpBase("graft_stream_join_outer_", d)
-      val sink = base.resolve("sink").toString
-      val ckpt = base.resolve("ckpt").toString
-      rmRf(base.resolve("ckpt")); rmRf(base.resolve("sink"))
+      val drain = new Drain(s, "q_stream_join_outer", d)
       val staging = joinStaging(s, d)
-      def side(types: String) = s.readStream.schema(stagedSchemaDedup)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staging.toString)
-        .filter(col("event_type") === types)
-      runDrain(s, "q_stream_join_outer") {
-        StreamingDemo
-          .viewClickAttributionOuter(side("view"), side("click"))
-          .writeStream
-          .foreachBatch {
-            (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-             batchId: Long) =>
-              batch.write.mode("overwrite")
-                .parquet(s"$sink/pairs/batch_id=$batchId")
-          }
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      val pairs = s.read.parquet(s"$sink/pairs")
+      val pairs = drain.ledger(StreamingDemo.viewClickAttributionOuter(
+        joinSide(s, staging, allSlices, "view"),
+        joinSide(s, staging, allSlices, "click")))
         .filter(col("user_id") >= 0L) // drop the sentinel pseudo-users
-      // both assertions in ONE aggregation job (r19, same as
-      // qStreamJoin's merged check)
-      val chk = pairs.agg(countDistinct(col("batch_id")),
-        coalesce(sum(when(col("click_id").isNull, 1L)), lit(0L))).head
-      val nBatches = chk.getLong(0)
-      if (nBatches < 2) throw new IllegalStateException(
-        s"q_stream_join_outer: rows emitted in $nBatches micro-batch(es) " +
-          "— matched pairs and watermark-flushed unmatched views must " +
-          "land in different batches; check the staged file ordering")
-      // the null-emission path must actually have fired — a corpus
-      // where every view matched would grade only the inner semantics
-      val nUnmatched = chk.getLong(1)
-      if (nUnmatched == 0) throw new IllegalStateException(
-        "q_stream_join_outer: no unmatched view emitted — the " +
-          "watermark-gated null-emission claim is untested")
+      val nUnmatched = drain.claims(pairs,
+        coalesce(sum(when(col("click_id").isNull, 1L)), lit(0L))).getLong(1)
+      drain.check(nUnmatched > 0, "no unmatched view emitted — the " +
+        "watermark-gated null-emission claim is untested")
       pairs.select(col("user_id"), col("ad_id"),
           coalesce(col("click_id"), lit(-1L)).as("click_id"),
           col("imp_us"),

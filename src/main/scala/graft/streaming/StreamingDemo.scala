@@ -285,16 +285,23 @@ object StreamingDemo {
     * batch (restart between sink write and offset commit) re-lands in
     * its own `batch_id=<id>` partition with overwrite mode instead of
     * duplicating rows. Pass a durable checkpointDir in production; the
-    * None default is only for single-run demos/tests. */
+    * None default is only for single-run demos/tests. `outputMode` is
+    * the stream's (`update` for a per-batch snapshot of changed state
+    * rows); `availableNow` as in [[startRateSpikeSink]]. */
   def startPartitionedBatchSink(events: DataFrame, outDir: String,
-                                checkpointDir: Option[String] = None)
+                                checkpointDir: Option[String] = None,
+                                outputMode: String = "append",
+                                availableNow: Boolean = false)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val writer = events.writeStream
+      .outputMode(outputMode)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         batch.write.mode("overwrite")
           .parquet(s"$outDir/batch_id=$batchId")
       }
     checkpointDir.foreach(c => writer.option("checkpointLocation", c))
+    if (availableNow)
+      writer.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
     writer.start()
   }
 

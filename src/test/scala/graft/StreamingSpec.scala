@@ -950,16 +950,29 @@ class StreamingSpec extends SparkSpec {
       assert(Files.exists(foreign), "non-graft entries must never be touched")
     } finally {
       // best-effort scratch cleanup
-      Seq(live, emptySuffix, overLong, nonDigit, foreign, dead).foreach { d =>
-        if (Files.exists(d)) {
-          val s = Files.walk(d)
-          try s.sorted(java.util.Comparator.reverseOrder())
-            .forEach(p => { Files.deleteIfExists(p); () })
-          finally s.close()
-        }
-      }
-      Files.deleteIfExists(scratch)
-      ()
+      streaming.StreamQueries.rmRf(scratch)
     }
+  }
+
+  test("a drain that runs as one micro-batch fails the shared claim by name") {
+    // every graded drain's >= 2 batch claim goes through Drain.claims;
+    // one staged file can only ever be one micro-batch, so the claim
+    // must fail, naming the drain
+    val s = spark
+    import s.implicits._
+    val staging = java.nio.file.Files.createTempDirectory("graft_one_file_")
+    val dir = staging.toString
+    try {
+      Seq((ts("2024-01-01 00:01:00"), "view"), (ts("2024-01-01 00:02:00"), "click"))
+        .toDF("ts", "event_type").coalesce(1)
+        .write.mode("overwrite").parquet(dir)
+      val stream = s.readStream.schema(s.read.parquet(dir).schema).parquet(dir)
+      val drain = new streaming.StreamQueries.Drain(s, "q_stream_one_file", sfDir)
+      val e = intercept[IllegalStateException] {
+        drain.claims(drain.ledger(stream))
+      }
+      assert(e.getMessage.startsWith("q_stream_one_file:"), e.getMessage)
+      assert(e.getMessage.contains("micro-batch"), e.getMessage)
+    } finally streaming.StreamQueries.rmRf(staging)
   }
 }
