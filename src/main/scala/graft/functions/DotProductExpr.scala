@@ -19,11 +19,13 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * straight-line Java loop over the two `ArrayData` buffers into
   * whole-stage codegen: no lambda dispatch, no boxing, no boundary.
   *
-  * The oracle-checked KNN/ANN queries keep their DECIMAL dot products
-  * (bit-exact cross-engine, which float accumulation is not); this is
-  * the throughput kernel you swap in at 100 TB when the oracle isn't
-  * riding along — spec-pinned equal to the HOF formulation to 1e-6
-  * relative. */
+  * The loop is an in-order double fold of exactly-converted floats,
+  * the same IEEE operation sequence as the HOF formulation and as
+  * DuckDB's LIST_REDUCE, so its cosines are bit-identical to both:
+  * q_knn_native runs on this kernel and hash-matches the DuckDB
+  * oracle. The KNN/ANN cosines are double folds everywhere; DECIMAL
+  * appears only in the LSH bucket-signature sums, where a summation
+  * order must never flip a sign bit between engines. */
 case class DotProductExpr(left: Expression, right: Expression)
     extends BinaryExpression {
 

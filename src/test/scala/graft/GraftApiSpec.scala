@@ -253,7 +253,8 @@ class GraftApiSpec extends SparkSpec {
   test("knnTopK / annTopK facade forms equal the graded query outputs") {
     // the facade entries must BE the graded algorithms, not parallel
     // implementations — pin row-set equality against q_knn_native
-    // (exact, native kernel) and q_ann_lsh (bucketed scale path) on
+    // (exact, native kernel), q_ann_lsh (bucketed scale path) and
+    // q_embed_incremental (even ids as corpus, odd ids as batch) on
     // the real embeddings table with the graded query set
     import org.apache.spark.sql.functions.col
     val e = Tables.embeddings(spark, sfDir).select(col("vec_id"), col("embedding"))
@@ -264,6 +265,12 @@ class GraftApiSpec extends SparkSpec {
       rows(SparkEntry.queries("q_knn_native")(spark, sfDir)))
     assert(rows(Graft.annTopK(e, q, 3)) ===
       rows(SparkEntry.queries("q_ann_lsh")(spark, sfDir)))
+    def screened(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
+    val graded = screened(SparkEntry.queries("q_embed_incremental")(spark, sfDir))
+    assert(graded.nonEmpty)
+    assert(screened(Graft.embedScreen(e.filter(col("vec_id") % 2 === 0),
+      e.filter(col("vec_id") % 2 === 1), 0.35)) === graded)
   }
 
   test("knnTopK / annTopK excludeSelf=false keeps a same-id true neighbor") {

@@ -277,6 +277,31 @@ class NorthStarSpec extends SparkSpec {
     assert(cost("ivf_probe") >= cost("ivf"))
   }
 
+  test("fused q_ann_recall hit counts equal the standalone graded queries'") {
+    // q_ann_recall scores all five methods in one fused pass; each
+    // method's top-3 must still be its standalone query's, so the
+    // per-query hit count must equal |standalone top-3 ∩ exact top-3|
+    val d = new java.io.File(sfDir).getParent + "/sf0.01"
+    def top3(q: String) = SparkEntry.queries(q)(spark, d).filter(col("rank") <= 3)
+      .collect().map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id"))).toSet
+    val exact = top3("q_knn_bruteforce")
+    val queries = exact.map(_._1)
+    val rec = SparkEntry.queries("q_ann_recall")(spark, d).collect()
+      .map(r => (r.getAs[String]("method"), r.getAs[Long]("query_id"))
+        -> r.getAs[Long]("n_hits")).toMap
+    val standalone = Map("lsh" -> "q_ann_lsh", "lsh_multi" -> "q_ann_lsh_multi",
+      "lsh_probe" -> "q_ann_lsh_probe", "ivf" -> "q_ann_ivf",
+      "ivf_probe" -> "q_ann_ivf_probe")
+    assert(rec.keySet === (for (m <- standalone.keySet; q <- queries) yield (m, q)))
+    standalone.foreach { case (m, name) =>
+      val hits = top3(name).intersect(exact).toSeq.groupBy(_._1)
+      queries.foreach { q =>
+        assert(rec((m, q)) === hits.get(q).fold(0L)(_.size.toLong),
+          s"$m, query $q: fused recall disagrees with $name")
+      }
+    }
+  }
+
   test("fingerprint is deterministic across runs") {
     val a = run("q_fingerprint").collect().map(r => (r.getLong(0), r.getLong(1)))
     val b = run("q_fingerprint").collect().map(r => (r.getLong(0), r.getLong(1)))
