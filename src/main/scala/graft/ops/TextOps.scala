@@ -43,6 +43,10 @@ object TextOps {
       .filter(size(col("tokens")) >= 2)
       .withColumn("shingles", expr(bigramsExpr))
 
+  /** (doc_id, shingles, sz): the shingle sets every jaccard path scores. */
+  private def shingleSets(df: DataFrame): DataFrame =
+    withShingles(df).select(col("doc_id"), col("shingles"), size(col("shingles")).as("sz"))
+
   /** word n-grams for arbitrary n — the generalization of
     * [[withShingles]]'s bigrams that serious decontamination needs
     * (GPT-3/Pile flag 13-gram collisions; bigrams over-flag). Same
@@ -63,27 +67,24 @@ object TextOps {
        FROM (SELECT doc_id, STRING_SPLIT(text, ' ') AS toks FROM documents)
        WHERE LEN(toks) >= 2"""
 
-  /** Linearized exact-jaccard pair CTEs (r15 verdict #3). The old
-    * oracle joined every doc pair and ran LIST_INTERSECT per pair —
-    * O(n² · |shingles|), CPU-hours in DuckDB at sf0.1, so the 8
-    * oracles built on it had to be popped from sf0.1 sweeps and "zero
-    * scale drift" was only rows-backed at the bench SF. This form
-    * mirrors the Spark side's join-on-keys-then-confirm shape:
-    * candidates come from an exploded shingle equi-join (any pair
-    * with jaccard > 0 shares >= 1 shingle, so the candidate set is a
-    * SUPERSET of every passing pair — exact, no recall assumption,
-    * unlike a minhash-band mirror), and |A∩B| is counted by GROUP BY
-    * instead of materializing list intersections. Cost is Σ_shingle
-    * df² candidate rows, not n² list ops: measured 0.2 s vs 6 s at
-    * sf0.01 and 15 s vs CPU-hours at sf0.1, value-identical output.
-    * Yields `pairs(doc_a, doc_b, jaccard)` with jaccard >= 0.5 and
-    * doc_a < doc_b; splice after WITH / WITH RECURSIVE. */
-  private val duckPairCtes =
+  /** Exact-jaccard pair CTEs, the oracle twin of the Spark side's
+    * candidates-then-confirm shape. Candidates come from an exploded
+    * shingle equi-join (any pair with jaccard > 0 shares >= 1
+    * shingle, so the candidate set is a SUPERSET of every passing
+    * pair — exact, no recall assumption, unlike a minhash-band
+    * mirror), and |A∩B| is counted by GROUP BY instead of
+    * materializing list intersections: Σ_shingle df² candidate rows,
+    * not n² LIST_INTERSECTs, so every oracle built on it runs at sf0.1
+    * (15 s there; the all-pairs form took CPU-hours). `pairCond`
+    * restricts the (a, b) side pair, e.g. `a.doc_id < b.doc_id` for a
+    * self-join. Yields `pairs(doc_a, doc_b, jaccard)` with jaccard >=
+    * 0.5; splice after WITH / WITH RECURSIVE. */
+  private def duckJaccardCtes(pairCond: String): String =
     s"""sh AS ($duckShingles),
        dsz AS (SELECT doc_id, LEN(shingles) AS sz FROM sh),
        dex AS (SELECT doc_id, UNNEST(shingles) AS s FROM sh),
        dinter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS i
-                  FROM dex a JOIN dex b ON a.s = b.s AND a.doc_id < b.doc_id
+                  FROM dex a JOIN dex b ON a.s = b.s AND $pairCond
                   GROUP BY 1, 2),
        pairs AS (SELECT doc_a, doc_b,
                    CAST(i AS DOUBLE) / (sa.sz + sb.sz - i) AS jaccard
@@ -123,9 +124,8 @@ object TextOps {
       // bitmap build) re-read it and re-tokenizing per consumer
       // doubles the cost. SessionMemo.pinned, not localCheckpoint: the
       // memo makes this a session-lifetime frame, and checkpoint
-      // blocks are non-recomputable on executor loss (r11 verdict #1)
-      val sh = SessionMemo.pinned(withShingles(Tables.documents(s, d))
-        .select(col("doc_id"), col("shingles"), size(col("shingles")).as("sz")))
+      // blocks are non-recomputable on executor loss
+      val sh = SessionMemo.pinned(shingleSets(Tables.documents(s, d)))
       import s.implicits._
       val vocabSeq = sh.select(explode(col("shingles")).as("shingle"))
         .distinct().as[String].collect().sorted
@@ -186,25 +186,37 @@ object TextOps {
       val pairs = stream.mapPartitions { it =>
         val all = bc.value
         it.flatMap { case (ida, sza, bma) =>
-          all.iterator
-            .filter { case (idb, szb, _) =>
-              idb > ida && math.min(sza, szb).toDouble >= t * math.max(sza, szb)
-            }
-            .flatMap { case (idb, szb, bmb) =>
-              var inter = 0
-              var i = 0
-              while (i < bma.length) {
-                inter += java.lang.Long.bitCount(bma(i) & bmb(i)); i += 1
-              }
-              val jac = inter.toDouble / (sza + szb - inter)
-              if (jac >= t) Iterator.single((ida, idb, jac)) else Iterator.empty
-            }
+          all.iterator.filter(_._1 > ida).flatMap { case (idb, szb, bmb) =>
+            Kernels.bitsetJaccard(t, sza, bma, szb, bmb).map(j => (ida, idb, j))
+          }
         }
       }.toDF("doc_a", "doc_b", "jaccard")
       pairs.orderBy(col("doc_a"), col("doc_b"))
     },
-    s"""WITH $duckPairCtes
+    s"""WITH ${duckJaccardCtes("a.doc_id < b.doc_id")}
        SELECT doc_a, doc_b, jaccard FROM pairs ORDER BY doc_a, doc_b""")
+
+  /** Executor-side kernels, in their own object so a task closure
+    * that calls them loads only this object, not TextOps' query
+    * registry. */
+  private object Kernels {
+    /** The one exact-jaccard popcount kernel over two packed shingle
+      * bitsets: `Some(jaccard)` when it reaches `t`, else None. The
+      * size prune first — |A∩B| ≤ min(|A|, |B|), so min < t·max
+      * cannot pass — skips the popcount for most pairs. */
+    def bitsetJaccard(t: Double, szA: Int, bmA: Array[Long],
+                      szB: Int, bmB: Array[Long]): Option[Double] =
+      if (math.min(szA, szB).toDouble < t * math.max(szA, szB)) None
+      else {
+        var inter = 0
+        var i = 0
+        while (i < bmA.length) {
+          inter += java.lang.Long.bitCount(bmA(i) & bmB(i)); i += 1
+        }
+        val jac = inter.toDouble / (szA + szB - inter)
+        if (jac >= t) Some(jac) else None
+      }
+  }
 
   /** Block-sharded exact all-pairs jaccard — the 100 TB shape of the
     * broadcast kernel in [[qNgramJaccard]]: NO driver collect, NO
@@ -240,21 +252,10 @@ object TextOps {
         // drop pairs whose smaller id lives in the higher-index block.
         val same = bi == bj
         a.iterator.flatMap { case (ida, sza, bma) =>
-          b.iterator
-            .filter { case (idb, szb, _) =>
-              (if (same) idb > ida else idb != ida) &&
-                math.min(sza, szb).toDouble >= t * math.max(sza, szb)
-            }
+          b.iterator.filter { case (idb, _, _) => if (same) idb > ida else idb != ida }
             .flatMap { case (idb, szb, bmb) =>
-              var inter = 0
-              var i = 0
-              while (i < bma.length) {
-                inter += java.lang.Long.bitCount(bma(i) & bmb(i)); i += 1
-              }
-              val jac = inter.toDouble / (sza + szb - inter)
-              if (jac >= t)
-                Iterator.single((math.min(ida, idb), math.max(ida, idb), jac))
-              else Iterator.empty
+              Kernels.bitsetJaccard(t, sza, bma, szb, bmb)
+                .map(j => (math.min(ida, idb), math.max(ida, idb), j))
             }
         }
       })
@@ -291,21 +292,52 @@ object TextOps {
     * pipeline, factored so [[minhashNearDupPairs]] and the
     * second-decade candidate-volume spec (ScaleSmokeSpec) measure the
     * IDENTICAL join. */
-  private[graft] def bandCandidatePairs(sh: DataFrame): DataFrame = {
-    val banded = minhashBands(sh)
-    val la = banded.select(col("doc_id").as("doc_a"), col("band_idx"), col("band_hash"))
-    val lb = banded.select(col("doc_id").as("doc_b"), col("band_idx"), col("band_hash"))
-    la.join(lb, Seq("band_idx", "band_hash"))
+  private[graft] def bandCandidatePairs(sh: DataFrame): DataFrame =
+    collidingPairs(minhashBands(sh), "band_idx", "band_hash")
+
+  /** The candidate stage of every banded pair family: distinct
+    * `(doc_a, doc_b)`, doc_a < doc_b, of `keyed` rows sharing all of
+    * `keys` — an equi-join on the band key, never all-pairs. */
+  private def collidingPairs(keyed: DataFrame, keys: String*): DataFrame = {
+    val la = keyed.select(col("doc_id").as("doc_a") +: keys.map(col): _*)
+    val lb = keyed.select(col("doc_id").as("doc_b") +: keys.map(col): _*)
+    la.join(lb, keys)
       .filter(col("doc_a") < col("doc_b"))
       .select(col("doc_a"), col("doc_b")).distinct()
+  }
+
+  /** The jaccard confirm of the banded families: adds `inter` and
+    * `jaccard` for the shingle arrays `sh_<a>`/`sh_<b>` of sizes
+    * `sz_<a>`/`sz_<b>`. Two withColumns, as the callers always had,
+    * so CollapseProject folds them into the same plan. */
+  private def withJaccard(df: DataFrame, a: String, b: String): DataFrame =
+    df.withColumn("inter", size(array_intersect(col(s"sh_$a"), col(s"sh_$b"))))
+      .withColumn("jaccard",
+        col("inter").cast("double") / (col(s"sz_$a") + col(s"sz_$b") - col("inter")))
+
+  /** The tail of every memoized pair family: sorted by (doc_a, doc_b)
+    * and [[materialized]] (pair-count-sized: every re-consumption is a
+    * cache read). The caller then releases its own intermediates. */
+  private def cachedPairs(pairs: DataFrame): DataFrame =
+    materialized(pairs.orderBy(col("doc_a"), col("doc_b")))
+
+  /** Persisted and counted inside the (memo) build: Bench attributes
+    * the one-time cost to `memo_builds`, and no consumer is planned
+    * over the cache before it holds data — Spark sizes an unfilled
+    * cache by its plan estimate, a filled one by its bytes, so a
+    * memoized frame planned before the fill can pick another join
+    * build side, and shuffle count, than one planned after it. */
+  private def materialized(df: DataFrame): DataFrame = {
+    val cached = df.persist()
+    cached.count()
+    cached
   }
 
   /** Spec-only convenience: band candidates straight from a (doc_id,
     * text) frame, through the same shingle pipeline the graded query
     * uses. */
   private[graft] def bandCandidatesOf(docs: DataFrame): DataFrame =
-    bandCandidatePairs(withShingles(docs)
-      .select(col("doc_id"), col("shingles"), size(col("shingles")).as("sz")))
+    bandCandidatePairs(shingleSets(docs))
 
   /** MinHash + LSH banding near-dup detection — the scale path: 32
     * minhashes per doc, 8 bands × 4 rows; only same-band docs are
@@ -326,44 +358,27 @@ object TextOps {
     * callers all share ONE persisted shingle table per distinct input
     * per session — the bounded-persist pattern nearDupScreen's corpus
     * side established. */
-  def minhashNearDupPairs(docs: DataFrame, threshold: Double = 0.5): DataFrame = {
-    val s = docs.sparkSession
-    SessionMemo.getOrElseUpdate(s,
+  def minhashNearDupPairs(docs: DataFrame, threshold: Double = 0.5): DataFrame =
+    SessionMemo.getOrElseUpdate(docs.sparkSession,
       s"minhash_pairs:${SessionMemo.planKey(docs)}:$threshold") {
       // persisted: consumed three times (signatures + both confirm
-      // sides); without it the tokenize→shingle pipeline runs thrice.
-      // The memo bounds this to one persist + one broadcast per
-      // (session, input plan) no matter how often it is invoked
-      val sh = withShingles(docs)
-        .select(col("doc_id"), col("shingles"), size(col("shingles")).as("sz"))
-        .persist()
-      val cand = bandCandidatePairs(sh)
+      // sides), else the tokenize→shingle pipeline runs thrice
+      val sh = shingleSets(docs).persist()
       val shA = sh.select(col("doc_id").as("doc_a"), col("shingles").as("sh_a"), col("sz").as("sz_a"))
       val shB = sh.select(col("doc_id").as("doc_b"), col("shingles").as("sh_b"), col("sz").as("sz_b"))
-      val pairs = cand.join(shA, Seq("doc_a")).join(shB, Seq("doc_b"))
-        .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))))
-        .withColumn("jaccard",
-          col("inter").cast("double") / (col("sz_a") + col("sz_b") - col("inter")))
+      val pairs = cachedPairs(withJaccard(
+        bandCandidatePairs(sh).join(shA, Seq("doc_a")).join(shB, Seq("doc_b")), "a", "b")
         .filter(col("jaccard") >= threshold)
-        .select(col("doc_a"), col("doc_b"), col("jaccard"))
-        .orderBy(col("doc_a"), col("doc_b"))
-        .persist() // pair-count-sized; every re-consumption is a cache read
-      // materialize inside the timed memo build so the one-time cost is
-      // attributed to the build (Bench `memo_builds`), then drop the
-      // shingle table — it is dead once the pair set is cached, and
-      // leaving it pinned just grows session cache pressure
-      pairs.count()
+        .select(col("doc_a"), col("doc_b"), col("jaccard")))
       sh.unpersist()
       pairs
     }
-  }
 
   val qDedupMinhash = Q(
     (s, d) => SessionMemo.getOrElseUpdate(s, s"q_dedup_minhash:$d") {
       minhashNearDupPairs(Tables.documents(s, d))
     },
-    s"""WITH $duckPairCtes
-       SELECT doc_a, doc_b, jaccard FROM pairs ORDER BY doc_a, doc_b""")
+    qNgramJaccard.oracle) // exact pairs: see the recall note above
 
   /** Incremental near-dup dedup — the production ingest shape: screen
     * an INCOMING BATCH against an EXISTING CORPUS instead of
@@ -378,10 +393,8 @@ object TextOps {
     * Output: one decision row per matched batch doc (match count,
     * first corpus match, best jaccard). The exact-jaccard oracle
     * replays the decision because the corpus is similarity-bimodal
-    * (see qDedupMinhash's recall note); since r16 it counts
-    * intersections via an exploded shingle equi-join (the
-    * [[duckPairCtes]] shape restricted batch×corpus), so it runs at
-    * sf0.1 too instead of being popped from the sweep. */
+    * (see qDedupMinhash's recall note): [[duckJaccardCtes]] restricted
+    * to batch×corpus pairs. */
   /** PUBLIC batch-vs-corpus near-dup screen — the composable form of
     * [[qDedupIncremental]]: both sides are any (doc_id, text) frame,
     * so the SAME function runs in a batch backfill and inside a
@@ -402,8 +415,9 @@ object TextOps {
     * lifetime). Set it true for LARGE one-shot backfills where the
     * batch rivals the corpus (the graded incremental query does: its
     * batch is half the table, and recomputing its shingles measured
-    * +2 s at sf0.1); the caller then owns the cache entry's lifetime
-    * — memoize or unpersist-after-materialize. */
+    * +2 s at sf0.1): the batch shingles are then [[materialized]] at
+    * call time, and the caller owns the cache entry — memoize or
+    * unpersist. */
   def nearDupScreen(corpus: DataFrame, batch: DataFrame,
                     threshold: Double = 0.5,
                     persistBatch: Boolean = false): DataFrame = {
@@ -414,15 +428,14 @@ object TextOps {
     // the stream's lifetime.
     val shC = SessionMemo.getOrElseUpdate(corpus.sparkSession,
       s"screen_shingles:${SessionMemo.planKey(corpus)}") {
-      withShingles(corpus)
+      materialized(withShingles(corpus)
         .select(col("doc_id").as("corpus_id"), col("shingles").as("sh_c"),
-          size(col("shingles")).as("sz_c"))
-        .persist()
+          size(col("shingles")).as("sz_c")))
     }
     val shB0 = withShingles(batch)
       .select(col("doc_id"), col("shingles").as("sh_b"),
         size(col("shingles")).as("sz_b"))
-    val shB = if (persistBatch) shB0.persist() else shB0
+    val shB = if (persistBatch) materialized(shB0) else shB0
     val bandsC = minhashBands(
       shC.select(col("corpus_id").as("doc_id"), col("sh_c").as("shingles")))
       .select(col("doc_id").as("corpus_id"), col("band_idx"), col("band_hash"))
@@ -430,10 +443,7 @@ object TextOps {
       shB.select(col("doc_id"), col("sh_b").as("shingles")))
     val cand = bandsB.join(bandsC, Seq("band_idx", "band_hash"))
       .select(col("doc_id"), col("corpus_id")).distinct()
-    cand.join(shB, Seq("doc_id")).join(shC, Seq("corpus_id"))
-      .withColumn("inter", size(array_intersect(col("sh_b"), col("sh_c"))))
-      .withColumn("jaccard",
-        col("inter").cast("double") / (col("sz_b") + col("sz_c") - col("inter")))
+    withJaccard(cand.join(shB, Seq("doc_id")).join(shC, Seq("corpus_id")), "b", "c")
       .filter(col("jaccard") >= threshold)
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_matches"),
@@ -452,31 +462,19 @@ object TextOps {
         persistBatch = true)
         .orderBy(col("doc_id"))
     },
-    s"""WITH sh AS ($duckShingles),
-       dsz AS (SELECT doc_id, LEN(shingles) AS sz FROM sh),
-       dex AS (SELECT doc_id, UNNEST(shingles) AS s FROM sh),
-       dinter AS (SELECT b.doc_id AS doc_id, c.doc_id AS corpus_id,
-                    COUNT(*) AS i
-                  FROM dex b JOIN dex c
-                    ON b.s = c.s AND b.doc_id % 2 = 1 AND c.doc_id % 2 = 0
-                  GROUP BY 1, 2),
-       jm AS (SELECT dinter.doc_id, corpus_id,
-                CAST(i AS DOUBLE) / (sb.sz + sc.sz - i) AS jaccard
-              FROM dinter JOIN dsz sb ON sb.doc_id = dinter.doc_id
-                          JOIN dsz sc ON sc.doc_id = corpus_id)
-       SELECT doc_id, COUNT(*) AS n_matches, MIN(corpus_id) AS first_match,
+    s"""WITH ${duckJaccardCtes("a.doc_id % 2 = 1 AND b.doc_id % 2 = 0")}
+       SELECT doc_a AS doc_id, COUNT(*) AS n_matches, MIN(doc_b) AS first_match,
          MAX(jaccard) AS best_jaccard
-       FROM jm WHERE jaccard >= 0.5
-       GROUP BY doc_id ORDER BY doc_id""")
+       FROM pairs GROUP BY doc_a ORDER BY doc_id""")
 
   /** Shared recursive-CTE oracle prelude: exact near-dup pairs
-    * ([[duckPairCtes]] — linearized r16, so this runs at sf0.1 too) →
+    * ([[duckJaccardCtes]], so this runs at sf0.1 too) →
     * undirected edges → transitive closure → per-node min-label
     * component (`comp(doc_id, cluster_id)`). The `reach` closure is
     * quadratic only in COMPONENT size (near-dup clusters are tiny),
     * not corpus size. */
   private val duckCompCtes =
-    s"""WITH RECURSIVE $duckPairCtes,
+    s"""WITH RECURSIVE ${duckJaccardCtes("a.doc_id < b.doc_id")},
        edges AS (SELECT doc_a AS u, doc_b AS v FROM pairs
                  UNION SELECT doc_b, doc_a FROM pairs),
        reach(u, v) AS (SELECT u, v FROM edges
@@ -539,9 +537,8 @@ object TextOps {
         // label, so adopting lbl(lbl(v)) roughly halves the remaining
         // distance to the component minimum — convergence in
         // O(log diameter) rounds, where plain propagation needs
-        // O(diameter) and silently truncated long chains at the old
-        // 15-round cap (the leakage ADVICE flagged: a split component
-        // lets near-dup twins straddle train/test)
+        // O(diameter) and would cut long chains at any round cap (a
+        // split component lets near-dup twins straddle train/test)
         val nextPinned = new PinnedFrame(prop.as("a")
           .join(prop.select(col("node").as("jn"), col("lbl").as("jl")).as("j"),
             col("a.lbl") === col("jn"), "left")
@@ -573,6 +570,18 @@ object TextOps {
     }
   }
 
+  /** Connected components of a `(doc_a, doc_b)` near-dup pair set:
+    * the symmetric edge list `(u, v)` is pinned once — every
+    * [[componentLabels]] round and action references it, and without
+    * the pin each would re-run the whole pair-generation pipeline —
+    * and labeled `(node, lbl)`. */
+  private def pairComponents(pairs: DataFrame): DataFrame = {
+    val ab = pairs.select(col("doc_a"), col("doc_b"))
+    componentLabels(SessionMemo.pinned(ab
+      .union(ab.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
+      .toDF("u", "v")))
+  }
+
   /** Near-dup cluster canonicalization — the step that turns pairwise
     * matches into dedup decisions: connected components over the
     * near-dup graph, each doc labeled with its component's minimum
@@ -585,14 +594,7 @@ object TextOps {
     * oracle replays connectivity with a recursive CTE. */
   val qDedupClusters = Q(
     (s, d) => SessionMemo.getOrElseUpdate(s, s"q_dedup_clusters:$d") {
-      val pairs = qNgramJaccard.fn(s, d).select(col("doc_a"), col("doc_b"))
-      // materialize the edge list once — every loop iteration references
-      // it, and without the checkpoint each round would re-run the
-      // whole pair-generation pipeline
-      val edges = SessionMemo.pinned(pairs
-        .union(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-        .toDF("u", "v"))
-      val labels = componentLabels(edges)
+      val labels = pairComponents(qNgramJaccard.fn(s, d))
       val sizes = labels.groupBy(col("lbl")).agg(count(lit(1)).as("cluster_size"))
       labels.join(sizes, Seq("lbl"))
         .select(col("lbl").as("cluster_id"), col("node").as("doc_id"),
@@ -653,8 +655,8 @@ object TextOps {
     *
     * Token hashes are engine-portable (char-level polynomial rolling
     * hashes, one per band, same arithmetic in the DuckDB oracle), so
-    * the check is hash-exact — the round-3 xxhash64 version could
-    * only be rows-checked. Bit 63 is dropped from the assembled
+    * the check is hash-exact — an xxhash64 token hash could only be
+    * rows-checked. Bit 63 is dropped from the assembled
     * signature so it stays inside a non-negative BIGINT in both
     * engines (no overflow-adjacent shiftleft(1L,63) edge).
     *
@@ -686,7 +688,7 @@ object TextOps {
         .select(col("t") +: hashCols: _*)
       // bits 0..62 only: the signature keeps the sign bit clear so the
       // band arithmetic stays portable (a bit-63 vote would be dead
-      // work — round-4 ADVICE). Bit-SLICED votes: instead of 63
+      // work). Bit-SLICED votes: instead of 63
       // separate ±1 SUM aggregates, pack 3 one-counters per 64-bit
       // word (20-bit slots, 21 words + one count) — each token adds
       // its bit values shifted into disjoint slots, the long SUM adds
@@ -766,17 +768,8 @@ object TextOps {
     * the corpus — one broadcast-size join + a map-side hash bucket.
     * The oracle replays clustering via the recursive CTE. */
   val qSplitLeakageSafe = Q(
-    (s, d) => {
-      val clusters = qDedupClusters.fn(s, d).select(col("doc_id"), col("cluster_id"))
-      Tables.documents(s, d).select(col("doc_id"))
-        .join(clusters, Seq("doc_id"), "left")
-        .withColumn("cluster_id", coalesce(col("cluster_id"), col("doc_id")))
-        .withColumn("bucket", expr(s"${graft.Num.hashExpr("cluster_id")} % 10"))
-        .withColumn("split", expr(
-          "CASE WHEN bucket <= 7 THEN 'train' WHEN bucket = 8 THEN 'val' ELSE 'test' END"))
-        .select(col("doc_id"), col("cluster_id"), col("split"))
-        .orderBy(col("doc_id"))
-    },
+    (s, d) => splitByCluster(Tables.documents(s, d),
+      qDedupClusters.fn(s, d).select(col("doc_id"), col("cluster_id"))),
     s"""$duckCompCtes,
        assigned AS (
          SELECT d.doc_id, COALESCE(c.cluster_id, d.doc_id) AS cluster_id
@@ -789,6 +782,20 @@ object TextOps {
          CASE WHEN bucket <= 7 THEN 'train' WHEN bucket = 8 THEN 'val'
               ELSE 'test' END AS split
        FROM bucketed ORDER BY doc_id""")
+
+  /** The 80/10/10 split tail: each doc of `docs` takes its
+    * `(doc_id, cluster_id)` row from `clusters` (a singleton is its
+    * own cluster) and the cluster id feeds the portable two-round
+    * hash, so a cluster never straddles splits. */
+  private def splitByCluster(docs: DataFrame, clusters: DataFrame): DataFrame =
+    docs.select(col("doc_id"))
+      .join(clusters, Seq("doc_id"), "left")
+      .withColumn("cluster_id", coalesce(col("cluster_id"), col("doc_id")))
+      .withColumn("bucket", expr(s"${graft.Num.hashExpr("cluster_id")} % 10"))
+      .withColumn("split", expr(
+        "CASE WHEN bucket <= 7 THEN 'train' WHEN bucket = 8 THEN 'val' ELSE 'test' END"))
+      .select(col("doc_id"), col("cluster_id"), col("split"))
+      .orderBy(col("doc_id"))
 
   /** Benchmark decontamination — the training-pipeline stage that
     * flags documents overlapping an evaluation set (GPT-3/Pile-style
@@ -971,13 +978,10 @@ object TextOps {
   /** Shared (doc_id, term, tf) term-count stage — ONE memoized persist
     * per (session, input plan), consumed by [[qTfidf]] (df derivation
     * + final join) and [[bm25Rank]] (doc lengths + query-term
-    * scoring). Unified deliberately (round-10 verdict #5): the two
-    * operators previously built the SAME canonical plan — one through
-    * a bare persist, one through its own memo key — and whichever ran
-    * second hit CacheManager's "already cached" dedup path, logging
-    * the warning that was burying real lifecycle bugs in the bench
-    * tail. One owner, one cache entry, and the IR family shares its
-    * token pass the way the dedup family shares its shingle pass. */
+    * scoring). One owner, one cache entry: two persists of the same
+    * canonical plan would hit CacheManager's "already cached" path
+    * and log a warning per build, and the IR family shares its token
+    * pass the way the dedup family shares its shingle pass. */
   private[graft] def termCounts(docs: DataFrame): DataFrame =
     SessionMemo.getOrElseUpdate(docs.sparkSession,
       s"tf_counts:${SessionMemo.planKey(docs)}") {
@@ -1058,19 +1062,15 @@ object TextOps {
     val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
     val stats = dl.agg(count(lit(1)).cast("double").as("n_docs"),
       expr("CAST(SUM(dl) AS DOUBLE) / COUNT(*)").as("avgdl"))
-    // df via groupBy + broadcast join over a PINNED qtf (r20, r19
-    // ADVICE): the r19 count-over-window form buffered one term's
-    // ENTIRE posting list in a single window task (parallelism capped
-    // at |terms|) — at 100 TB a frequent query term's posting list
-    // approaches corpus size, exactly the guide-§2.5 skew hazard.
-    // The window's original motivation (the join form re-scanned the
-    // cached corpus-wide term-count table a SECOND time just to
-    // re-derive qtf for the df aggregation) is kept by pinning qtf
-    // once per invocation: |terms|·df rows — posting-list-sized,
-    // never corpus-sized — so the corpus table is scanned ONCE, df is
-    // a scalable partial aggregation over the pin, and the join back
-    // broadcasts |terms| rows. One-slot pin: repeated invocations
-    // free the previous snapshot (r19 verdict #4 discipline).
+    // df via groupBy + broadcast join over a PINNED qtf: a
+    // count-over-window form would buffer one term's ENTIRE posting
+    // list in a single window task (parallelism capped at |terms|) —
+    // at 100 TB a frequent query term's posting list approaches
+    // corpus size. Pinning qtf once per invocation (|terms|·df rows —
+    // posting-list-sized, never corpus-sized) scans the corpus-wide
+    // term-count table ONCE, df is a scalable partial aggregation
+    // over the pin, and the join back broadcasts |terms| rows.
+    // One-slot pin: repeated invocations free the previous snapshot.
     val qtf0 = tf.filter(col("term").isin(terms: _*))
     val qtf = graft.SessionMemo.pinnedSlot(
       s"bm25_qtf:${graft.SessionMemo.planKey(qtf0)}")(qtf0)
@@ -1352,8 +1352,7 @@ object TextOps {
     * [[graft.Graft]]): lowercase, fold every run of characters
     * outside Unicode letters/digits (`\p{L}`, `\p{N}`) to one space,
     * trim — the multilingual-corpus form of [[normalizeText]].
-    * Round-6 deferred this as an engine-portability risk; measured
-    * since: Java regex and DuckDB RE2 agree on `\p{L}`/`\p{N}`
+    * Java regex and DuckDB RE2 agree on `\p{L}`/`\p{N}`
     * membership for the tested scripts (Latin-1, Greek, CJK,
     * digits), so the graded twin IS hash-checked — the residual
     * divergence risk is non-ASCII CASE FOLDING (`lower` is ICU-full
@@ -1387,9 +1386,8 @@ object TextOps {
     * (block, rank+offset) equi-join, prefix-levenshtein confirm.
     * Memoized like [[minhashNearDupPairs]]. */
   def sortedNeighborhoodPairs(docs: DataFrame, window: Int = 2,
-                              maxLev: Int = 16): DataFrame = {
-    val s = docs.sparkSession
-    SessionMemo.getOrElseUpdate(s,
+                              maxLev: Int = 16): DataFrame =
+    SessionMemo.getOrElseUpdate(docs.sparkSession,
       s"sorted_pairs:${SessionMemo.planKey(docs)}:$window:$maxLev") {
       // persisted: both join sides read the ranked frame, and without
       // it the normalize+window pipeline executes twice
@@ -1410,22 +1408,16 @@ object TextOps {
         .withColumn("off", explode(sequence(lit(1), lit(window))))
       val b = normed.select(col("blk").as("blk_b"), col("rk").as("rk_b"),
         col("doc_id").as("id_b"), col("k").as("kb"))
-      val pairs = a.join(b,
+      val pairs = cachedPairs(a.join(b,
           col("blk") === col("blk_b") && (col("rk") + col("off")) === col("rk_b"))
         .withColumn("lev",
           levenshtein(substring(col("ka"), 1, 80), substring(col("kb"), 1, 80)))
         .filter(col("lev") <= maxLev)
         .select(least(col("id_a"), col("id_b")).as("doc_a"),
-          greatest(col("id_a"), col("id_b")).as("doc_b"), col("lev"))
-        .orderBy(col("doc_a"), col("doc_b"))
-        .persist() // pair-count-sized; every re-consumption is a cache read
-      // same build-attribution + intermediate-release pattern as
-      // minhashNearDupPairs: pay the build once, inside the memo
-      pairs.count()
+          greatest(col("id_a"), col("id_b")).as("doc_b"), col("lev")))
       normed.unpersist()
       pairs
     }
-  }
 
   val qDedupSorted = Q(
     (s, d) => SessionMemo.getOrElseUpdate(s, s"q_dedup_sorted:$d") {
@@ -1486,21 +1478,13 @@ object TextOps {
         sig.select(col("doc_id"), lit(b).as("band_idx"),
           col(s"band$b").as("band_val")))
         .reduce(_.unionByName(_))
-      val la = bands.select(col("doc_id").as("doc_a"), col("band_idx"), col("band_val"))
-      val lb = bands.select(col("doc_id").as("doc_b"), col("band_idx"), col("band_val"))
-      val cand = la.join(lb, Seq("band_idx", "band_val"))
-        .filter(col("doc_a") < col("doc_b"))
-        .select(col("doc_a"), col("doc_b")).distinct()
       val sa = sig.select(col("doc_id").as("doc_a"), col("simhash").as("sig_a"))
       val sb = sig.select(col("doc_id").as("doc_b"), col("simhash").as("sig_b"))
-      val pairs = cand.join(sa, Seq("doc_a")).join(sb, Seq("doc_b"))
+      cachedPairs(collidingPairs(bands, "band_idx", "band_val")
+        .join(sa, Seq("doc_a")).join(sb, Seq("doc_b"))
         .withColumn("hamming", expr("bit_count(sig_a ^ sig_b)"))
         .filter(col("hamming") <= maxHamming)
-        .select(col("doc_a"), col("doc_b"), col("hamming"))
-        .orderBy(col("doc_a"), col("doc_b"))
-        .persist() // pair-count-sized; makes each re-consumption a cache read
-      pairs.count() // build cost lands on the memo, not the first consumer
-      pairs
+        .select(col("doc_a"), col("doc_b"), col("hamming")))
     }
   }
 
@@ -1538,34 +1522,35 @@ object TextOps {
     * tell a curation pipeline WHICH evidence fired (a pair flagged by
     * 2+ methods is near-certain). Composes the graded queries' exact
     * code paths (all memoized, so the ensemble adds one cheap
-    * union+groupBy, not a recompute). Declared AFTER its three
-    * constituents: the oracle text is assembled eagerly from theirs.
+    * union+groupBy, not a recompute).
     *
     * PUBLIC composable form (exported via [[graft.Graft]]): takes any
     * (doc_id, text) frame; the constituents are the memoized generic
     * forms, so graded queries and facade callers share the same
     * per-session builds. */
   def ensembleNearDupPairs(docs: DataFrame): DataFrame = {
-    // four families, one provenance flag each: the symmetric-overlap
-    // trio plus containment, which alone catches subset quotations
-    // (a chunk of A pasted inside a much larger B scores low Jaccard
-    // but containment ≈ 1) — the reason a user reaching for "find my
-    // near-dups" must not have to know to call containmentPairs too
-    val flags = Seq("by_minhash", "by_sorted", "by_simhash", "by_containment")
-    def tagged(pairs: DataFrame, hot: String): DataFrame =
-      pairs.select(col("doc_a") +: col("doc_b") +:
-        flags.map(f => lit(if (f == hot) 1 else 0).as(f)): _*)
-    tagged(minhashNearDupPairs(docs), "by_minhash")
-      .unionByName(tagged(sortedNeighborhoodPairs(docs), "by_sorted"))
-      .unionByName(tagged(simhashPairs(docs), "by_simhash"))
-      .unionByName(tagged(containmentPairs(docs), "by_containment"))
+    val families = Seq(minhashNearDupPairs(docs), sortedNeighborhoodPairs(docs),
+      simhashPairs(docs), containmentPairs(docs))
+    val maxes = ensembleFlags.map(f => max(col(f)).as(f))
+    ensembleFlags.zip(families)
+      .map { case (hot, pairs) =>
+        pairs.select(col("doc_a") +: col("doc_b") +:
+          ensembleFlags.map(f => lit(if (f == hot) 1 else 0).as(f)): _*)
+      }
+      .reduce(_.unionByName(_))
       .groupBy(col("doc_a"), col("doc_b"))
-      .agg(max(col("by_minhash")).as("by_minhash"),
-        max(col("by_sorted")).as("by_sorted"),
-        max(col("by_simhash")).as("by_simhash"),
-        max(col("by_containment")).as("by_containment"))
+      .agg(maxes.head, maxes.tail: _*)
       .orderBy(col("doc_a"), col("doc_b"))
   }
+
+  /** The ensemble's four families, one provenance flag each, in the
+    * order both engines union them: the symmetric-overlap trio plus
+    * containment, which alone catches subset quotations (a chunk of A
+    * pasted inside a much larger B scores low Jaccard but containment
+    * ≈ 1) — the reason a user reaching for "find my near-dups" must
+    * not have to know to call containmentPairs too. */
+  private val ensembleFlags =
+    Seq("by_minhash", "by_sorted", "by_simhash", "by_containment")
 
   /** PUBLIC composable benchmark decontamination (exported via
     * [[graft.Graft]]): flag corpus docs sharing >= `minOverlap`
@@ -1600,23 +1585,9 @@ object TextOps {
     * straddle splits. The generic form clusters over the MinHash/LSH
     * pair set (the scale path); the graded [[qSplitLeakageSafe]] keeps
     * the exact-jaccard pair set its recursive-CTE oracle replays. */
-  def leakageSafeSplit(docs: DataFrame, threshold: Double = 0.5): DataFrame = {
-    val pairs = minhashNearDupPairs(docs, threshold)
-      .select(col("doc_a"), col("doc_b"))
-    val edges = SessionMemo.pinned(pairs
-      .union(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-      .toDF("u", "v"))
-    val clusters = componentLabels(edges)
-      .select(col("node").as("doc_id"), col("lbl").as("cluster_id"))
-    docs.select(col("doc_id"))
-      .join(clusters, Seq("doc_id"), "left")
-      .withColumn("cluster_id", coalesce(col("cluster_id"), col("doc_id")))
-      .withColumn("bucket", expr(s"${graft.Num.hashExpr("cluster_id")} % 10"))
-      .withColumn("split", expr(
-        "CASE WHEN bucket <= 7 THEN 'train' WHEN bucket = 8 THEN 'val' ELSE 'test' END"))
-      .select(col("doc_id"), col("cluster_id"), col("split"))
-      .orderBy(col("doc_id"))
-  }
+  def leakageSafeSplit(docs: DataFrame, threshold: Double = 0.5): DataFrame =
+    splitByCluster(docs, pairComponents(minhashNearDupPairs(docs, threshold))
+      .select(col("node").as("doc_id"), col("lbl").as("cluster_id")))
 
   /** Dedup screen quality — MinHash+LSH banding graded against the
     * exact-jaccard ground truth: one row of corpus-level evidence
@@ -1643,7 +1614,7 @@ object TextOps {
       val nmh = mh.agg(count(lit(1)).as("n_minhash"))
       // broadcast-scalar crossJoin: both sides are 1-row aggregates
       // (the EventsOps/GraphOps convention)
-      // zero-denominator guard (r16 ADVICE): an empty ground-truth or
+      // zero-denominator guard: an empty ground-truth or
       // band-pair set is vacuously satisfied — emit the 1000 sentinel
       // instead of a NULL-vs-NULL parity row on degenerate corpora
       hits.crossJoin(nmh)
@@ -1672,31 +1643,17 @@ object TextOps {
   // down the object — a strict val here would read it as null during
   // object init
   lazy val qDedupEnsemble = Q(
-    (s, d) => ensembleNearDupPairs(Tables.documents(s, d)),
-    s"""WITH mh_pairs AS (${qDedupMinhash.oracle.get}),
-       so_pairs AS (${qDedupSorted.oracle.get}),
-       sh_pairs AS (${qDedupSimhashPairs.oracle.get}),
-       ct_pairs AS (${qDedupContainment.oracle.get}),
-       u AS (
-         SELECT doc_a, doc_b, 1 AS by_minhash, 0 AS by_sorted,
-                0 AS by_simhash, 0 AS by_containment
-         FROM mh_pairs
-         UNION ALL
-         SELECT doc_a, doc_b, 0 AS by_minhash, 1 AS by_sorted,
-                0 AS by_simhash, 0 AS by_containment
-         FROM so_pairs
-         UNION ALL
-         SELECT doc_a, doc_b, 0 AS by_minhash, 0 AS by_sorted,
-                1 AS by_simhash, 0 AS by_containment
-         FROM sh_pairs
-         UNION ALL
-         SELECT doc_a, doc_b, 0 AS by_minhash, 0 AS by_sorted,
-                0 AS by_simhash, 1 AS by_containment
-         FROM ct_pairs)
-       SELECT doc_a, doc_b, MAX(by_minhash) AS by_minhash,
-         MAX(by_sorted) AS by_sorted, MAX(by_simhash) AS by_simhash,
-         MAX(by_containment) AS by_containment
-       FROM u GROUP BY doc_a, doc_b ORDER BY doc_a, doc_b""")
+    (s, d) => ensembleNearDupPairs(Tables.documents(s, d)), {
+      val families = Seq(qDedupMinhash, qDedupSorted, qDedupSimhashPairs, qDedupContainment)
+      val tagged = ensembleFlags.zip(families).map { case (hot, q) =>
+        s"""SELECT doc_a, doc_b, ${ensembleFlags.map(f =>
+          s"${if (f == hot) 1 else 0} AS $f").mkString(", ")}
+           FROM (${q.oracle.get})"""
+      }
+      s"""SELECT doc_a, doc_b, ${ensembleFlags.map(f => s"MAX($f) AS $f").mkString(", ")}
+         FROM (${tagged.mkString("\n UNION ALL\n")})
+         GROUP BY doc_a, doc_b ORDER BY doc_a, doc_b"""
+    })
 
   /** PUBLIC composable survivor selection (exported via
     * [[graft.Graft]]): cluster any (doc_id, text) frame by MinHash
@@ -1706,12 +1663,7 @@ object TextOps {
     * are trivially their own survivor and are omitted. */
   def survivorsByQuality(docs: DataFrame, qualityCol: String,
                          threshold: Double = 0.5): DataFrame = {
-    val pairs = minhashNearDupPairs(docs, threshold)
-      .select(col("doc_a"), col("doc_b"))
-    val edges = SessionMemo.pinned(pairs
-      .union(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-      .toDF("u", "v"))
-    val clusters = componentLabels(edges)
+    val clusters = pairComponents(minhashNearDupPairs(docs, threshold))
       .select(col("node").as("doc_id"), col("lbl").as("cluster_id"))
     val w = Window.partitionBy(col("cluster_id"))
       .orderBy(col(qualityCol).desc, col("doc_id").asc)
@@ -1932,12 +1884,10 @@ object TextOps {
         .persist()
     }
     // the final pair set is memoized like its sibling families (the
-    // ensemble and the graded query both consume it), persisted and
-    // materialized inside the build so Bench attributes the one-time
-    // cost to `memo_builds` rather than to the first consumer
+    // ensemble and the graded query both consume it)
     SessionMemo.getOrElseUpdate(docs.sparkSession,
       s"containment_pairs:${SessionMemo.planKey(docs)}:$k:$minPermille") {
-      val pairs = rare.as("a").join(rare.as("b"),
+      cachedPairs(rare.as("a").join(rare.as("b"),
           col("a.shingle") === col("b.shingle") && col("a.doc_id") < col("b.doc_id"))
         .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
         .agg(count(lit(1)).as("n_shared"))
@@ -1947,11 +1897,7 @@ object TextOps {
           expr("n_shared * 1000 DIV least(sz_a, sz_b)"))
         .filter(col("containment_permille") >= lit(minPermille.toLong))
         .select(col("doc_a"), col("doc_b"), col("n_shared"),
-          col("containment_permille"))
-        .orderBy(col("doc_a"), col("doc_b"))
-        .persist()
-      pairs.count()
-      pairs
+          col("containment_permille")))
     }
   }
 
@@ -2061,8 +2007,8 @@ object TextOps {
     // length filter (still applied below) — results are unchanged,
     // but a hot gram's self-join volume falls from nd² to
     // Σ per-(gram,bucket) products, pruning BEFORE the join instead
-    // of after the candidate distinct (round-8 exhibit: 11.7 s → the
-    // length spread of the corpus divides the dominant term).
+    // of after the candidate distinct (the length spread of the
+    // corpus divides the dominant term).
     val bucket = maxDist + 1
     val build = rare.withColumn("lb",
       expr(s"CAST(length(name) DIV $bucket AS INT)"))
@@ -2151,9 +2097,9 @@ object TextOps {
     // a bounded number of times inside componentLabels (count + collect
     // in the union-find branch; the eagerly-pinned propagation rounds
     // in the distributed branch), not rebuilt iteratively, so the
-    // CacheManager cache is the right tool — and unlike the previous
-    // localCheckpoint shape, releasing it in the finally is silent and
-    // safe (a mistimed release recomputes instead of losing data)
+    // CacheManager cache is the right tool — and unlike a
+    // localCheckpoint, releasing it in the finally is silent and safe
+    // (a mistimed release recomputes instead of losing data)
     val edges = pairs
       .union(pairs.select(col("v").as("u"), col("u").as("v")))
       .toDF("u", "v")
@@ -2168,7 +2114,7 @@ object TextOps {
     // INCLUDING singletons — name-pool-sized, not match-graph-sized)
     // sat exactly on the planner's broadcast-threshold boundary, so
     // the join flipped BHJ → SMJ+extra-shuffle between sf0.01 and
-    // sf0.1 (caught by the census --crosssf sf0.1 leg, r16). The
+    // sf0.1 (the census --crosssf sf0.1 leg catches such flips). The
     // window needs ONE hash exchange on entity_id at every scale —
     // same bytes the SMJ shape shuffled, minus the duplicate
     // aggregate subtree and the join itself.
@@ -2179,14 +2125,16 @@ object TextOps {
       .orderBy(col("name"))
   }
 
-  /** Graded exhibit: fuzzy matches among the 64 distinct part names
-    * (edit distance ≤ 2 catches the "cold/old", "new/red"
-    * adjective swaps). The oracle replays gram blocking + banded cap
-    * + the full levenshtein confirm. */
-  val qFuzzyMatch = Q(
-    (s, d) => fuzzyMatchPairs(Tables.part(s, d), "p_name"),
-    """WITH names AS (
-         SELECT DISTINCT p_name AS name FROM part WHERE length(p_name) >= 3),
+  /** Oracle twin of [[fuzzyMatchPairs]] at the defaults (q = 3,
+    * maxDist = 2, cap 1000) over a `names(name, ...)` CTE body: gram
+    * blocking + the hot-gram cap + the full levenshtein confirm →
+    * `pairs(name_a, name_b)`. The engine's short tier (names under
+    * q·(maxDist+1) = 9 chars have no q-gram guarantee and are blocked
+    * on shared unigrams) is replayed as all-pairs within that stratum:
+    * a candidate superset, which the confirm converges to the same
+    * true-pair set. Splice after WITH / WITH RECURSIVE. */
+  private def duckFuzzyCtes(names: String): String =
+    s"""names AS ($names),
        grams AS (
          SELECT DISTINCT name, substr(name, CAST(g AS INT), 3) AS gram
          FROM names, UNNEST(range(1, length(name) - 1)) AS t(g)),
@@ -2198,19 +2146,23 @@ object TextOps {
          SELECT DISTINCT a.name AS name_a, b.name AS name_b
          FROM rare a JOIN rare b ON a.gram = b.gram AND a.name < b.name
          UNION
-         -- short tier: both names under q·(maxDist+1)=9 chars have no
-         -- q-gram guarantee; the engine blocks them on shared
-         -- unigrams, replayed here as all-pairs-within-the-stratum (a
-         -- candidate superset — the confirm below converges both to
-         -- the same true-pair set)
          SELECT a.name, b.name FROM names a JOIN names b
          ON a.name < b.name
-         WHERE length(a.name) < 9 AND length(b.name) < 9)
+         WHERE length(a.name) < 9 AND length(b.name) < 9),
+       pairs AS (
+         SELECT name_a, name_b FROM cand
+         WHERE abs(length(name_a) - length(name_b)) <= 2
+           AND levenshtein(name_a, name_b) <= 2)"""
+
+  /** Graded exhibit: fuzzy matches among the 64 distinct part names
+    * (edit distance ≤ 2 catches the "cold/old", "new/red"
+    * adjective swaps). */
+  val qFuzzyMatch = Q(
+    (s, d) => fuzzyMatchPairs(Tables.part(s, d), "p_name"),
+    s"""WITH ${duckFuzzyCtes(
+         "SELECT DISTINCT p_name AS name FROM part WHERE length(p_name) >= 3")}
        SELECT name_a, name_b, CAST(levenshtein(name_a, name_b) AS INT) AS dist
-       FROM cand
-       WHERE abs(length(name_a) - length(name_b)) <= 2
-         AND levenshtein(name_a, name_b) <= 2
-       ORDER BY name_a, name_b""")
+       FROM pairs ORDER BY name_a, name_b""")
 
   /** Graded exhibit: the part catalog resolved to entities — every
     * name gets an entity_id (min p_partkey over its fuzzy-match
@@ -2219,7 +2171,7 @@ object TextOps {
     * name-pool-sized, so the quadratic closure is safe THERE; the
     * Spark side uses [[componentLabels]]). */
   val qEntityResolution = Q(
-    // result-frame memo, the qDedupClusters convention (r11):
+    // result-frame memo, the qDedupClusters convention:
     // entityResolve runs its connected-components step EAGERLY at
     // call time (edge count + union-find collect on the graded
     // graph), so without the memo every bench sample re-paid the
@@ -2228,29 +2180,9 @@ object TextOps {
     (s, d) => SessionMemo.getOrElseUpdate(s, s"q_entity_resolution:$d") {
       entityResolve(Tables.part(s, d), "p_name", "p_partkey")
     },
-    """WITH RECURSIVE names AS (
-         SELECT p_name AS name, MIN(p_partkey) AS nid FROM part
-         WHERE length(p_name) >= 3 GROUP BY 1),
-       grams AS (
-         SELECT DISTINCT name, substr(name, CAST(g AS INT), 3) AS gram
-         FROM names, UNNEST(range(1, length(name) - 1)) AS t(g)),
-       freq AS (SELECT gram, count(*) AS nd FROM grams GROUP BY 1),
-       rare AS (
-         SELECT g.name, g.gram FROM grams g JOIN freq USING (gram)
-         WHERE nd BETWEEN 2 AND 1000),
-       cand AS (
-         SELECT DISTINCT a.name AS name_a, b.name AS name_b
-         FROM rare a JOIN rare b ON a.gram = b.gram AND a.name < b.name
-         UNION
-         -- short tier, as in q_fuzzy_match: all-pairs within the
-         -- sub-9-char stratum replays the engine's unigram blocks
-         SELECT a.name, b.name FROM names a JOIN names b
-         ON a.name < b.name
-         WHERE length(a.name) < 9 AND length(b.name) < 9),
-       pairs AS (
-         SELECT name_a, name_b FROM cand
-         WHERE abs(length(name_a) - length(name_b)) <= 2
-           AND levenshtein(name_a, name_b) <= 2),
+    s"""WITH RECURSIVE ${duckFuzzyCtes(
+         "SELECT p_name AS name, MIN(p_partkey) AS nid FROM part " +
+           "WHERE length(p_name) >= 3 GROUP BY 1")},
        pe AS (SELECT na.nid AS u, nb.nid AS v
               FROM pairs
               JOIN names na ON name_a = na.name
@@ -2439,7 +2371,7 @@ object TextOps {
       .agg(count(lit(1)).as("n_clusters"))
     val singles = docs.agg(count(lit(1)).as("n_docs"))
       .crossJoin(per.agg(coalesce(sum(col("cluster_size")), lit(0L)).as("n_in")))
-      // invariant enforced loudly (ADVICE r10): sum(cluster_size) over
+      // invariant enforced loudly: sum(cluster_size) over
       // the cluster table can never exceed the corpus — a negative
       // singleton count means the cluster table carries members not in
       // `docs` (or inflated sizes), and silently filtering that row
@@ -2503,8 +2435,8 @@ object TextOps {
     * two-columns-wide. */
   /** PUBLIC composable form (exported via [[graft.Graft]]). `sourceCol`
     * names the stratum column (API parity with
-    * [[crossSourceDupMatrix]], ADVICE r10 — the two are documented as
-    * a family); the output column is always `source`. */
+    * [[crossSourceDupMatrix]] — the two are documented as a family);
+    * the output column is always `source`. */
   def dedupRateBySource(docs: DataFrame, clusters: DataFrame,
                         sourceCol: String = "source"): DataFrame = {
     val members = clusters.select(col("doc_id"), col("cluster_id"))

@@ -3,19 +3,75 @@ package graft.tools
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 
-/** Regenerates docs/PLANS.md: formatted physical plans of the headline
-  * queries, so plan-shape review (pushdown, broadcast, partial agg) is
-  * part of the repo rather than a REPL session. Run:
-  * `sbt "runMain graft.tools.DumpPlans"`. */
+/** The plan dumper, in two forms.
+  *
+  * `sbt "runMain graft.tools.DumpPlans"` regenerates docs/PLANS.md:
+  * formatted physical plans of the headline queries at sf0.001, so
+  * plan-shape review (pushdown, broadcast, partial agg) is part of the
+  * repo rather than a REPL session. Each query's operator tree is
+  * written whole; only its per-node detail section is cut to keep the
+  * file reviewable, behind a visible marker.
+  *
+  * `sbt "runMain graft.tools.DumpPlans <outdir> <suffix> q_a,q_b,..."`
+  * writes each named query's full, uncut plan to
+  * `<outdir>/<query>_<suffix>.txt`, at the bench sf and session confs
+  * (`SPARK_GRAFT_SF_DIR`, default sf0.1; `SPARK_GRAFT_CPUS`, default
+  * 32) so the plans match what the bench times — the before/after
+  * evidence of a plan change, e.g.
+  * `runMain graft.tools.DumpPlans plans/bm25 before q_bm25,q_copurchase`. */
 object DumpPlans {
-  def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
+  /** Characters of per-node detail kept per query in docs/PLANS.md. */
+  private val DetailBudget = 6000
+
+  private def session(cpus: String): SparkSession = {
+    val spark = SparkSession.builder().master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    spark
+  }
+
+  private def formatted(spark: SparkSession, name: String, sfDir: String): String =
+    graft.SparkEntry.queries(name)(spark, sfDir).queryExecution
+      .explainString(org.apache.spark.sql.execution.FormattedMode)
+
+  /** The operator tree whole, then at most `budget` characters of the
+    * node details (the `(1) ...` sections after the tree), cut at a
+    * line end and marked. */
+  private def cutDetails(plan: String, budget: Int): String = {
+    val treeEnd = plan.indexOf("\n\n(")
+    if (treeEnd < 0 || plan.length - treeEnd <= budget) plan
+    else {
+      val keep = plan.lastIndexOf('\n', treeEnd + budget) max treeEnd
+      plan.substring(0, keep) +
+        s"\n\n... [node details cut: ${plan.length - keep} more chars; " +
+        "the argument form of graft.tools.DumpPlans writes the full plan]"
+    }
+  }
+
+  def main(args: Array[String]): Unit =
+    if (args.isEmpty) dumpHeadline()
+    else {
+      require(args.length >= 3, "usage: DumpPlans [<outdir> <suffix> q_a,q_b,...]")
+      val outDir = Paths.get(args(0))
+      val names = args(2).split(",").map(_.trim).filter(_.nonEmpty)
+      val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+      val spark = session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+      graft.Quiet.muteKnownBenign()
+      Files.createDirectories(outDir)
+      names.foreach { name =>
+        val txt = formatted(spark, name, sfDir)
+        Files.writeString(outDir.resolve(s"${name}_${args(1)}.txt"), txt)
+        println(s"wrote $outDir/${name}_${args(1)}.txt (${txt.length} chars)")
+      }
+      spark.stop()
+    }
+
+  private def dumpHeadline(): Unit = {
+    val spark = session("4")
     val d = "/root/testdata/sf0.001"
     val headline = Seq(
       "q1_pricing_summary", "q_filter_project", "q_join_broadcast",
@@ -57,12 +113,11 @@ object DumpPlans {
     sb.append("Generated by `graft.tools.DumpPlans` (sf0.001, local[4], AQE\n")
     sb.append("initial plans). What to look for per query is annotated in\n")
     sb.append("PlanSpec; this file exists so plan shapes are reviewable in the\n")
-    sb.append("repo and diffs show up when a change alters them.\n")
+    sb.append("repo and diffs show up when a change alters them. Each operator\n")
+    sb.append("tree is whole; long node-detail sections are cut where marked.\n")
     headline.foreach { name =>
-      val df = graft.SparkEntry.queries(name)(spark, d)
       sb.append(s"\n## $name\n\n```\n")
-      sb.append(df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode).take(6000))
+      sb.append(cutDetails(formatted(spark, name, d), DetailBudget))
       sb.append("\n```\n")
     }
     Files.writeString(Paths.get("docs/PLANS.md"), sb.toString)

@@ -17,6 +17,20 @@ class NorthStarSpec extends SparkSpec {
     val lsh = run("q_dedup_minhash")
       .select("doc_a", "doc_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(lsh === exact)
+    // with equal pair sets, the facade's decisions over the MinHash
+    // pairs equal the graded ones over the exact pairs
+    val docs = Tables.documents(spark, sfDir)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
+    assert(rows(Graft.leakageSafeSplit(docs)) === rows(run("q_split_leakage_safe")))
+    val survivorCols = Seq("cluster_id", "survivor_id", "n_members").map(col)
+    val survivors = rows(run("q_dedup_survivors").select(survivorCols: _*))
+    assert(survivors.nonEmpty)
+    assert(rows(Graft.survivorsByQuality(docs, "n_chars").select(survivorCols: _*)) ===
+      survivors)
+    val screen = rows(run("q_dedup_incremental"))
+    assert(screen.nonEmpty)
+    assert(rows(Graft.nearDupScreen(docs.filter(col("doc_id") % 2 === 0),
+      docs.filter(col("doc_id") % 2 === 1)).orderBy("doc_id")) === screen)
   }
 
   test("block-sharded exact jaccard equals the broadcast kernel, any block count") {
