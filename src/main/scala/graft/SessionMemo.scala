@@ -76,15 +76,32 @@ object SessionMemo {
     * filling a persisted shared stage lands on the memo entry rather
     * than on the first consumer action. Use ONLY for builds whose
     * returned frame (or an upstream persist inside it) is cached —
-    * eagerly counting an unpersisted plan would be pure waste. */
+    * eagerly counting an unpersisted plan would be pure waste.
+    *
+    * What the entry retains once filled, when the returned frame is
+    * persisted ([[releaseBuild]]): its cached rows, plus the
+    * serialized pieces of the broadcasts its build planned. The
+    * deserialized broadcast values (hash relations, often far larger
+    * than the rows) are freed; a lost cached block recomputes through
+    * lineage by re-reading the pieces. An unpersisted frame keeps its
+    * broadcasts, since each of its executions reuses them. */
   def materialized(s: SparkSession, key: String)(build: => DataFrame): DataFrame =
     forSession(maps, s).getOrElseUpdate(key, {
       val t0 = System.nanoTime()
       val df = build
       df.count()
+      releaseBuild(df)
       forSession(times, s).put(key, (System.nanoTime() - t0) / 1e9)
       df
     })
+
+  /** The release step of a filled persisted frame: drops the
+    * deserialized values of the broadcasts its cached plan completed,
+    * keeping their serialized pieces (see [[materialized]]). A no-op
+    * for a frame that is not persisted. */
+  private[graft] def releaseBuild(df: DataFrame): Unit =
+    org.apache.spark.sql.graft.Bridge.cachedPlan(df)
+      .foreach(org.apache.spark.sql.graft.Bridge.releaseBroadcastValues)
 
   /** Seconds spent building each memo entry of this session so far
     * (closure time; plus materialization for [[materialized]] entries). */
@@ -159,6 +176,12 @@ object SessionMemo {
   * stays one node deep per round exactly as with `localCheckpoint`
   * (no replanning the whole history each iteration).
   *
+  * What a pin retains once built: the snapshot rows, plus the
+  * serialized pieces of the broadcasts `source`'s executed plan
+  * completed. The constructor frees those broadcasts' deserialized
+  * values right after the fill, as [[SessionMemo.materialized]] does,
+  * so a recompute re-reads the pieces.
+  *
   * `free()` is idempotent and silent; call it once every consumer of
   * the PREVIOUS round has run, so dead frames don't sit in the block
   * manager until a driver GC happens to surface them to the
@@ -169,6 +192,8 @@ private[graft] final class PinnedFrame(source: DataFrame) {
     .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
   rdd.count() // eager, like localCheckpoint(): consumers must never
               // cascade a recompute through freed earlier rounds
+  org.apache.spark.sql.graft.Bridge
+    .releaseBroadcastValues(source.queryExecution.executedPlan)
   val df: DataFrame = org.apache.spark.sql.graftshim.InternalFrames
     .ofInternalRdd(source.sparkSession, rdd, source.schema)
   def free(): Unit = { rdd.unpersist(blocking = false); () }

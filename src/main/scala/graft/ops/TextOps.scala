@@ -287,13 +287,20 @@ object TextOps {
         .as(Seq("band_idx", "band_hash")))
   }
 
-  /** Band-collision candidate id pairs (doc_a < doc_b, distinct) from
-    * a shingled frame — the pre-confirm stage of the banding
-    * pipeline, factored so [[minhashNearDupPairs]] and the
-    * second-decade candidate-volume spec (ScaleSmokeSpec) measure the
-    * IDENTICAL join. */
-  private[graft] def bandCandidatePairs(sh: DataFrame): DataFrame =
-    collidingPairs(minhashBands(sh), "band_idx", "band_hash")
+  /** Runs `f` over the band-collision candidate id pairs (doc_a <
+    * doc_b, distinct) of a shingled frame — the pre-confirm stage of
+    * the banding pipeline, factored so [[minhashNearDupPairs]] and the
+    * candidate-volume specs (ScaleSmokeSpec) measure the IDENTICAL
+    * join. The band frame is [[materialized]] for the duration of `f`
+    * and unpersisted after it: both sides of the self-join then read
+    * one filled cache, so the signature aggregation runs once and the
+    * join's build side is fixed by equal exact sizes rather than by
+    * whichever of two identical shuffle stages finishes first. */
+  private def withBandCandidates[T](sh: DataFrame)(f: DataFrame => T): T = {
+    val bands = materialized(minhashBands(sh))
+    try f(collidingPairs(bands, "band_idx", "band_hash"))
+    finally bands.unpersist()
+  }
 
   /** The candidate stage of every banded pair family: distinct
     * `(doc_a, doc_b)`, doc_a < doc_b, of `keyed` rows sharing all of
@@ -326,18 +333,22 @@ object TextOps {
     * over the cache before it holds data — Spark sizes an unfilled
     * cache by its plan estimate, a filled one by its bytes, so a
     * memoized frame planned before the fill can pick another join
-    * build side, and shuffle count, than one planned after it. */
+    * build side, and shuffle count, than one planned after it. Once
+    * filled, the frame keeps its rows and its build's serialized
+    * broadcast pieces, not the broadcast values
+    * ([[graft.SessionMemo.releaseBuild]]). */
   private def materialized(df: DataFrame): DataFrame = {
     val cached = df.persist()
     cached.count()
+    SessionMemo.releaseBuild(cached)
     cached
   }
 
-  /** Spec-only convenience: band candidates straight from a (doc_id,
-    * text) frame, through the same shingle pipeline the graded query
-    * uses. */
-  private[graft] def bandCandidatesOf(docs: DataFrame): DataFrame =
-    bandCandidatePairs(shingleSets(docs))
+  /** Spec-only convenience: the band-candidate count of a (doc_id,
+    * text) frame, through the same shingle pipeline and band join the
+    * graded query uses. */
+  private[graft] def bandCandidateCount(docs: DataFrame): Long =
+    withBandCandidates(shingleSets(docs))(_.count())
 
   /** MinHash + LSH banding near-dup detection — the scale path: 32
     * minhashes per doc, 8 bands × 4 rows; only same-band docs are
@@ -366,18 +377,22 @@ object TextOps {
       val sh = shingleSets(docs).persist()
       val shA = sh.select(col("doc_id").as("doc_a"), col("shingles").as("sh_a"), col("sz").as("sz_a"))
       val shB = sh.select(col("doc_id").as("doc_b"), col("shingles").as("sh_b"), col("sz").as("sz_b"))
-      val pairs = cachedPairs(withJaccard(
-        bandCandidatePairs(sh).join(shA, Seq("doc_a")).join(shB, Seq("doc_b")), "a", "b")
-        .filter(col("jaccard") >= threshold)
-        .select(col("doc_a"), col("doc_b"), col("jaccard")))
+      val pairs = withBandCandidates(sh) { cand =>
+        cachedPairs(withJaccard(
+          cand.join(shA, Seq("doc_a")).join(shB, Seq("doc_b")), "a", "b")
+          .filter(col("jaccard") >= threshold)
+          .select(col("doc_a"), col("doc_b"), col("jaccard")))
+      }
       sh.unpersist()
       pairs
     }
 
+  /** The session's shared MinHash pair index itself: no outer memo,
+    * the `minhash_pairs` entry above is the one build (read also by
+    * the ensemble, recall, cross-source, split and survivors
+    * queries). */
   val qDedupMinhash = Q(
-    (s, d) => SessionMemo.getOrElseUpdate(s, s"q_dedup_minhash:$d") {
-      minhashNearDupPairs(Tables.documents(s, d))
-    },
+    (s, d) => minhashNearDupPairs(Tables.documents(s, d)),
     qNgramJaccard.oracle) // exact pairs: see the recall note above
 
   /** Incremental near-dup dedup — the production ingest shape: screen

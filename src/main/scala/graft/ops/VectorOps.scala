@@ -265,7 +265,7 @@ object VectorOps {
   private[graft] def bucketPairsOf(e: DataFrame): DataFrame =
     scored(e, graded(e), Seq("bucket")).select(col("query_id"), col("neighbor_id"))
 
-  /** Spec-only hook (the [[graft.ops.TextOps.bandCandidatesOf]]
+  /** Spec-only hook (the [[graft.ops.TextOps.bandCandidateCount]]
     * convention): within-bucket candidate id pairs for the graded
     * query set from any (vec_id, embedding) frame, through the same
     * signature pipeline the graded LSH queries use — so the

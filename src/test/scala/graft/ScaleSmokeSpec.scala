@@ -636,7 +636,7 @@ class ScaleSmokeSpec extends SparkSpec {
     // 10% exact-twin rate (doc id % 10 == 9 clones doc id-1; all
     // other docs draw disjoint hashed token streams), run the
     // IDENTICAL pipeline stages the graded query runs
-    // (TextOps.bandCandidatesOf = its pre-confirm candidate join;
+    // (TextOps.bandCandidateCount = its pre-confirm candidate join;
     // minhashNearDupPairs = its confirmed output), and pin:
     //  - confirmed pair volume EXACTLY linear (n/10 at both sizes —
     //    every planted twin found, nothing else confirmed);
@@ -649,7 +649,7 @@ class ScaleSmokeSpec extends SparkSpec {
     //    pointer-jumping branch (bound = 0) emit IDENTICAL labels.
     def volumes(n: Long): (Long, Long) = {
       val c = twinCorpus(n)
-      (ops.TextOps.bandCandidatesOf(c).count(),
+      (ops.TextOps.bandCandidateCount(c),
         graft.Graft.minhashNearDupPairs(c).count())
     }
     val (cand1, conf1) = volumes(20000L)
@@ -687,8 +687,8 @@ class ScaleSmokeSpec extends SparkSpec {
     // as the in-gate decade tests.
     assume(sys.env.get("SPARK_GRAFT_THIRD_DECADE").contains("1"),
       "set SPARK_GRAFT_THIRD_DECADE=1 (costs minutes; values pinned in docs/SCALE.md)")
-    val cand10 = ops.TextOps.bandCandidatesOf(twinCorpus(200000L)).count()
-    val cand100 = ops.TextOps.bandCandidatesOf(twinCorpus(2000000L)).count()
+    val cand10 = ops.TextOps.bandCandidateCount(twinCorpus(200000L))
+    val cand100 = ops.TextOps.bandCandidateCount(twinCorpus(2000000L))
     val bandRatio = cand100.toDouble / cand10
     info(f"band candidates $cand10%d -> $cand100%d (${bandRatio}%.2fx for 10x docs)")
     assert(bandRatio > 8.0 && bandRatio < 13.0,
