@@ -97,6 +97,11 @@ object BenchRules {
   def anchorAppliesTo(anchor: Anchor, cpus: String): Boolean =
     anchor.cpus.forall(_ == cpus)
 
+  /** The leg's `anchored` stamp: a fixture loaded AND applies at this
+    * core count. A fixture that failed to load anchors nothing. */
+  def anchored(anchorE: Either[String, Anchor], cpus: String): Boolean =
+    anchorE.exists(anchorAppliesTo(_, cpus))
+
   /** One fixture per anchored sf, keyed by the sf dir's basename:
     * /root/testdata/sf0.1 -> canary_budgets_sf0.1.tsv. */
   def fixturePath(sfDir: String): Path =

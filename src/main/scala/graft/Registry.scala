@@ -13,4 +13,22 @@ case class Q(fn: (SparkSession, String) => DataFrame, oracle: Option[String])
 object Q {
   def apply(fn: (SparkSession, String) => DataFrame, sql: String): Q =
     Q(fn, Some(sql))
+
+  /** The star-schema tables a SQL-entry query may name. */
+  private val starTables =
+    Seq("region", "nation", "customer", "supplier", "part", "orders", "lineitem")
+
+  /** A SQL-entry query: ONE text, which Spark runs over the star-schema
+    * tables registered as temp views under their bare names, and which
+    * DuckDB runs as the oracle over the same parquet tables. The text
+    * is written in the spelling both engines accept; hints stay in it,
+    * since DuckDB reads `/*+ … */` as a comment. `s.sql` analyzes
+    * eagerly, so a frame already built keeps the tables it resolved
+    * when the views are later re-registered at another sf. */
+  def sql(text: String): Q = Q(
+    (s, d) => {
+      starTables.foreach(t => Tables.read(s, d, t).createOrReplaceTempView(t))
+      s.sql(text)
+    },
+    text)
 }

@@ -7,6 +7,21 @@ import org.apache.spark.sql.{SparkSession, DataFrame}
   * DuckDB oracle twin (where SQL-expressible). */
 object SparkEntry {
 
+  /** A local session builder with the settings every output depends
+    * on: `cpus` task slots and as many shuffle partitions, a UTC
+    * session time zone (the events reader's typed read is
+    * value-identical to the oracle's naive read only in UTC), and
+    * nanosecond parquet timestamps surfaced as Long (the events
+    * reader's other branch). Every main builds its session here and
+    * adds only its own extras. */
+  def localSession(cpus: String): SparkSession.Builder =
+    SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.ui.enabled", "false")
+
   /** All named queries with their optional oracles. */
   def all: Map[String, Q] =
     ops.Relational.defs ++ ops.Functions.defs ++ etl.Medallion.defs ++

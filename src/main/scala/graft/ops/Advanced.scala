@@ -10,29 +10,14 @@ object Advanced {
 
   /** Uncorrelated scalar subquery (decimal-exact avg on both sides so
     * the threshold is bit-identical across engines). */
-  val qSubqueryScalar = Q(
-    (s, d) => {
-      Tables.orders(s, d).createOrReplaceTempView("sq_orders")
-      s.sql(
-        s"""SELECT o_orderkey, o_totalprice FROM sq_orders
-           WHERE o_totalprice > 1.8 * (
-             SELECT ${Num.sqlAvg("o_totalprice")} FROM sq_orders)
-           ORDER BY o_orderkey""")
-    },
+  val qSubqueryScalar = Q.sql(
     s"""SELECT o_orderkey, o_totalprice FROM orders
-       WHERE o_totalprice > 1.8 * (SELECT ${Num.sqlAvg("o_totalprice")} FROM orders)
+       WHERE o_totalprice > 1.8 * (
+         SELECT ${Num.sqlAvg("o_totalprice")} FROM orders)
        ORDER BY o_orderkey""")
 
   /** IN / NOT IN subqueries (planned as semi/anti joins). */
-  val qSubqueryIn = Q(
-    (s, d) => {
-      Tables.orders(s, d).createOrReplaceTempView("sqin_orders")
-      Tables.customer(s, d).createOrReplaceTempView("sqin_customer")
-      s.sql(
-        """SELECT o_orderkey, o_custkey FROM sqin_orders
-           WHERE o_custkey IN (SELECT c_custkey FROM sqin_customer WHERE c_acctbal < 0)
-           ORDER BY o_orderkey""")
-    },
+  val qSubqueryIn = Q.sql(
     """SELECT o_orderkey, o_custkey FROM orders
        WHERE o_custkey IN (SELECT c_custkey FROM customer WHERE c_acctbal < 0)
        ORDER BY o_orderkey""")

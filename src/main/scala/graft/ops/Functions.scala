@@ -225,28 +225,17 @@ object Functions {
   /** Null-semantics pin — the cross-engine drift zone an engine
     * switch actually breaks on: COUNT(*) vs COUNT(col) vs
     * COUNT(DISTINCT col) over nulls, aggregate null-skipping with
-    * COALESCE imputation, null-safe equality (Spark `<=>` ≡ DuckDB
-    * `IS NOT DISTINCT FROM` — different spelling, same three-valued
-    * escape hatch), a NULL group key (one group, not dropped), and
-    * explicit NULLS FIRST ordering (Spark defaults nulls-first ASC,
-    * DuckDB nulls-LAST — unpinned, the same query returns different
-    * row orders). Nulls are induced with NULLIF so the synthetic
-    * no-null tables still exercise every path. */
-  val qNullSemantics = Q(
-    (s, d) => {
-      Tables.lineitem(s, d).createOrReplaceTempView("ns_lineitem")
-      s.sql(
-        s"""SELECT NULLIF(l_returnflag, 'N') AS flag,
-             COUNT(*) AS n_rows,
-             COUNT(NULLIF(l_discount, 0.0)) AS n_disc_nonnull,
-             CAST(COUNT(DISTINCT NULLIF(l_linestatus, 'F')) AS BIGINT) AS n_status,
-             ${Num.sqlSum("COALESCE(NULLIF(l_discount, 0.0), 0.05)")} AS sum_imputed,
-             CAST(SUM(CASE WHEN NULLIF(l_discount, 0.0) <=> NULLIF(l_tax, 0.0)
-                           THEN 1 ELSE 0 END) AS BIGINT) AS n_nullsafe_eq
-           FROM ns_lineitem
-           GROUP BY NULLIF(l_returnflag, 'N')
-           ORDER BY flag ASC NULLS FIRST""")
-    },
+    * COALESCE imputation, null-safe equality, a NULL group key (one
+    * group, not dropped), and explicit NULLS FIRST ordering (Spark
+    * defaults nulls-first ASC, DuckDB nulls-LAST — unpinned, the same
+    * query returns different row orders). Nulls are induced with
+    * NULLIF so the synthetic no-null tables still exercise every path.
+    * One text runs in both engines, so the SPELLING pin is gone:
+    * `IS NOT DISTINCT FROM` parses to Spark's `EqualNullSafe`, the
+    * same operator as `<=>`. The SEMANTIC pin stays: both engines
+    * must count a null/null pair as equal and a null/value pair as
+    * not equal. */
+  val qNullSemantics = Q.sql(
     s"""SELECT NULLIF(l_returnflag, 'N') AS flag,
          COUNT(*) AS n_rows,
          COUNT(NULLIF(l_discount, 0.0)) AS n_disc_nonnull,

@@ -644,27 +644,14 @@ object Relational {
        FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)
        ORDER BY o_orderstatus ASC NULLS FIRST, o_orderpriority ASC NULLS FIRST""")
 
-  /** GROUPING SETS via the SQL surface (spark.sql over a temp view) —
-    * exhibits that the engine exposes Spark SQL, not just DataFrames. */
+  /** GROUPING SETS through the SQL entry path ([[Q.sql]]). */
   // GROUPING() flags disambiguate "null because the column was
   // aggregated away" from "null in the data" — the classic subtotal
   // pitfall; both engines emit 1 for the aggregated-away case. The
   // flags also close the ORDER BY: on a fixture with data nulls, a
   // subtotal row would otherwise TIE the grand total on the key
   // columns and row order would be engine-dependent
-  val qGroupingSets = Q(
-    (s, d) => {
-      Tables.lineitem(s, d).createOrReplaceTempView("gs_lineitem")
-      s.sql(
-        """SELECT l_returnflag, l_linestatus,
-             CAST(GROUPING(l_returnflag) AS INT) AS g_flag,
-             CAST(GROUPING(l_linestatus) AS INT) AS g_status,
-             COUNT(*) AS n
-           FROM gs_lineitem
-           GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-           ORDER BY l_returnflag ASC NULLS FIRST,
-             l_linestatus ASC NULLS FIRST, g_flag, g_status""")
-    },
+  val qGroupingSets = Q.sql(
     """SELECT l_returnflag, l_linestatus,
          CAST(GROUPING(l_returnflag) AS INT) AS g_flag,
          CAST(GROUPING(l_linestatus) AS INT) AS g_status,
@@ -700,35 +687,17 @@ object Relational {
         .distinct().orderBy(col("nationkey")),
     s"($richCustSql) UNION ($richSuppSql) ORDER BY nationkey")
 
-  /** UNION ALL, aggregated to a deterministic grain. */
-  /** The pure-SQL entry path: TPC-H Q3 (shipping priority) written as
-    * `spark.sql` text over temp views — same Catalyst plan space as
-    * the DataFrame API (broadcast dim via hint, SMJ fact-fact, partial
-    * agg, top-10 as TakeOrderedAndProject), proving a SQL-first user
-    * of the engine gets the same operators and the same oracle
-    * guarantees. */
-  val qSqlQ3 = Q(
-    (s, d) => {
-      Tables.customer(s, d).createOrReplaceTempView("sql_customer")
-      Tables.orders(s, d).createOrReplaceTempView("sql_orders")
-      Tables.lineitem(s, d).createOrReplaceTempView("sql_lineitem")
-      s.sql(
-        s"""SELECT /*+ BROADCAST(c) */ l_orderkey,
-             ${Num.sqlSum("l_extendedprice * (1.0 - l_discount)")} AS revenue,
-             DATE_FORMAT(o_orderdate, 'yyyy-MM-dd') AS orderdate, o_orderpriority
-           FROM sql_customer c
-           JOIN sql_orders o ON c_custkey = o_custkey
-           JOIN sql_lineitem l ON l_orderkey = o_orderkey
-           WHERE c_mktsegment = 'BUILDING'
-             AND o_orderdate < TIMESTAMP '1995-03-15'
-             AND l_shipdate > TIMESTAMP '1995-03-15'
-           GROUP BY l_orderkey, o_orderdate, o_orderpriority
-           ORDER BY revenue DESC, l_orderkey
-           LIMIT 10""")
-    },
-    s"""SELECT l_orderkey,
+  /** TPC-H Q3 (shipping priority) as SQL text ([[Q.sql]]): a SQL-first
+    * user gets the same Catalyst plan space as the DataFrame API
+    * (broadcast dim via hint, SMJ fact-fact, partial agg, top-10 as
+    * TakeOrderedAndProject) and the same oracle guarantee. The order
+    * date prints through `CAST(… AS DATE)` then `STRING`, the ISO
+    * `yyyy-MM-dd` form in both engines (the Spark session runs in
+    * UTC, and DuckDB reads the column as a naive TIMESTAMP). */
+  val qSqlQ3 = Q.sql(
+    s"""SELECT /*+ BROADCAST(c) */ l_orderkey,
          ${Num.sqlSum("l_extendedprice * (1.0 - l_discount)")} AS revenue,
-         STRFTIME(o_orderdate, '%Y-%m-%d') AS orderdate, o_orderpriority
+         CAST(CAST(o_orderdate AS DATE) AS STRING) AS orderdate, o_orderpriority
        FROM customer c
        JOIN orders o ON c_custkey = o_custkey
        JOIN lineitem l ON l_orderkey = o_orderkey
@@ -739,33 +708,14 @@ object Relational {
        ORDER BY revenue DESC, l_orderkey
        LIMIT 10""")
 
-  /** SQL path #5: TPC-H Q21-shaped blame query (suppliers who were
+  /** TPC-H Q21-shaped blame query (suppliers who were
     * the SOLE late shipper on a multi-supplier order) — the
     * EXISTS + correlated NOT EXISTS pair, which planners turn into a
     * left-semi and a left-anti join against the same fact; the NOT
     * EXISTS additionally carries an outer reference to o_orderdate
     * (two-table correlation). Timestamp + INTERVAL arithmetic is
     * exact in both engines. */
-  val qSqlQ21 = Q(
-    (s, d) => {
-      sqlViews(s, d)
-      s.sql(
-        """SELECT s_name, COUNT(*) AS numwait
-           FROM sql_supplier, sql_lineitem l1, sql_orders
-           WHERE s_suppkey = l1.l_suppkey AND o_orderkey = l1.l_orderkey
-             AND o_orderstatus = 'F'
-             AND l1.l_shipdate > o_orderdate + INTERVAL 90 DAY
-             AND EXISTS (SELECT 1 FROM sql_lineitem l2
-                         WHERE l2.l_orderkey = l1.l_orderkey
-                           AND l2.l_suppkey <> l1.l_suppkey)
-             AND NOT EXISTS (SELECT 1 FROM sql_lineitem l3
-                             WHERE l3.l_orderkey = l1.l_orderkey
-                               AND l3.l_suppkey <> l1.l_suppkey
-                               AND l3.l_shipdate > o_orderdate + INTERVAL 90 DAY)
-           GROUP BY s_name
-           ORDER BY numwait DESC, s_name
-           LIMIT 20""")
-    },
+  val qSqlQ21 = Q.sql(
     """SELECT s_name, COUNT(*) AS numwait
        FROM supplier, lineitem l1, orders
        WHERE s_suppkey = l1.l_suppkey AND o_orderkey = l1.l_orderkey
@@ -783,7 +733,7 @@ object Relational {
        LIMIT 20""")
 
   /** Recursive CTE (landed in Spark 4 — SQL:1999 `WITH RECURSIVE`):
-    * each part key walks its halving chain key → key DIV 2 → … → 1,
+    * each part key walks its halving chain key → ⌊key / 2⌋ → … → 1,
     * an acyclic synthetic hierarchy over real keys, and the query
     * returns the chain depth (= ⌊log₂ key⌋) plus the chain's key sum.
     * UNION ALL recursion with a monotonically shrinking frontier, so
@@ -791,62 +741,32 @@ object Relational {
     * deterministic, integer-only, oracle-exact. The engine-surface
     * point: iterative reachability can be expressed IN SQL and planned
     * by Catalyst, not just via the DataFrame fixed-point loops
-    * (PageRank, componentLabels). */
-  val qSqlRecursive = Q(
-    (s, d) => {
-      sqlViews(s, d)
-      s.sql(
-        """WITH RECURSIVE chain (p_partkey, node, depth) AS (
-             SELECT p_partkey, p_partkey AS node, 0 AS depth FROM sql_part
-             UNION ALL
-             SELECT p_partkey, node DIV 2, depth + 1 FROM chain WHERE node > 1)
-           SELECT p_partkey, MAX(depth) AS depth_to_root,
-                  SUM(node) AS chain_key_sum
-           FROM chain GROUP BY p_partkey
-           ORDER BY p_partkey""")
-    },
+    * (PageRank, componentLabels). The halving step is spelled
+    * `CAST(FLOOR(node / 2) AS BIGINT)`, which both engines accept:
+    * `/` is a double division in both, exact for keys below 2^53, and
+    * the cast keeps the recursive column BIGINT, as the anchor's is.
+    * The outer sum is cast to BIGINT so DuckDB's HUGEINT SUM cannot
+    * drift the schema (a no-op cast in Spark). */
+  val qSqlRecursive = Q.sql(
     """WITH RECURSIVE chain (p_partkey, node, depth) AS (
          SELECT p_partkey, p_partkey AS node, 0 AS depth FROM part
          UNION ALL
-         SELECT p_partkey, node // 2, depth + 1 FROM chain WHERE node > 1)
+         SELECT p_partkey, CAST(FLOOR(node / 2) AS BIGINT), depth + 1
+         FROM chain WHERE node > 1)
        SELECT p_partkey, MAX(depth) AS depth_to_root,
               CAST(SUM(node) AS BIGINT) AS chain_key_sum
        FROM chain GROUP BY p_partkey
        ORDER BY p_partkey""")
 
-  /** Registers every star-schema table as a `sql_*` temp view so the
-    * SQL-text entry path can name them; idempotent per session. */
-  private def sqlViews(s: SparkSession, d: String): Unit =
-    Seq("customer", "orders", "lineitem", "supplier",
-        "nation", "region", "part").foreach { t =>
-      Tables.read(s, d, t).createOrReplaceTempView(s"sql_$t")
-    }
-
-  /** SQL path #2: TPC-H Q5 (local-supplier volume) — a 6-way
+  /** TPC-H Q5 (local-supplier volume) — a 6-way
     * star join with a region filter that Catalyst pushes through
     * nation to prune both dimension legs; nation/region broadcast by
     * hint, the fact-side joins left to AQE. Exercises join reorder +
     * multi-dim pruning in pure SQL text. */
-  val qSqlQ5 = Q(
-    (s, d) => {
-      sqlViews(s, d)
-      s.sql(
-        s"""SELECT /*+ BROADCAST(n), BROADCAST(r) */ n_name,
-             ${Num.sqlSum("l_extendedprice * (1.0 - l_discount)")} AS revenue
-           FROM sql_customer, sql_orders, sql_lineitem,
-                sql_supplier, sql_nation n, sql_region r
-           WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
-             AND l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-             AND s_nationkey = n_nationkey AND n_regionkey = r_regionkey
-             AND r_name = 'ASIA'
-             AND o_orderdate >= TIMESTAMP '1996-01-01'
-             AND o_orderdate < TIMESTAMP '1997-01-01'
-           GROUP BY n_name
-           ORDER BY revenue DESC, n_name""")
-    },
-    s"""SELECT n_name,
+  val qSqlQ5 = Q.sql(
+    s"""SELECT /*+ BROADCAST(n), BROADCAST(r) */ n_name,
          ${Num.sqlSum("l_extendedprice * (1.0 - l_discount)")} AS revenue
-       FROM customer, orders, lineitem, supplier, nation, region
+       FROM customer, orders, lineitem, supplier, nation n, region r
        WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
          AND l_suppkey = s_suppkey AND c_nationkey = s_nationkey
          AND s_nationkey = n_nationkey AND n_regionkey = r_regionkey
@@ -856,24 +776,14 @@ object Relational {
        GROUP BY n_name
        ORDER BY revenue DESC, n_name""")
 
-  /** SQL path #3: TPC-H Q17 (small-quantity-order revenue) — a
-    * CORRELATED scalar subquery per part, which Catalyst decorrelates
-    * into an aggregate + join; the per-part average uses the decimal
-    * recipe so the correlated threshold is bit-identical in both
-    * engines (l_quantity is DOUBLE; a float AVG would be
-    * order-dependent). */
-  val qSqlQ17 = Q(
-    (s, d) => {
-      sqlViews(s, d)
-      s.sql(
-        s"""SELECT ${Num.sqlSum("l_extendedprice")} / 7.0 AS avg_yearly,
-             COUNT(*) AS n_small
-           FROM sql_lineitem l JOIN sql_part p ON p_partkey = l_partkey
-           WHERE p_brand = 'Brand#23'
-             AND l_quantity < (
-               SELECT 0.2 * (${Num.sqlAvg("l2.l_quantity")})
-               FROM sql_lineitem l2 WHERE l2.l_partkey = p_partkey)""")
-    },
+  /** TPC-H Q17 (small-quantity-order revenue) — a CORRELATED scalar
+    * subquery per part, which Catalyst decorrelates into an aggregate
+    * + join; the per-part average uses the decimal recipe so the
+    * correlated threshold is bit-identical in both engines (l_quantity
+    * is DOUBLE; a float AVG would be order-dependent). The count is
+    * cast to BIGINT so both engines emit the same type; Spark's
+    * SimplifyCasts drops the cast, so its plan is unchanged. */
+  val qSqlQ17 = Q.sql(
     s"""SELECT ${Num.sqlSum("l_extendedprice")} / 7.0 AS avg_yearly,
          CAST(COUNT(*) AS BIGINT) AS n_small
        FROM lineitem l JOIN part p ON p_partkey = l_partkey
@@ -882,28 +792,12 @@ object Relational {
            SELECT 0.2 * (${Num.sqlAvg("l2.l_quantity")})
            FROM lineitem l2 WHERE l2.l_partkey = p_partkey)""")
 
-  /** SQL path #4: TPC-H Q18 (large-volume customers) — an IN
+  /** TPC-H Q18 (large-volume customers) — an IN
     * aggregate subquery that planners turn into a semi-join against a
     * grouped-HAVING derived table. The HAVING threshold compares a
     * decimal-exact sum (double SUM near the cut could flip the
     * membership set between engines). */
-  val qSqlQ18 = Q(
-    (s, d) => {
-      sqlViews(s, d)
-      s.sql(
-        s"""SELECT c_name, o_orderkey, o_totalprice,
-             ${Num.sqlSum("l_quantity")} AS sum_qty
-           FROM sql_customer c
-           JOIN sql_orders o ON c_custkey = o_custkey
-           JOIN sql_lineitem l ON o_orderkey = l_orderkey
-           WHERE o_orderkey IN (
-             SELECT l_orderkey FROM sql_lineitem
-             GROUP BY l_orderkey
-             HAVING SUM(CAST(l_quantity AS DECIMAL(18,6))) > 250)
-           GROUP BY c_name, o_orderkey, o_totalprice
-           ORDER BY o_totalprice DESC, o_orderkey
-           LIMIT 20""")
-    },
+  val qSqlQ18 = Q.sql(
     s"""SELECT c_name, o_orderkey, o_totalprice,
          ${Num.sqlSum("l_quantity")} AS sum_qty
        FROM customer c
@@ -917,7 +811,7 @@ object Relational {
        ORDER BY o_totalprice DESC, o_orderkey
        LIMIT 20""")
 
-  /** SQL path #6: TPC-H Q7 (volume shipping between nation pairs) —
+  /** TPC-H Q7 (volume shipping between nation pairs) —
     * the self-join of a dimension (nation joined twice, as supplier
     * nation n1 and customer nation n2) under a cross-leg pair
     * predicate, plus a YEAR() rollup of a derived revenue column.
@@ -928,34 +822,14 @@ object Relational {
     * shipdate range to the scan; the pair predicate references both
     * legs so it cannot be pushed below the join and stays a post-join
     * filter — the planner-correct placement. */
-  val qSqlQ7 = Q(
-    (s, d) => {
-      sqlViews(s, d)
-      s.sql(
-        s"""SELECT supp_nation, cust_nation, l_year,
-             ${Num.sqlSum("volume")} AS revenue
-           FROM (SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-                   YEAR(l_shipdate) AS l_year,
-                   l_extendedprice * (1.0 - l_discount) AS volume
-                 FROM sql_supplier, sql_lineitem, sql_orders,
-                      sql_customer, sql_nation n1, sql_nation n2
-                 WHERE s_suppkey = l_suppkey AND o_orderkey = l_orderkey
-                   AND c_custkey = o_custkey
-                   AND s_nationkey = n1.n_nationkey
-                   AND c_nationkey = n2.n_nationkey
-                   AND n1.n_name < n2.n_name
-                   AND l_shipdate >= TIMESTAMP '1995-01-01'
-                   AND l_shipdate < TIMESTAMP '1997-01-01') shipping
-           GROUP BY supp_nation, cust_nation, l_year
-           ORDER BY supp_nation, cust_nation, l_year""")
-    },
+  val qSqlQ7 = Q.sql(
     s"""SELECT supp_nation, cust_nation, l_year,
          ${Num.sqlSum("volume")} AS revenue
        FROM (SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
                YEAR(l_shipdate) AS l_year,
                l_extendedprice * (1.0 - l_discount) AS volume
-             FROM supplier, lineitem, orders, customer,
-                  nation n1, nation n2
+             FROM supplier, lineitem, orders,
+                  customer, nation n1, nation n2
              WHERE s_suppkey = l_suppkey AND o_orderkey = l_orderkey
                AND c_custkey = o_custkey
                AND s_nationkey = n1.n_nationkey
@@ -966,29 +840,13 @@ object Relational {
        GROUP BY supp_nation, cust_nation, l_year
        ORDER BY supp_nation, cust_nation, l_year""")
 
-  /** SQL path #7: TPC-H Q10 (returned-item reporting) — identify the
+  /** TPC-H Q10 (returned-item reporting) — identify the
     * customers who returned the most revenue in one quarter: a
     * selective fact filter (returnflag = 'R' + one quarter of orders)
     * followed by a wide GROUP BY over customer attributes and a
     * top-20. The revenue sort key is decimal-exact so the LIMIT
     * cutoff cannot flip between engines. */
-  val qSqlQ10 = Q(
-    (s, d) => {
-      sqlViews(s, d)
-      s.sql(
-        s"""SELECT c_custkey, c_name,
-             ${Num.sqlSum("l_extendedprice * (1.0 - l_discount)")} AS revenue,
-             c_acctbal, n_name
-           FROM sql_customer, sql_orders, sql_lineitem, sql_nation
-           WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
-             AND o_orderdate >= TIMESTAMP '1995-10-01'
-             AND o_orderdate < TIMESTAMP '1996-01-01'
-             AND l_returnflag = 'R'
-             AND c_nationkey = n_nationkey
-           GROUP BY c_custkey, c_name, c_acctbal, n_name
-           ORDER BY revenue DESC, c_custkey
-           LIMIT 20""")
-    },
+  val qSqlQ10 = Q.sql(
     s"""SELECT c_custkey, c_name,
          ${Num.sqlSum("l_extendedprice * (1.0 - l_discount)")} AS revenue,
          c_acctbal, n_name
@@ -1002,7 +860,7 @@ object Relational {
        ORDER BY revenue DESC, c_custkey
        LIMIT 20""")
 
-  /** SQL path #8: TPC-H Q22-shaped dormancy query — above-average-
+  /** TPC-H Q22-shaped dormancy query — above-average-
     * balance customers with NO recent orders, counted per nation.
     * (Literal Q22 buckets by phone country code; the synthetic
     * customer table carries no phone column, and every customer has
@@ -1012,24 +870,9 @@ object Relational {
     * EXISTS with its own pushed date filter → left-anti join against
     * a pre-filtered orders side. The threshold average is
     * decimal-exact: customers balanced near the cut must land on the
-    * same side in both engines. */
-  val qSqlQ22 = Q(
-    (s, d) => {
-      sqlViews(s, d)
-      s.sql(
-        s"""SELECT n_name, COUNT(*) AS numcust,
-             ${Num.sqlSum("c_acctbal")} AS totacctbal
-           FROM sql_customer c JOIN sql_nation ON c_nationkey = n_nationkey
-           WHERE c_acctbal > (
-               SELECT 0.5 * (${Num.sqlAvg("c2.c_acctbal")})
-               FROM sql_customer c2 WHERE c2.c_acctbal > 0.0)
-             AND NOT EXISTS (
-               SELECT 1 FROM sql_orders o
-               WHERE o.o_custkey = c.c_custkey
-                 AND o.o_orderdate >= TIMESTAMP '2000-01-01')
-           GROUP BY n_name
-           ORDER BY n_name""")
-    },
+    * same side in both engines. The count is cast to BIGINT so both
+    * engines emit the same type (a cast SimplifyCasts drops). */
+  val qSqlQ22 = Q.sql(
     s"""SELECT n_name, CAST(COUNT(*) AS BIGINT) AS numcust,
          ${Num.sqlSum("c_acctbal")} AS totacctbal
        FROM customer c JOIN nation ON c_nationkey = n_nationkey
@@ -1043,7 +886,7 @@ object Relational {
        GROUP BY n_name
        ORDER BY n_name""")
 
-  /** SQL path #9: TPC-H Q4 (order priority checking) — a correlated
+  /** TPC-H Q4 (order priority checking) — a correlated
     * EXISTS whose inner predicate compares two columns ACROSS the
     * correlation (l_shipdate vs o_orderdate + 60 days), so it cannot
     * be pre-filtered on the inner side alone; Catalyst plans it as a
@@ -1051,21 +894,7 @@ object Relational {
     * (Literal Q4 uses l_commitdate < l_receiptdate; the fixture's
     * lineitem carries neither, so "late" is shipped >60 days after
     * the order date — same shape, same plan.) */
-  val qSqlQ4 = Q(
-    (s, d) => {
-      sqlViews(s, d)
-      s.sql(
-        """SELECT o_orderpriority, COUNT(*) AS order_count
-           FROM sql_orders
-           WHERE o_orderdate >= TIMESTAMP '1996-01-01'
-             AND o_orderdate < TIMESTAMP '1997-01-01'
-             AND EXISTS (
-               SELECT 1 FROM sql_lineitem
-               WHERE l_orderkey = o_orderkey
-                 AND l_shipdate > o_orderdate + INTERVAL 60 DAY)
-           GROUP BY o_orderpriority
-           ORDER BY o_orderpriority""")
-    },
+  val qSqlQ4 = Q.sql(
     """SELECT o_orderpriority, COUNT(*) AS order_count
        FROM orders
        WHERE o_orderdate >= TIMESTAMP '1996-01-01'
@@ -1077,23 +906,13 @@ object Relational {
        GROUP BY o_orderpriority
        ORDER BY o_orderpriority""")
 
-  /** SQL path #10: TPC-H Q6 (forecasting revenue change) — the
+  /** TPC-H Q6 (forecasting revenue change) — the
     * pure scan-filter-aggregate: no join at all, three range
     * predicates all pushed to the parquet scan, one decimal-exact
     * SUM of a per-row product. The baseline "how fast can the engine
     * eat the fact table" query; at 100 TB it is bounded by scan
     * bandwidth × the pushed-filter selectivity, nothing else. */
-  val qSqlQ6 = Q(
-    (s, d) => {
-      sqlViews(s, d)
-      s.sql(
-        s"""SELECT ${Num.sqlSum("l_extendedprice * l_discount")} AS revenue
-           FROM sql_lineitem
-           WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-             AND l_shipdate < TIMESTAMP '1997-01-01'
-             AND l_discount BETWEEN 0.05 AND 0.07
-             AND l_quantity < 24.0""")
-    },
+  val qSqlQ6 = Q.sql(
     s"""SELECT ${Num.sqlSum("l_extendedprice * l_discount")} AS revenue
        FROM lineitem
        WHERE l_shipdate >= TIMESTAMP '1996-01-01'
@@ -1101,24 +920,13 @@ object Relational {
          AND l_discount BETWEEN 0.05 AND 0.07
          AND l_quantity < 24.0""")
 
-  /** SQL path #11: TPC-H Q14 (promotion effect) — the conditional-
+  /** TPC-H Q14 (promotion effect) — the conditional-
     * aggregate ratio: one join, two decimal-exact sums over the same
     * rows (a CASE-guarded numerator and the full denominator), one
     * IEEE double division at the end. Both sums go through the
     * decimal cast so the ratio's inputs are bit-identical in either
     * engine; the division itself is a single exact-rounded op. */
-  val qSqlQ14 = Q(
-    (s, d) => {
-      sqlViews(s, d)
-      s.sql(
-        s"""SELECT 100.0 *
-             ${Num.sqlSum("CASE WHEN p_type = 'PROMO' " +
-               "THEN l_extendedprice * (1.0 - l_discount) ELSE 0.0 END")} /
-             ${Num.sqlSum("l_extendedprice * (1.0 - l_discount)")} AS promo_revenue
-           FROM sql_lineitem JOIN sql_part ON l_partkey = p_partkey
-           WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-             AND l_shipdate < TIMESTAMP '1996-04-01'""")
-    },
+  val qSqlQ14 = Q.sql(
     s"""SELECT 100.0 *
          ${Num.sqlSum("CASE WHEN p_type = 'PROMO' " +
            "THEN l_extendedprice * (1.0 - l_discount) ELSE 0.0 END")} /
@@ -1127,7 +935,7 @@ object Relational {
        WHERE l_shipdate >= TIMESTAMP '1996-01-01'
          AND l_shipdate < TIMESTAMP '1996-04-01'""")
 
-  /** SQL path #12: TPC-H Q16 (parts/supplier relationship) — the
+  /** TPC-H Q16 (parts/supplier relationship) — the
     * NOT IN anti join: unlike Q21/Q22's NOT EXISTS, NOT IN has
     * null-aware semantics (one NULL in the subquery empties the
     * result), so Spark plans a LeftAnti with the null-aware flag —
@@ -1136,20 +944,7 @@ object Relational {
     * reads partsupp and screens '%Complaints%' comments; the fixture
     * has neither, so lineitem is the part↔supplier association and
     * low-balance suppliers are the excluded set — same plan shape.) */
-  val qSqlQ16 = Q(
-    (s, d) => {
-      sqlViews(s, d)
-      s.sql(
-        """SELECT p_brand, p_type, p_size,
-             COUNT(DISTINCT l_suppkey) AS supplier_cnt
-           FROM sql_part JOIN sql_lineitem ON p_partkey = l_partkey
-           WHERE p_brand <> 'Brand#45' AND p_type <> 'PROMO'
-             AND p_size IN (1, 4, 9, 16, 25, 36, 49)
-             AND l_suppkey NOT IN (
-               SELECT s_suppkey FROM sql_supplier WHERE s_acctbal < 2000.0)
-           GROUP BY p_brand, p_type, p_size
-           ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""")
-    },
+  val qSqlQ16 = Q.sql(
     """SELECT p_brand, p_type, p_size,
          COUNT(DISTINCT l_suppkey) AS supplier_cnt
        FROM part JOIN lineitem ON p_partkey = l_partkey
@@ -1160,26 +955,14 @@ object Relational {
        GROUP BY p_brand, p_type, p_size
        ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""")
 
-  /** SQL path #13: TPC-H Q19 (discounted revenue) — the disjunctive
+  /** TPC-H Q19 (discounted revenue) — the disjunctive
     * join predicate: an equi key AND an OR-of-ANDs mixing columns
     * from both sides. Catalyst keeps the equi key for the hash join,
     * evaluates the disjunction as a post-join filter, and (via CNF
     * conversion) pushes the part-only disjunction `brand∈{...} AND
     * size≤35`-ish residue down to the part scan — the query pattern
     * that punishes engines without predicate normalization. */
-  val qSqlQ19 = Q(
-    (s, d) => {
-      sqlViews(s, d)
-      s.sql(
-        s"""SELECT ${Num.sqlSum("l_extendedprice * (1.0 - l_discount)")} AS revenue
-           FROM sql_lineitem JOIN sql_part ON p_partkey = l_partkey
-           WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 15
-                    AND l_quantity BETWEEN 1.0 AND 11.0)
-              OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 25
-                    AND l_quantity BETWEEN 10.0 AND 20.0)
-              OR (p_brand = 'Brand#34' AND p_size BETWEEN 1 AND 35
-                    AND l_quantity BETWEEN 20.0 AND 30.0)""")
-    },
+  val qSqlQ19 = Q.sql(
     s"""SELECT ${Num.sqlSum("l_extendedprice * (1.0 - l_discount)")} AS revenue
        FROM lineitem JOIN part ON p_partkey = l_partkey
        WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 15
@@ -1189,7 +972,7 @@ object Relational {
           OR (p_brand = 'Brand#34' AND p_size BETWEEN 1 AND 35
                 AND l_quantity BETWEEN 20.0 AND 30.0)""")
 
-  /** SQL path #14: TPC-H Q8 (national market share) — the
+  /** TPC-H Q8 (national market share) — the
     * CASE-inside-aggregate ratio: one nation's share of a region's
     * order volume per year, over a 7-table star join with two nation
     * legs (customer region via n1→region, supplier nation via n2).
@@ -1197,30 +980,7 @@ object Relational {
     * division at the end, so the ratio is bit-identical across
     * engines. Catalyst broadcasts all four dim legs and prunes the
     * two-year order window at the scan. */
-  val qSqlQ8 = Q(
-    (s, d) => {
-      sqlViews(s, d)
-      s.sql(
-        """SELECT o_year,
-             CAST(SUM(CAST(CASE WHEN supp_nation = 'NATION_1' THEN volume
-                                ELSE 0.0 END AS DECIMAL(18,6))) AS DOUBLE)
-               / CAST(SUM(CAST(volume AS DECIMAL(18,6))) AS DOUBLE) AS mkt_share
-           FROM (SELECT YEAR(o_orderdate) AS o_year,
-                   l_extendedprice * (1.0 - l_discount) AS volume,
-                   n2.n_name AS supp_nation
-                 FROM sql_part, sql_lineitem, sql_supplier, sql_orders,
-                      sql_customer, sql_nation n1, sql_nation n2, sql_region
-                 WHERE p_partkey = l_partkey AND s_suppkey = l_suppkey
-                   AND l_orderkey = o_orderkey AND o_custkey = c_custkey
-                   AND c_nationkey = n1.n_nationkey
-                   AND n1.n_regionkey = r_regionkey
-                   AND s_nationkey = n2.n_nationkey
-                   AND r_name = 'AMERICA' AND p_type = 'ECONOMY'
-                   AND o_orderdate BETWEEN TIMESTAMP '1995-01-01'
-                                       AND TIMESTAMP '1996-12-31') all_nations
-           GROUP BY o_year
-           ORDER BY o_year""")
-    },
+  val qSqlQ8 = Q.sql(
     """SELECT o_year,
          CAST(SUM(CAST(CASE WHEN supp_nation = 'NATION_1' THEN volume
                             ELSE 0.0 END AS DECIMAL(18,6))) AS DOUBLE)
@@ -1228,8 +988,8 @@ object Relational {
        FROM (SELECT YEAR(o_orderdate) AS o_year,
                l_extendedprice * (1.0 - l_discount) AS volume,
                n2.n_name AS supp_nation
-             FROM part, lineitem, supplier, orders, customer,
-                  nation n1, nation n2, region
+             FROM part, lineitem, supplier, orders,
+                  customer, nation n1, nation n2, region
              WHERE p_partkey = l_partkey AND s_suppkey = l_suppkey
                AND l_orderkey = o_orderkey AND o_custkey = c_custkey
                AND c_nationkey = n1.n_nationkey
@@ -1241,7 +1001,7 @@ object Relational {
        GROUP BY o_year
        ORDER BY o_year""")
 
-  /** SQL path #15: TPC-H Q9-shaped product profit — per supplier
+  /** TPC-H Q9-shaped product profit — per supplier
     * nation per year, revenue minus a cost leg. True Q9 costs with
     * `ps_supplycost` from the partsupp table this star schema does
     * not have, so the cost proxy is `p_retailprice * 0.1 *
@@ -1250,24 +1010,7 @@ object Relational {
     * plan (5-way join, LIKE filter on the part leg, wide rollup).
     * The LIKE is evaluated at the part scan, shrinking the fact join
     * 27/500 before any shuffle. Net amount accumulates in decimal. */
-  val qSqlQ9 = Q(
-    (s, d) => {
-      sqlViews(s, d)
-      s.sql(
-        s"""SELECT nation, o_year,
-             ${Num.sqlSum("amount")} AS sum_profit
-           FROM (SELECT n_name AS nation, YEAR(o_orderdate) AS o_year,
-                   l_extendedprice * (1.0 - l_discount)
-                     - p_retailprice * 0.1 * l_quantity AS amount
-                 FROM sql_part, sql_supplier, sql_lineitem,
-                      sql_orders, sql_nation
-                 WHERE s_suppkey = l_suppkey AND p_partkey = l_partkey
-                   AND o_orderkey = l_orderkey
-                   AND s_nationkey = n_nationkey
-                   AND p_name LIKE '%widget%') profit
-           GROUP BY nation, o_year
-           ORDER BY nation, o_year DESC""")
-    },
+  val qSqlQ9 = Q.sql(
     s"""SELECT nation, o_year,
          ${Num.sqlSum("amount")} AS sum_profit
        FROM (SELECT n_name AS nation, YEAR(o_orderdate) AS o_year,
@@ -1281,7 +1024,7 @@ object Relational {
        GROUP BY nation, o_year
        ORDER BY nation, o_year DESC""")
 
-  /** SQL path #16: TPC-H Q13 (customer order-count distribution) —
+  /** TPC-H Q13 (customer order-count distribution) —
     * the filter-in-ON-clause left join: the predicate on
     * o_orderpriority lives in the JOIN condition, NOT the WHERE, so
     * customers with zero qualifying orders still appear (count 0)
@@ -1289,19 +1032,7 @@ object Relational {
     * to test, and one a WHERE-clause rewrite silently corrupts.
     * Two-level aggregation: count per customer, then the histogram
     * of those counts. All-integer output — no float concerns. */
-  val qSqlQ13 = Q(
-    (s, d) => {
-      sqlViews(s, d)
-      s.sql(
-        """SELECT c_count, COUNT(*) AS custdist
-           FROM (SELECT c_custkey, COUNT(o_orderkey) AS c_count
-                 FROM sql_customer LEFT OUTER JOIN sql_orders
-                   ON c_custkey = o_custkey
-                  AND o_orderpriority <> '1-URGENT'
-                 GROUP BY c_custkey) c_orders
-           GROUP BY c_count
-           ORDER BY custdist DESC, c_count DESC""")
-    },
+  val qSqlQ13 = Q.sql(
     """SELECT c_count, COUNT(*) AS custdist
        FROM (SELECT c_custkey, COUNT(o_orderkey) AS c_count
              FROM customer LEFT OUTER JOIN orders
@@ -1311,7 +1042,7 @@ object Relational {
        GROUP BY c_count
        ORDER BY custdist DESC, c_count DESC""")
 
-  /** SQL path #17: TPC-H Q15 (top supplier) — the reused named
+  /** TPC-H Q15 (top supplier) — the reused named
     * subquery: a per-supplier quarterly revenue CTE referenced twice,
     * once as the join input and once under MAX in a scalar subquery.
     * Revenue stays DECIMAL through the max-equality comparison (an
@@ -1319,23 +1050,7 @@ object Relational {
     * to double only in the final projection. Spark plans the scalar
     * MAX as a broadcast-able single-row subquery; at 100 TB the CTE
     * is one shuffle on l_suppkey reused for both references. */
-  val qSqlQ15 = Q(
-    (s, d) => {
-      sqlViews(s, d)
-      s.sql(
-        """WITH revenue AS (
-             SELECT l_suppkey AS supplier_no,
-               SUM(CAST(l_extendedprice * (1.0 - l_discount)
-                        AS DECIMAL(18,6))) AS total_rev
-             FROM sql_lineitem
-             WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-               AND l_shipdate < TIMESTAMP '1996-04-01'
-             GROUP BY l_suppkey)
-           SELECT s_suppkey, s_name, CAST(total_rev AS DOUBLE) AS total_revenue
-           FROM sql_supplier JOIN revenue ON s_suppkey = supplier_no
-           WHERE total_rev = (SELECT MAX(total_rev) FROM revenue)
-           ORDER BY s_suppkey""")
-    },
+  val qSqlQ15 = Q.sql(
     """WITH revenue AS (
          SELECT l_suppkey AS supplier_no,
            SUM(CAST(l_extendedprice * (1.0 - l_discount)
@@ -1349,7 +1064,7 @@ object Relational {
        WHERE total_rev = (SELECT MAX(total_rev) FROM revenue)
        ORDER BY s_suppkey""")
 
-  /** SQL path #18: TPC-H Q2-shaped supplier selection — the
+  /** TPC-H Q2-shaped supplier selection — the
     * correlated-MIN-over-a-join shape: for each qualifying part, keep
     * the supplier(s) whose account balance equals the minimum among
     * EVERY supplier that shipped that part within the region. True Q2
@@ -1359,25 +1074,7 @@ object Relational {
     * comparison is equality on a STORED double — no arithmetic, so no
     * cross-engine float concern. DISTINCT collapses the lineitem
     * multiplicity; (s_name, p_partkey) makes the LIMIT order total. */
-  val qSqlQ2 = Q(
-    (s, d) => {
-      sqlViews(s, d)
-      s.sql(
-        """SELECT DISTINCT s_acctbal, s_name, n_name, p_partkey, p_type
-           FROM sql_part, sql_supplier, sql_lineitem, sql_nation, sql_region
-           WHERE p_partkey = l_partkey AND s_suppkey = l_suppkey
-             AND s_nationkey = n_nationkey AND n_regionkey = r_regionkey
-             AND r_name = 'EUROPE' AND p_size = 10
-             AND s_acctbal = (SELECT MIN(s2.s_acctbal)
-               FROM sql_supplier s2, sql_lineitem l2, sql_nation n2,
-                    sql_region r2
-               WHERE l2.l_partkey = p_partkey AND s2.s_suppkey = l2.l_suppkey
-                 AND s2.s_nationkey = n2.n_nationkey
-                 AND n2.n_regionkey = r2.r_regionkey
-                 AND r2.r_name = 'EUROPE')
-           ORDER BY s_acctbal, s_name, p_partkey
-           LIMIT 20""")
-    },
+  val qSqlQ2 = Q.sql(
     """SELECT DISTINCT s_acctbal, s_name, n_name, p_partkey, p_type
        FROM part, supplier, lineitem, nation, region
        WHERE p_partkey = l_partkey AND s_suppkey = l_suppkey
@@ -1392,30 +1089,15 @@ object Relational {
        ORDER BY s_acctbal, s_name, p_partkey
        LIMIT 20""")
 
-  /** SQL path #19: TPC-H Q12-shaped shipping-priority audit — the
+  /** TPC-H Q12-shaped shipping-priority audit — the
     * two-CASE-counts-per-group shape over a fact-fact join with a
     * late-shipment predicate (true Q12 groups by l_shipmode and
     * compares commit/receipt dates; this schema has neither, so the
     * group key is l_returnflag and "late" is shipdate > orderdate +
     * 60 days — same plan: date-window scan prune, one join, CASE
-    * aggregation). All-integer output, CAST to BIGINT on both sides
-    * so DuckDB's HUGEINT SUM can't drift the schema. */
-  val qSqlQ12 = Q(
-    (s, d) => {
-      sqlViews(s, d)
-      s.sql(
-        """SELECT l_returnflag,
-             CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-                           THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-             CAST(SUM(CASE WHEN o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
-                           THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
-           FROM sql_orders JOIN sql_lineitem ON o_orderkey = l_orderkey
-           WHERE l_shipdate > o_orderdate + INTERVAL 60 DAY
-             AND l_shipdate >= TIMESTAMP '1996-01-01'
-             AND l_shipdate < TIMESTAMP '1997-01-01'
-           GROUP BY l_returnflag
-           ORDER BY l_returnflag""")
-    },
+    * aggregation). All-integer output, CAST to BIGINT so DuckDB's
+    * HUGEINT SUM can't drift the schema. */
+  val qSqlQ12 = Q.sql(
     """SELECT l_returnflag,
          CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
                        THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
@@ -1493,27 +1175,14 @@ object Relational {
        FROM orders JOIN customer ON o_custkey = c_custkey
        GROUP BY c_mktsegment ORDER BY c_mktsegment""")
 
-  /** SQL path #20: LATERAL correlated subquery — the modern top-N-per-
+  /** LATERAL correlated subquery — the modern top-N-per-
     * group spelling (each customer's two largest orders via a
     * correlated ordered LIMIT in the FROM clause). Catalyst decorrelates
     * the lateral into a ranked window join; the same result as the
     * row_number() formulation (q_window_topk) but written the way a
     * SQL-2016 user writes it. The (o_totalprice, o_orderkey) sort key
     * is total, so the LIMIT cutoff cannot flip between engines. */
-  val qSqlLateral = Q(
-    (s, d) => {
-      sqlViews(s, d)
-      s.sql(
-        """SELECT c_custkey, c_mktsegment, o.o_orderkey, o.o_totalprice
-           FROM sql_customer c,
-           LATERAL (SELECT o_orderkey, o_totalprice
-                    FROM sql_orders
-                    WHERE o_custkey = c_custkey
-                    ORDER BY o_totalprice DESC, o_orderkey
-                    LIMIT 2) o
-           WHERE c_custkey < 100
-           ORDER BY c_custkey, o_totalprice DESC, o_orderkey""")
-    },
+  val qSqlLateral = Q.sql(
     """SELECT c_custkey, c_mktsegment, o.o_orderkey, o.o_totalprice
        FROM customer c,
        LATERAL (SELECT o_orderkey, o_totalprice
@@ -1524,7 +1193,7 @@ object Relational {
        WHERE c_custkey < 100
        ORDER BY c_custkey, o_totalprice DESC, o_orderkey""")
 
-  /** SQL path #21: TPC-H Q11-shaped important-stock query — the
+  /** TPC-H Q11-shaped important-stock query — the
     * group-vs-global-share HAVING: parts whose revenue exceeds 1.5×
     * the AVERAGE part's share of total revenue (true Q11 uses a fixed
     * fraction of partsupp stock value; a fixed fraction has no
@@ -1535,25 +1204,9 @@ object Relational {
     * CROSS-MULTIPLIED (`part_sum × n_parts × 2 > total × 3`):
     * decimal × integer is exact in both engines, whereas a fractional
     * multiplier would round at engine-specific decimal scales and
-    * could flip rows at the threshold. Catalyst evaluates the scalar subquery once and
-    * broadcasts it into the HAVING filter. */
-  val qSqlQ11 = Q(
-    (s, d) => {
-      sqlViews(s, d)
-      s.sql(
-        """SELECT p_partkey, CAST(grp AS DOUBLE) AS value
-           FROM (SELECT p_partkey,
-                   SUM(CAST(l_extendedprice * (1.0 - l_discount)
-                            AS DECIMAL(18,6))) AS grp
-                 FROM sql_lineitem JOIN sql_part ON p_partkey = l_partkey
-                 GROUP BY p_partkey)
-           WHERE grp * (SELECT COUNT(*) FROM sql_part) * 2 >
-             (SELECT SUM(CAST(l_extendedprice * (1.0 - l_discount)
-                              AS DECIMAL(18,6))) * 3
-              FROM sql_lineitem)
-           ORDER BY value DESC, p_partkey
-           LIMIT 30""")
-    },
+    * could flip rows at the threshold. Catalyst evaluates the scalar
+    * subquery once and broadcasts it into the HAVING filter. */
+  val qSqlQ11 = Q.sql(
     """SELECT p_partkey, CAST(grp AS DOUBLE) AS value
        FROM (SELECT p_partkey,
                SUM(CAST(l_extendedprice * (1.0 - l_discount)
@@ -1567,16 +1220,15 @@ object Relational {
        ORDER BY value DESC, p_partkey
        LIMIT 30""")
 
-  /** SQL path #22: TPC-H Q20-shaped excess-availability query — the
-    * nested IN + CORRELATED scalar subquery pair that closes the
-    * feasible TPC-H sweep (true Q20's `partsupp.ps_availqty` has no
+  /** TPC-H Q20-shaped excess-availability query — the nested IN +
+    * CORRELATED scalar subquery pair (true Q20's `partsupp.ps_availqty` has no
     * table here, so availability is DERIVED from the fact itself:
     * a supplier's all-time shipped quantity of a part, the same proxy
     * family as qSqlQ2/qSqlQ9's). A supplier qualifies when it holds
     * some name-filtered part in excess: all-time holding > 4× the
     * part's total 1996 demand. The ×4 multiplier is MEASURED, not
     * guessed (uniform synthetic data makes untuned thresholds
-    * all-or-nothing — the reason Q20 was deferred in round 6):
+    * all-or-nothing):
     * qualifying-supplier counts by multiplier are 7/10 @ sf0.001,
     * 12/100 @ sf0.01, 441/1000 @ sf0.1 — selective at every SF yet
     * never empty. Catalyst decorrelates the scalar into a per-part
@@ -1585,27 +1237,7 @@ object Relational {
     * a float sum near the ×4 cut could flip membership between
     * engines). Output columns are keys/strings only, so the hash
     * never touches a float. */
-  val qSqlQ20 = Q(
-    (s, d) => {
-      sqlViews(s, d)
-      s.sql(
-        """SELECT s_suppkey, s_name, n_name
-           FROM sql_supplier JOIN sql_nation ON s_nationkey = n_nationkey
-           WHERE s_suppkey IN (
-             SELECT a_suppkey FROM (
-               SELECT l_partkey AS a_partkey, l_suppkey AS a_suppkey,
-                      SUM(CAST(l_quantity AS DECIMAL(18,6))) AS a_qty
-               FROM sql_lineitem GROUP BY l_partkey, l_suppkey) avail
-             WHERE a_partkey IN (SELECT p_partkey FROM sql_part
-                                 WHERE p_name LIKE 'small%')
-               AND a_qty > 4 * (
-                 SELECT SUM(CAST(l_quantity AS DECIMAL(18,6)))
-                 FROM sql_lineitem
-                 WHERE l_partkey = a_partkey
-                   AND l_shipdate >= TIMESTAMP '1996-01-01'
-                   AND l_shipdate < TIMESTAMP '1997-01-01'))
-           ORDER BY s_suppkey""")
-    },
+  val qSqlQ20 = Q.sql(
     """SELECT s_suppkey, s_name, n_name
        FROM supplier JOIN nation ON s_nationkey = n_nationkey
        WHERE s_suppkey IN (

@@ -20,13 +20,7 @@ object AnnDial {
       if (args.length > 1) args(1).split(",").toSeq.map(_.trim.toInt)
       else Seq(1, 2, 3, 4, 6, 8, 10, 12, 16)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.SparkEntry.localSession(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     graft.Quiet.muteKnownBenign()
     val strides: Seq[Option[Long]] =

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-drain budget gate (r15 verdict #6): the exchange census
   * freezes BATCH plan structure by name, but the 8 `q_stream_*`
   * drains are intentionally unpinned there (their returned frame is
@@ -68,13 +66,9 @@ object DrainGate {
     // same-day bench legs) purely from that decay. Bounded, so a
     // genuinely busy host can never stall the gate forever.
     graft.Probes.quietWait()
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.SparkEntry.localSession(cpus)
       .config("spark.sql.streaming.stateStore.maintenanceInterval",
-        sys.env.getOrElse("SPARK_GRAFT_MAINT", "1h"))
+        graft.Bench.MaintenanceInterval)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     graft.Quiet.muteKnownBenign()

@@ -164,12 +164,7 @@ object ExchangeCensus {
     * JVM (`--selfcheck --crosssf`), which is how `dev/gate.sh` runs
     * them. */
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.SparkEntry.localSession("4").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     graft.Quiet.muteKnownBenign()
     val sfDir = "/root/testdata/sf0.001"

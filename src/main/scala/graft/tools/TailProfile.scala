@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Where does a sub-0.5 s query's wall time go? (r20, verdict ask #1:
   * ~170 sub-0.5 s queries sum to ~30 s of core_sec, and the 8-core
@@ -24,16 +23,7 @@ object TailProfile {
     val reps = args.drop(1).headOption.map(_.toInt).getOrElse(5)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b0 = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-    val builder = sys.env.get("SPARK_GRAFT_CONF")
-      .map(_.split(";").filter(_.contains("=")).foldLeft(b0) { (b, kv) =>
-        val Array(k, v) = kv.split("=", 2); b.config(k.trim, v.trim)
-      }).getOrElse(b0)
-    val spark = builder.getOrCreate()
+    val spark = graft.SparkEntry.localSession(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     graft.Quiet.muteKnownBenign()
     val jobs = new java.util.concurrent.atomic.AtomicInteger()

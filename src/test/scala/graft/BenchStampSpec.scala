@@ -139,6 +139,17 @@ class BenchStampSpec extends AnyFunSuite {
     assert(wrongSf == (), "sf0.1 fixture must load for its own sf")
   }
 
+  test("a leg whose anchor fixture failed to load is not stamped anchored") {
+    val missing = BenchRules.loadAnchor("/nonexistent/sf9.9")
+    assert(missing.isLeft)
+    assert(!BenchRules.anchored(missing, "32"),
+      "a fixture that failed to load must not read as anchored")
+    // a loaded fixture anchors only legs at its provenance core count
+    val loaded = Right(BenchRules.Anchor("sf", Map("q" -> 1.0), 1.0, 1.0, Some("32")))
+    assert(BenchRules.anchored(loaded, "32"))
+    assert(!BenchRules.anchored(loaded, "8"))
+  }
+
   test("the envelope rule separates honest session variance from r18 contamination") {
     val a = BenchRules.Anchor("/root/testdata/sf0.1", Map.empty, 61.988, 31.509)
     // committed legs span 55.6-65.1 s core (1.17x worst vs median)

@@ -19,6 +19,27 @@ class RelationalSpec extends SparkSpec {
     assert(empty.isEmpty, s"empty results: ${empty.mkString(", ")}")
   }
 
+  test("a built SQL-entry frame keeps its tables when the views re-register") {
+    // Q.sql registers the star-schema views under their bare names on
+    // every call; building the same query at another sf re-registers
+    // them, and must not rebind a frame analyzed before
+    val first = SparkEntry.queries("q_sql_q6")(spark, sfDir)
+    val firstRows = first.collect().toSeq
+    val firstCount = first.count()
+    val other = SparkEntry.queries("q_sql_q6")(spark, sfDir.stripSuffix("sf0.001") + "sf0.01")
+      .collect().toSeq
+    assert(other != firstRows, "sanity: the two sfs must differ in revenue")
+    assert(first.count() === firstCount)
+    assert(first.collect().toSeq === firstRows)
+  }
+
+  test("no oracle names a per-query view of a star-schema table") {
+    val view = """\b(sql|sq|sqin|gs|ns)_(region|nation|customer|supplier|part|orders|lineitem)\b""".r
+    val named = SparkEntry.oracleSql.collect {
+      case (k, sql) if view.findFirstIn(sql).isDefined => k }
+    assert(named.isEmpty, s"oracles naming a view prefix: ${named.mkString(", ")}")
+  }
+
   test("every oracle key has a matching query key") {
     val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(orphans.isEmpty, s"oracle entries without queries: $orphans")
