@@ -395,14 +395,13 @@ object EventsOps {
     // `base` feeds SEVEN subtrees (startBins, endBins, the spine agg,
     // and both marker/probe unions twice each), and Catalyst inlines
     // the upstream plan at every reference — with a session_window
-    // aggregation as the input, the r19 plan audit counted 16 scans
-    // of the events table in one invocation. Pin the projected
-    // intervals once per call (interval-count rows, ~40 B each — tiny
-    // vs the upstream it replaces; materialized INSIDE the invocation,
-    // so repeated calls recompute it, never reuse across runs). One-
-    // slot form (r20, r19 verdict #4): each invocation frees the
-    // previous one's snapshot instead of parking another dead RDD in
-    // the block manager for the session's life.
+    // aggregation as the input, that is 16 scans of the events table
+    // in one invocation. Pin the projected intervals once per call
+    // (interval-count rows, ~40 B each — tiny vs the upstream it
+    // replaces; materialized INSIDE the invocation, so repeated calls
+    // recompute it, never reuse across runs). One slot: each
+    // invocation frees the previous one's snapshot instead of parking
+    // another dead RDD in the block manager for the session's life.
     val baseSel = iv.select(
       idCols.map(col) :+ col(sCol).cast("long").as("__s") :+
         col(eCol).cast("long").as("__e"): _*)

@@ -30,7 +30,7 @@ object GraphOps {
     * derived once per (session, dir), pinned via [[graft.SessionMemo.pinned]]
     * (eager, so the build cost lands on the memo entry — same
     * attribution pattern as the dedup pair families — and recomputable
-    * on block loss, unlike a localCheckpoint: r11 verdict #1), and
+    * on block loss, unlike a localCheckpoint), and
     * every PageRank iteration / wedge
     * join reads the materialized dimension-sized frame instead of
     * replaying four fact joins (bench: 1.5 s + 0.5 s of per-query
@@ -238,7 +238,7 @@ object GraphOps {
        ORDER BY node""")
 
   /** Recursive CTE #2 — recursion over a REAL edge set with
-    * data-dependent frontiers (the round-9 q_sql_recursive exhibit
+    * data-dependent frontiers (the q_sql_recursive exhibit
     * synthesizes a halving chain whose frontier shrinks by
     * construction; here the frontier is whatever the data makes it).
     * Bounded-depth all-pairs reachability over the STRONG trade
@@ -251,7 +251,7 @@ object GraphOps {
     * rounds regardless of corpus; recursion runs on the
     * ≤ |nations|² strong-edge frame, so total path volume is
     * ≤ |nations| · degree³ — dimension-sized at any SF. Anchor
-    * columns are aliased (the round-9 lesson: an unaliased anchor
+    * columns are aliased (an unaliased anchor
     * materializes per-round LogicalRDDs with duplicate attribute
     * names). */
   val qTradeReach = Q(

@@ -1390,21 +1390,18 @@ object Relational {
     * to a co-partitioned SMJ at scale. */
   val qMergeUpsert = Q(
     (s, d) => {
-      // pinned (r19): the delta feeds TWO consumers (upserts +
-      // tombstones) and its full-outer join would otherwise re-run
-      // per reference — the pin materializes the changed-rows set
-      // once per invocation, inside the timed run. r20 gates it
-      // (r19 verdict #5: the pin's eager materialization barrier
-      // measured +5-29% over the doubled join in every r19 leg at
-      // toy scale): below the threshold the duplicated join is
-      // cheaper than a barrier; above it (the 100 TB posture, where
-      // re-running a snapshot-sized full-outer join per consumer is
-      // the real cost) the delta materializes once. The gate reads
-      // the SNAPSHOT scan's optimizer size estimate — parquet-footer
-      // bytes, plan-stable — not the join output's (join estimates
-      // are child-size products, useless as a gate). One-slot pin
-      // (r19 verdict #4), keyed by dataset: repeated invocations hold
-      // one live snapshot per dataset, never a pile of dead ones.
+      // the delta feeds TWO consumers (upserts + tombstones), so its
+      // full-outer join runs once per reference unless pinned. A pin's
+      // eager materialization barrier costs more than the doubled join
+      // on small snapshots (measured +5-29% at toy scale), so it is
+      // gated: below the threshold the join runs twice; above it
+      // (where re-running a snapshot-sized full-outer join per
+      // consumer is the real cost) the delta materializes once. The
+      // gate reads the SNAPSHOT scan's optimizer size estimate —
+      // parquet-footer bytes, plan-stable — not the join output's
+      // (join estimates are child-size products, useless as a gate).
+      // One-slot pin keyed by dataset: repeated invocations hold one
+      // live snapshot per dataset, never a pile of dead ones.
       val deltaRaw = qSnapshotDiff.fn(s, d)
       val snapBytes =
         try snapOld(s, d).queryExecution.optimizedPlan.stats.sizeInBytes
@@ -1477,9 +1474,8 @@ object Relational {
     * [[snapshotDiff]] output) are resolved deterministically: the
     * survivor window tiebreaks equal priorities by `valueCol`
     * descending, so the result never depends on partitioning order
-    * (ADVICE r7 — previously the winner among same-priority
-    * duplicates was whichever row the shuffle happened to order
-    * first). */
+    * (without the tiebreak, the winner among same-priority duplicates
+    * is whichever row the shuffle happens to order first). */
   def mergeUpsert(base: DataFrame, delta: DataFrame,
                   key: String, valueCol: String): DataFrame = {
     val upserts = delta.filter(col("change_type") =!= "removed")

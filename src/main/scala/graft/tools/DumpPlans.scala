@@ -29,9 +29,29 @@ object DumpPlans {
     spark
   }
 
-  private def formatted(spark: SparkSession, name: String, sfDir: String): String =
-    graft.SparkEntry.queries(name)(spark, sfDir).queryExecution
+  /** The formatted physical plan of query `name`, with the tokens that
+    * change between two runs of the same plan masked, so a regenerated
+    * docs/PLANS.md differs only where a plan does:
+    *  - exchange and subquery ids, `[plan_id=N]`, counted per session;
+    *  - the JVM identity of a `MapPartitions` function
+    *    (`Foo$$$Lambda$N/0x…@…`), printed as `Foo.<lambda>`;
+    *  - this process' temp-name suffix, `_p<pid>` and
+    *    `_p<pid>_<8 hex>`, printed as `_p<pid>`;
+    *  - expression ids, renumbered `#0`, `#1`, … in order of first
+    *    appearance. They come from one JVM-wide counter, and the count
+    *    a query takes from it is not fixed from run to run (two
+    *    regenerations of one commit differed by 7 from q_ann_ivf on),
+    *    so raw ids would renumber every plan dumped after such a query. */
+  private[graft] def formatted(spark: SparkSession, name: String, sfDir: String): String = {
+    val plan = graft.SparkEntry.queries(name)(spark, sfDir).queryExecution
       .explainString(org.apache.spark.sql.execution.FormattedMode)
+      .replaceAll("""\[plan_id=\d+\]""", "[plan_id=N]")
+      .replaceAll("""\$*\$\$Lambda(\$\d+)?/0x\p{XDigit}+@\p{XDigit}+""", ".<lambda>")
+      .replaceAll(s"_p${ProcessHandle.current().pid()}(_\\p{XDigit}{8})?(?!\\p{XDigit})",
+        "_p<pid>")
+    val ids = scala.collection.mutable.HashMap[String, Int]()
+    """#\d+""".r.replaceAllIn(plan, m => "#" + ids.getOrElseUpdate(m.matched, ids.size))
+  }
 
   /** The operator tree whole, then at most `budget` characters of the
     * node details (the `(1) ...` sections after the tree), cut at a

@@ -20,11 +20,6 @@ import graft.streaming.{LocalCheckpointFileManager, StreamQueries}
   * real drain (no `.crc` sidecars, no forked processes). */
 class CheckpointFileManagerSpec extends SparkSpec {
 
-  private def withDir[T](body: NioPath => T): T = {
-    val dir = Files.createTempDirectory("graft_ckpt_mgr_")
-    try body(dir) finally StreamQueries.rmRf(dir)
-  }
-
   private def manager(dir: NioPath) =
     new LocalCheckpointFileManager(new Path(dir.toUri), new Configuration())
 
@@ -37,7 +32,7 @@ class CheckpointFileManagerSpec extends SparkSpec {
     out.write(text.getBytes(UTF_8))
 
   test("createAtomic publishes nothing before close, the whole file after") {
-    withDir { dir =>
+    withTempDir("graft_ckpt_mgr_") { dir =>
       val mgr = manager(dir)
       val target = new Path(dir.resolve("1.delta").toUri)
       val out = mgr.createAtomic(target, overwriteIfPossible = false)
@@ -53,7 +48,7 @@ class CheckpointFileManagerSpec extends SparkSpec {
   }
 
   test("cancel leaves neither the final file nor the temp file") {
-    withDir { dir =>
+    withTempDir("graft_ckpt_mgr_") { dir =>
       val mgr = manager(dir)
       val target = new Path(dir.resolve("2.delta").toUri)
       val out = mgr.createAtomic(target, overwriteIfPossible = true)
@@ -65,7 +60,7 @@ class CheckpointFileManagerSpec extends SparkSpec {
   }
 
   test("overwrite=false onto an existing file fails and keeps the original") {
-    withDir { dir =>
+    withTempDir("graft_ckpt_mgr_") { dir =>
       val mgr = manager(dir)
       val target = new Path(dir.resolve("0").toUri)
       val first = mgr.createAtomic(target, overwriteIfPossible = false)
@@ -81,7 +76,7 @@ class CheckpointFileManagerSpec extends SparkSpec {
   }
 
   test("overwrite=true replaces the file and drops its stale .crc sidecar") {
-    withDir { dir =>
+    withTempDir("graft_ckpt_mgr_") { dir =>
       val mgr = manager(dir)
       Files.writeString(dir.resolve("3.zip"), "old")
       Files.writeString(dir.resolve(".3.zip.crc"), "stale")
@@ -95,7 +90,7 @@ class CheckpointFileManagerSpec extends SparkSpec {
   }
 
   test("list hides .crc sidecars and temp files; delete removes a file's sidecar") {
-    withDir { dir =>
+    withTempDir("graft_ckpt_mgr_") { dir =>
       val mgr = manager(dir)
       Seq("0", ".0.crc", ".1.4f2e.tmp", "1.delta", ".1.delta.crc")
         .foreach(n => Files.writeString(dir.resolve(n), n))
@@ -121,14 +116,14 @@ class CheckpointFileManagerSpec extends SparkSpec {
     assert(RecordingAfs.calls.asScala.toSeq ===
       Seq("getFileStatus /ckpt/offsets/0", "mkdir /ckpt/commits"))
     // a file: manager never touches the registered scheme
-    withDir(dir => manager(dir).exists(new Path(dir.toUri)))
+    withTempDir("graft_ckpt_mgr_")(dir => manager(dir).exists(new Path(dir.toUri)))
     assert(RecordingAfs.calls.size === 2)
   }
 
   test("a stateful checkpoint written by Spark's default manager resumes under this one") {
     val key = "spark.sql.streaming.checkpointFileManagerClass"
     assert(!spark.conf.getAll.contains(key), s"the shared session already sets $key")
-    withDir { dir =>
+    withTempDir("graft_ckpt_mgr_") { dir =>
       val src = Files.createDirectories(dir.resolve("src"))
       val ckpt = dir.resolve("ckpt").toString
       def land(name: String, ids: Range): Unit = {

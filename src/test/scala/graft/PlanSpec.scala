@@ -441,32 +441,34 @@ class PlanSpec extends SparkSpec {
     // the join key, the dim side carries the selective filter, and the
     // scan of the fact is pruned by a runtime subquery on the dim —
     // without the filter ever being written against the fact.
-    val out = java.nio.file.Files.createTempDirectory("dpp_fact").toString
-    Tables.orders(spark, sfDir)
-      .withColumn("year", year(col("o_orderdate")))
-      .write.mode("overwrite").partitionBy("year").parquet(out)
-    val fact = spark.read.parquet(out)
-    // static pruning first: a LITERAL dim filter on the join key is
-    // propagated through the join constraint onto the fact's partition
-    // filters at plan time — no runtime pruning even needed
-    val litDim = Tables.orders(spark, sfDir)
-      .select(year(col("o_orderdate")).as("dim_year")).distinct()
-      .filter(col("dim_year") === 1996)
-    val litPlan = fact.join(litDim, col("year") === col("dim_year"))
-      .queryExecution.executedPlan.toString
-    assert(litPlan.contains("PartitionFilters: [(year#") ||
-      litPlan.contains("(year"), s"literal dim filter not propagated:\n${litPlan.take(1500)}")
-    // true DPP: the dim filter is on a NON-key column, so the partition
-    // filter can only be a runtime subquery over the dim
-    val dim = Tables.orders(spark, sfDir)
-      .select(year(col("o_orderdate")).as("dim_year"),
-        col("o_orderpriority")).distinct()
-      .filter(col("o_orderpriority") === "1-URGENT")
-    val joined = fact.join(dim, col("year") === col("dim_year"))
-    val plan = joined.queryExecution.executedPlan.toString
-    assert(plan.toLowerCase.contains("dynamicpruning"),
-      s"no dynamic partition pruning in plan:\n${plan.take(1500)}")
-    assert(joined.collect().nonEmpty)
+    withTempDir("dpp_fact") { tmp =>
+      val out = tmp.toString
+      Tables.orders(spark, sfDir)
+        .withColumn("year", year(col("o_orderdate")))
+        .write.mode("overwrite").partitionBy("year").parquet(out)
+      val fact = spark.read.parquet(out)
+      // static pruning first: a LITERAL dim filter on the join key is
+      // propagated through the join constraint onto the fact's partition
+      // filters at plan time — no runtime pruning even needed
+      val litDim = Tables.orders(spark, sfDir)
+        .select(year(col("o_orderdate")).as("dim_year")).distinct()
+        .filter(col("dim_year") === 1996)
+      val litPlan = fact.join(litDim, col("year") === col("dim_year"))
+        .queryExecution.executedPlan.toString
+      assert(litPlan.contains("PartitionFilters: [(year#") ||
+        litPlan.contains("(year"), s"literal dim filter not propagated:\n${litPlan.take(1500)}")
+      // true DPP: the dim filter is on a NON-key column, so the partition
+      // filter can only be a runtime subquery over the dim
+      val dim = Tables.orders(spark, sfDir)
+        .select(year(col("o_orderdate")).as("dim_year"),
+          col("o_orderpriority")).distinct()
+        .filter(col("o_orderpriority") === "1-URGENT")
+      val joined = fact.join(dim, col("year") === col("dim_year"))
+      val plan = joined.queryExecution.executedPlan.toString
+      assert(plan.toLowerCase.contains("dynamicpruning"),
+        s"no dynamic partition pruning in plan:\n${plan.take(1500)}")
+      assert(joined.collect().nonEmpty)
+    }
   }
 
   test("AQE splits a skewed join partition at runtime") {
@@ -778,16 +780,18 @@ class PlanSpec extends SparkSpec {
   }
 
   test("gold mart partitioned write lays out partition directories") {
-    val out = java.nio.file.Files.createTempDirectory("gold_mart").toString
-    etl.Medallion.qGoldMart.fn(spark, sfDir)
-      .write.mode("overwrite").partitionBy("year").parquet(out)
-    val dirs = new java.io.File(out).listFiles().filter(_.isDirectory).map(_.getName)
-    assert(dirs.nonEmpty && dirs.forall(_.startsWith("year=")), dirs.mkString(","))
-    // partition pruning on read: only one year's files are scanned
-    val pruned = spark.read.parquet(out).filter(col("year") === 1996)
-    val scan = pruned.queryExecution.executedPlan.toString
-    assert(pruned.count() > 0)
-    assert(scan.contains("PartitionFilters: [isnotnull(year"), scan.take(1500))
+    withTempDir("gold_mart") { tmp =>
+      val out = tmp.toString
+      etl.Medallion.qGoldMart.fn(spark, sfDir)
+        .write.mode("overwrite").partitionBy("year").parquet(out)
+      val dirs = new java.io.File(out).listFiles().filter(_.isDirectory).map(_.getName)
+      assert(dirs.nonEmpty && dirs.forall(_.startsWith("year=")), dirs.mkString(","))
+      // partition pruning on read: only one year's files are scanned
+      val pruned = spark.read.parquet(out).filter(col("year") === 1996)
+      val scan = pruned.queryExecution.executedPlan.toString
+      assert(pruned.count() > 0)
+      assert(scan.contains("PartitionFilters: [isnotnull(year"), scan.take(1500))
+    }
   }
 
   test("shuffle-exchange counts match the committed per-query fixture") {
@@ -837,5 +841,16 @@ class PlanSpec extends SparkSpec {
     assert(shrank.isEmpty,
       s"exchange-count decrease (good!) as (shuffles, broadcasts) — regenerate the " +
         s"fixture to re-pin at the lower count: ${shrank.mkString(", ")}")
+  }
+
+  test("DumpPlans masks run-varying tokens: two dumps of one plan are equal") {
+    // plan ids, expression ids and the MapPartitions function's JVM
+    // identity all change on every build of the same plan
+    def dump() = tools.DumpPlans.formatted(spark, "q_image_decode", sfDir)
+    val (a, b) = (dump(), dump())
+    assert(a.contains("MapPartitions") && a.contains("[plan_id=N]") &&
+      a.contains("doc_id#0L"), a)
+    assert(!a.contains("$$Lambda$"), a)
+    assert(a === b)
   }
 }

@@ -398,6 +398,26 @@ class PropertySpec extends SparkSpec {
         b(i) = (b(i) ^ (1 << (flipSeed % 8))).toByte
         complete(b)
     }
+    // the single-frame path (q_image_decode, q_media_resize) goes
+    // through the same decodeFrame guard: over truncated and bit-flipped
+    // images, decode + statistics + resample return or raise, never hang
+    def completeFrame(b: Array[Byte]): Unit = {
+      scala.util.Try(ops.Multimodal.grayStats(ops.Multimodal.decodeFrame(b).getRaster))
+      scala.util.Try(ops.Multimodal.resizeNN(ops.Multimodal.decodeFrame(b), 16))
+      ()
+    }
+    forAllN(Gen.zip(Gen.chooseNum(0L, 5000L), Gen.chooseNum(1, 9999)), 60) {
+      case (id, cutSeed) =>
+        val clean = ops.Multimodal.plantedPng(id)
+        completeFrame(clean.take(1 + cutSeed % (clean.length - 1)))
+    }
+    forAllN(Gen.zip(Gen.chooseNum(0L, 5000L), Gen.chooseNum(0, 99999)), 60) {
+      case (id, flipSeed) =>
+        val b = ops.Multimodal.plantedPng(id).clone()
+        val i = flipSeed % b.length
+        b(i) = (b(i) ^ (1 << (flipSeed % 8))).toByte
+        completeFrame(b)
+    }
     // and the clean-path pin: the factored kernels reproduce the
     // planted geometry exactly (so the fuzz target IS the graded code)
     (0L until 20L).foreach { id =>

@@ -486,31 +486,32 @@ class ScaleSmokeSpec extends SparkSpec {
     // 50 against a ~10k/hour pseudo-uniform base) makes the spike
     // flag non-degenerate, so the equality isn't all-false agreement.
     import org.apache.spark.sql.types.{StringType, StructField, StructType, TimestampType}
-    val base = java.nio.file.Files.createTempDirectory("graft_drain_smoke")
-    val staging = base.resolve("staging").toString
-    val sink = base.resolve("sink").toString
-    val ckpt = base.resolve("ckpt").toString
-    val ev = spark.range(0L, 1000000L, 1L, 16).select(
-      expr("""timestamp_seconds(1700000000L + CASE WHEN id % 11 = 0
-                THEN 180000 ELSE (id * 37) % 360000 END)""").as("ts"),
-      concat(lit("t"), pmod(col("id"), lit(7))).as("event_type"))
-    ev.coalesce(16).write.parquet(staging)
-    val schema = StructType(Seq(
-      StructField("ts", TimestampType), StructField("event_type", StringType)))
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "2").parquet(staging)
-    val q = streaming.StreamingDemo.startRateSpikeSink(
-      stream, sink, Some(ckpt), availableNow = true)
-    assert(q.awaitTermination(300000L), "drain did not terminate")
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSeq
-    val drained = spark.read.parquet(s"$sink/spikes")
-      .orderBy(col("event_type"), col("hr"))
-    // read the batch twin from the SAME staged files, not the range
-    // plan: the comparison must isolate the streaming machinery, and
-    // staging already round-trips the values
-    val batch = ops.EventsOps.rateSpikes(spark.read.schema(schema).parquet(staging))
-    assert(rows(drained) === rows(batch))
-    assert(drained.filter(col("spike")).count() > 0, "planted burst not flagged")
+    withTempDir("graft_drain_smoke") { base =>
+      val staging = base.resolve("staging").toString
+      val sink = base.resolve("sink").toString
+      val ckpt = base.resolve("ckpt").toString
+      val ev = spark.range(0L, 1000000L, 1L, 16).select(
+        expr("""timestamp_seconds(1700000000L + CASE WHEN id % 11 = 0
+                  THEN 180000 ELSE (id * 37) % 360000 END)""").as("ts"),
+        concat(lit("t"), pmod(col("id"), lit(7))).as("event_type"))
+      ev.coalesce(16).write.parquet(staging)
+      val schema = StructType(Seq(
+        StructField("ts", TimestampType), StructField("event_type", StringType)))
+      val stream = spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "2").parquet(staging)
+      val q = streaming.StreamingDemo.startRateSpikeSink(
+        stream, sink, Some(ckpt), availableNow = true)
+      assert(q.awaitTermination(300000L), "drain did not terminate")
+      def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSeq
+      val drained = spark.read.parquet(s"$sink/spikes")
+        .orderBy(col("event_type"), col("hr"))
+      // read the batch twin from the SAME staged files, not the range
+      // plan: the comparison must isolate the streaming machinery, and
+      // staging already round-trips the values
+      val batch = ops.EventsOps.rateSpikes(spark.read.schema(schema).parquet(staging))
+      assert(rows(drained) === rows(batch))
+      assert(drained.filter(col("spike")).count() > 0, "planted burst not flagged")
+    }
   }
 
   test("windowed watermark-append drain on 1M events across 8+ micro-batches equals batch") {
@@ -525,76 +526,77 @@ class ScaleSmokeSpec extends SparkSpec {
     // IS time order (equal mtimes would leave lateness ambiguous),
     // and a far-future sentinel stamped last closes every real window.
     import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType, TimestampType}
-    val base = java.nio.file.Files.createTempDirectory("graft_windowed_smoke")
-    val staging = base.resolve("staging")
-    val sink = base.resolve("sink").toString
-    val ckpt = base.resolve("ckpt").toString
-    spark.range(0L, 1000000L, 1L, 16).select(
-      expr("timestamp_seconds(1700000000L + id)").as("ts"),
-      concat(lit("t"), pmod(col("id"), lit(7))).as("event_type"),
-      pmod(col("id"), lit(97)).cast("double").as("value"))
-      .write.parquet(staging.toString)
-    val mtime0 = System.currentTimeMillis() - 3600000L
-    val listed = java.nio.file.Files.list(staging)
-    val partList = try listed
-      .filter(p => p.getFileName.toString.endsWith(".parquet"))
-      .sorted(new java.util.Comparator[java.nio.file.Path] {
-        def compare(a: java.nio.file.Path, b: java.nio.file.Path): Int =
-          a.getFileName.toString.compareTo(b.getFileName.toString)
-      })
-      .collect(java.util.stream.Collectors.toList[java.nio.file.Path])
-    finally listed.close()
-    assert(partList.size() === 16)
-    (0 until partList.size()).foreach { i =>
-      java.nio.file.Files.setLastModifiedTime(partList.get(i),
-        java.nio.file.attribute.FileTime.fromMillis(mtime0 + i * 60000L))
-    }
-    val tmp = base.resolve("sentinel_tmp")
-    spark.range(1).select(
-      expr("timestamp_seconds(1700000000L + 1000000L + 86400L)").as("ts"),
-      lit("zzz_sentinel").as("event_type"), lit(0.0).as("value"))
-      .coalesce(1).write.parquet(tmp.toString)
-    val sStream = java.nio.file.Files.list(tmp)
-    val sPart = try sStream.filter(p =>
-        p.getFileName.toString.endsWith(".parquet")).findFirst().orElseThrow()
-    finally sStream.close()
-    val sDest = staging.resolve("zzz_sentinel.parquet")
-    java.nio.file.Files.copy(sPart, sDest)
-    java.nio.file.Files.setLastModifiedTime(sDest,
-      java.nio.file.attribute.FileTime.fromMillis(mtime0 + 17 * 60000L))
-    val schema = StructType(Seq(StructField("ts", TimestampType),
-      StructField("event_type", StringType), StructField("value", DoubleType)))
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "2").parquet(staging.toString)
-    val q = streaming.StreamingDemo.windowedCountsGraded(stream)
-      .writeStream.outputMode("append")
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          batch.write.mode("overwrite").parquet(s"$sink/closed/batch_id=$batchId")
+    withTempDir("graft_windowed_smoke") { base =>
+      val staging = base.resolve("staging")
+      val sink = base.resolve("sink").toString
+      val ckpt = base.resolve("ckpt").toString
+      spark.range(0L, 1000000L, 1L, 16).select(
+        expr("timestamp_seconds(1700000000L + id)").as("ts"),
+        concat(lit("t"), pmod(col("id"), lit(7))).as("event_type"),
+        pmod(col("id"), lit(97)).cast("double").as("value"))
+        .write.parquet(staging.toString)
+      val mtime0 = System.currentTimeMillis() - 3600000L
+      val listed = java.nio.file.Files.list(staging)
+      val partList = try listed
+        .filter(p => p.getFileName.toString.endsWith(".parquet"))
+        .sorted(new java.util.Comparator[java.nio.file.Path] {
+          def compare(a: java.nio.file.Path, b: java.nio.file.Path): Int =
+            a.getFileName.toString.compareTo(b.getFileName.toString)
+        })
+        .collect(java.util.stream.Collectors.toList[java.nio.file.Path])
+      finally listed.close()
+      assert(partList.size() === 16)
+      (0 until partList.size()).foreach { i =>
+        java.nio.file.Files.setLastModifiedTime(partList.get(i),
+          java.nio.file.attribute.FileTime.fromMillis(mtime0 + i * 60000L))
       }
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    assert(q.awaitTermination(300000L), "drain did not terminate")
-    val closed = spark.read.parquet(s"$sink/closed")
-    assert(closed.select(countDistinct(col("batch_id"))).head.getLong(0) >= 4,
-      "windows should close incrementally across many micro-batches")
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSeq
-    val drained = closed.filter(col("event_type") =!= "zzz_sentinel")
-      .select(col("bucket_start"), col("event_type"), col("n"), col("total_micros"))
-      .orderBy(col("bucket_start"), col("event_type"))
-    // batch twin over the SAME staged files — isolates the streaming
-    // machinery from the staging round-trip
-    val batch = spark.read.schema(schema).parquet(staging.toString)
-      .filter(col("event_type") =!= "zzz_sentinel")
-      .groupBy((floor(unix_micros(col("ts")) / 300000000L) * 300L)
-        .cast("long").as("bucket_start"), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum((col("value").cast("decimal(18,6)") * 1000000).cast("long"))
-          .as("total_micros"))
-      .orderBy(col("bucket_start"), col("event_type"))
-    assert(rows(drained) === rows(batch))
+      val tmp = base.resolve("sentinel_tmp")
+      spark.range(1).select(
+        expr("timestamp_seconds(1700000000L + 1000000L + 86400L)").as("ts"),
+        lit("zzz_sentinel").as("event_type"), lit(0.0).as("value"))
+        .coalesce(1).write.parquet(tmp.toString)
+      val sStream = java.nio.file.Files.list(tmp)
+      val sPart = try sStream.filter(p =>
+          p.getFileName.toString.endsWith(".parquet")).findFirst().orElseThrow()
+      finally sStream.close()
+      val sDest = staging.resolve("zzz_sentinel.parquet")
+      java.nio.file.Files.copy(sPart, sDest)
+      java.nio.file.Files.setLastModifiedTime(sDest,
+        java.nio.file.attribute.FileTime.fromMillis(mtime0 + 17 * 60000L))
+      val schema = StructType(Seq(StructField("ts", TimestampType),
+        StructField("event_type", StringType), StructField("value", DoubleType)))
+      val stream = spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "2").parquet(staging.toString)
+      val q = streaming.StreamingDemo.windowedCountsGraded(stream)
+        .writeStream.outputMode("append")
+        .foreachBatch {
+          (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
+           batchId: Long) =>
+            batch.write.mode("overwrite").parquet(s"$sink/closed/batch_id=$batchId")
+        }
+        .option("checkpointLocation", ckpt)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      assert(q.awaitTermination(300000L), "drain did not terminate")
+      val closed = spark.read.parquet(s"$sink/closed")
+      assert(closed.select(countDistinct(col("batch_id"))).head.getLong(0) >= 4,
+        "windows should close incrementally across many micro-batches")
+      def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSeq
+      val drained = closed.filter(col("event_type") =!= "zzz_sentinel")
+        .select(col("bucket_start"), col("event_type"), col("n"), col("total_micros"))
+        .orderBy(col("bucket_start"), col("event_type"))
+      // batch twin over the SAME staged files — isolates the streaming
+      // machinery from the staging round-trip
+      val batch = spark.read.schema(schema).parquet(staging.toString)
+        .filter(col("event_type") =!= "zzz_sentinel")
+        .groupBy((floor(unix_micros(col("ts")) / 300000000L) * 300L)
+          .cast("long").as("bucket_start"), col("event_type"))
+        .agg(count(lit(1)).as("n"),
+          sum((col("value").cast("decimal(18,6)") * 1000000).cast("long"))
+            .as("total_micros"))
+        .orderBy(col("bucket_start"), col("event_type"))
+      assert(rows(drained) === rows(batch))
+    }
   }
 
   test("TSV connector on a ~70 MB table: 1 MB splits cross ~70 line boundaries losslessly") {
@@ -605,26 +607,28 @@ class ScaleSmokeSpec extends SparkSpec {
     // off-by-one shows up as a count or checksum drift. The checksum
     // is an exact integer sum, order-free by construction.
     val fmt = classOf[sources.v2.TsvDataSource].getName
-    val dir = java.nio.file.Files.createTempDirectory("graft_tsv_smoke").toString
-    spark.range(0L, 2000000L, 1L, 16).select(
-        col("id"),
-        concat(lit("name_"), col("id") % 977).as("s"),
-        (col("id") % 9973).cast("double").as("v"))
-      .write.format(fmt).mode("append").save(dir)
-    val back = spark.read.format(fmt)
-      .option("split_bytes", (1024 * 1024).toString).load(dir)
-      .filter(col("v") > 1.0) // pushed: evaluates inside every split reader
-    val got = back.agg(
-      count(lit(1)).as("n"), sum(col("id")).as("sid"),
-      sum(col("v").cast("long")).as("sv")).collect()(0)
-    // exact twins computed from the generator, not a second read
-    val exp = spark.range(0L, 2000000L).select(col("id"),
-        (col("id") % 9973).cast("long").as("v"))
-      .filter(col("v") > 1).agg(
-        count(lit(1)), sum(col("id")), sum(col("v"))).collect()(0)
-    assert(got.getLong(0) === exp.getLong(0))
-    assert(got.getLong(1) === exp.getLong(1))
-    assert(got.getLong(2) === exp.getLong(2))
+    withTempDir("graft_tsv_smoke") { tmp =>
+      val dir = tmp.toString
+      spark.range(0L, 2000000L, 1L, 16).select(
+          col("id"),
+          concat(lit("name_"), col("id") % 977).as("s"),
+          (col("id") % 9973).cast("double").as("v"))
+        .write.format(fmt).mode("append").save(dir)
+      val back = spark.read.format(fmt)
+        .option("split_bytes", (1024 * 1024).toString).load(dir)
+        .filter(col("v") > 1.0) // pushed: evaluates inside every split reader
+      val got = back.agg(
+        count(lit(1)).as("n"), sum(col("id")).as("sid"),
+        sum(col("v").cast("long")).as("sv")).collect()(0)
+      // exact twins computed from the generator, not a second read
+      val exp = spark.range(0L, 2000000L).select(col("id"),
+          (col("id") % 9973).cast("long").as("v"))
+        .filter(col("v") > 1).agg(
+          count(lit(1)), sum(col("id")), sum(col("v"))).collect()(0)
+      assert(got.getLong(0) === exp.getLong(0))
+      assert(got.getLong(1) === exp.getLong(1))
+      assert(got.getLong(2) === exp.getLong(2))
+    }
   }
 
   test("banding volumes grow linearly across a decade; componentLabels branch-identical on its pairs") {

@@ -120,34 +120,35 @@ class StreamingSpec extends SparkSpec {
 
     val impressions = MemoryStream[Ev]
     val clicks = MemoryStream[Ev]
-    val out = StreamingDemo.clickAttributionOuter(impressions.toDF(), clicks.toDF())
-      .writeStream.format("memory").queryName("attrib_outer_test")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("attrib_outer").toString)
-      .start()
-    try {
-      impressions.addData(
-        Ev(100L, ts("2024-01-01 00:00:00"), 1L, "imp", 0.0), // will match
-        Ev(200L, ts("2024-01-01 00:00:00"), 2L, "imp", 0.0)) // never clicked
-      clicks.addData(
-        Ev(100L, ts("2024-01-01 00:05:00"), 1L, "click", 1.5))
-      out.processAllAvailable()
-      // the unmatched row may not emit yet: the state store must first
-      // learn no click can still arrive. Advance both watermarks far
-      // past ad 200's window, then run the extra batch that flushes.
-      impressions.addData(Ev(900L, ts("2024-01-01 09:00:00"), 9L, "imp", 0.0))
-      clicks.addData(Ev(901L, ts("2024-01-01 09:00:00"), 9L, "click", 0.0))
-      out.processAllAvailable()
-      impressions.addData(Ev(902L, ts("2024-01-01 09:30:00"), 9L, "imp", 0.0))
-      out.processAllAvailable()
-      val rows = spark.table("attrib_outer_test")
-        .filter(col("ad_id") < 900L)
-        .select("ad_id", "click_value").collect()
-        .map(r => (r.getLong(0), Option(r.get(1)))).toMap
-      assert(rows(100L) === Some(1.5), "matched impression keeps its click")
-      assert(rows.contains(200L) && rows(200L).isEmpty,
-        "unmatched impression must emit with null click after the watermark")
-    } finally out.stop()
+    withTempDir("attrib_outer") { tmp =>
+      val out = StreamingDemo.clickAttributionOuter(impressions.toDF(), clicks.toDF())
+        .writeStream.format("memory").queryName("attrib_outer_test")
+        .option("checkpointLocation", tmp.toString)
+        .start()
+      try {
+        impressions.addData(
+          Ev(100L, ts("2024-01-01 00:00:00"), 1L, "imp", 0.0), // will match
+          Ev(200L, ts("2024-01-01 00:00:00"), 2L, "imp", 0.0)) // never clicked
+        clicks.addData(
+          Ev(100L, ts("2024-01-01 00:05:00"), 1L, "click", 1.5))
+        out.processAllAvailable()
+        // the unmatched row may not emit yet: the state store must first
+        // learn no click can still arrive. Advance both watermarks far
+        // past ad 200's window, then run the extra batch that flushes.
+        impressions.addData(Ev(900L, ts("2024-01-01 09:00:00"), 9L, "imp", 0.0))
+        clicks.addData(Ev(901L, ts("2024-01-01 09:00:00"), 9L, "click", 0.0))
+        out.processAllAvailable()
+        impressions.addData(Ev(902L, ts("2024-01-01 09:30:00"), 9L, "imp", 0.0))
+        out.processAllAvailable()
+        val rows = spark.table("attrib_outer_test")
+          .filter(col("ad_id") < 900L)
+          .select("ad_id", "click_value").collect()
+          .map(r => (r.getLong(0), Option(r.get(1)))).toMap
+        assert(rows(100L) === Some(1.5), "matched impression keeps its click")
+        assert(rows.contains(200L) && rows(200L).isEmpty,
+          "unmatched impression must emit with null click after the watermark")
+      } finally out.stop()
+    }
   }
 
   test("watermark drops late data from finalized windows (append mode)") {
@@ -220,23 +221,24 @@ class StreamingSpec extends SparkSpec {
     val prev = spark.conf.getOption(key)
     spark.conf.set(key,
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val out = StreamingDemo.runningTotals(spark, input.toDF())
-      .writeStream.format("memory").queryName("rocksdb_test")
-      .outputMode("update")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("rocks_ckpt").toString)
-      .start()
-    try {
-      input.addData(
-        Ev(1L, ts("2024-01-01 00:01:00"), 7L, "click", 2.0),
-        Ev(2L, ts("2024-01-01 00:02:00"), 7L, "click", 3.0))
-      out.processAllAvailable()
-      val row = spark.table("rocksdb_test")
-        .orderBy(col("n").desc).select("userId", "n", "total").head()
-      assert((row.getLong(0), row.getLong(1), row.getDouble(2)) === ((7L, 2L, 5.0)))
-    } finally {
-      out.stop()
-      prev match { case Some(v) => spark.conf.set(key, v); case None => spark.conf.unset(key) }
+    withTempDir("rocks_ckpt") { tmp =>
+      val out = StreamingDemo.runningTotals(spark, input.toDF())
+        .writeStream.format("memory").queryName("rocksdb_test")
+        .outputMode("update")
+        .option("checkpointLocation", tmp.toString)
+        .start()
+      try {
+        input.addData(
+          Ev(1L, ts("2024-01-01 00:01:00"), 7L, "click", 2.0),
+          Ev(2L, ts("2024-01-01 00:02:00"), 7L, "click", 3.0))
+        out.processAllAvailable()
+        val row = spark.table("rocksdb_test")
+          .orderBy(col("n").desc).select("userId", "n", "total").head()
+        assert((row.getLong(0), row.getLong(1), row.getDouble(2)) === ((7L, 2L, 5.0)))
+      } finally {
+        out.stop()
+        prev match { case Some(v) => spark.conf.set(key, v); case None => spark.conf.unset(key) }
+      }
     }
   }
 
@@ -246,25 +248,29 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
 
     val input = MemoryStream[Ev]
-    val out = java.nio.file.Files.createTempDirectory("febatch").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("febatch_ckpt").toString
-    val q = StreamingDemo.startPartitionedBatchSink(input.toDF(), out, Some(ckpt))
-    try {
-      input.addData(Ev(1L, ts("2024-01-01 00:01:00"), 1L, "click", 1.0))
-      q.processAllAvailable()
-      input.addData(Ev(2L, ts("2024-01-01 00:02:00"), 1L, "view", 2.0))
-      q.processAllAvailable()
-      val landed = spark.read.parquet(out)
-      assert(landed.count() === 2)
-      // batch_id partitioning is what makes a replay overwrite itself
-      assert(landed.columns.contains("batch_id"))
-      assert(landed.select("batch_id").distinct().count() === 2)
-      // simulate a batch replay: rewriting batch 0's partition must not
-      // change total row count (idempotence)
-      spark.createDataFrame(Seq(Ev(1L, ts("2024-01-01 00:01:00"), 1L, "click", 1.0)))
-        .write.mode("overwrite").parquet(s"$out/batch_id=0")
-      assert(spark.read.parquet(out).count() === 2)
-    } finally q.stop()
+    withTempDir("febatch") { outDir =>
+      val out = outDir.toString
+      withTempDir("febatch_ckpt") { ckptDir =>
+        val ckpt = ckptDir.toString
+        val q = StreamingDemo.startPartitionedBatchSink(input.toDF(), out, Some(ckpt))
+        try {
+          input.addData(Ev(1L, ts("2024-01-01 00:01:00"), 1L, "click", 1.0))
+          q.processAllAvailable()
+          input.addData(Ev(2L, ts("2024-01-01 00:02:00"), 1L, "view", 2.0))
+          q.processAllAvailable()
+          val landed = spark.read.parquet(out)
+          assert(landed.count() === 2)
+          // batch_id partitioning is what makes a replay overwrite itself
+          assert(landed.columns.contains("batch_id"))
+          assert(landed.select("batch_id").distinct().count() === 2)
+          // simulate a batch replay: rewriting batch 0's partition must not
+          // change total row count (idempotence)
+          spark.createDataFrame(Seq(Ev(1L, ts("2024-01-01 00:01:00"), 1L, "click", 1.0)))
+            .write.mode("overwrite").parquet(s"$out/batch_id=0")
+          assert(spark.read.parquet(out).count() === 2)
+        } finally q.stop()
+      }
+    }
   }
 
   test("foreachBatch rate-spike sink equals the batch twin after draining") {
@@ -273,33 +279,37 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
 
     val input = MemoryStream[Ev]
-    val out = java.nio.file.Files.createTempDirectory("ratespike").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("ratespike_ckpt").toString
-    // a quiet day then a burst hour, split MID-HOUR across micro-
-    // batches so the pin proves per-batch partial counts re-sum to
-    // the global hourly grain
-    def hr(h: Int, m: Int) = ts(f"2024-01-01 $h%02d:$m%02d:00")
-    val quiet = (0 until 10).map(h =>
-      Ev(h.toLong, hr(h, 5), 1L, "click", 1.0))
-    val burst = (0 until 12).map(i =>
-      Ev(100L + i, hr(10, i * 4), 1L, "click", 1.0))
-    val all = quiet ++ burst
-    val q = StreamingDemo.startRateSpikeSink(input.toDF(), out, Some(ckpt))
-    try {
-      input.addData(all.take(13): _*) // quiet hours + part of the burst
-      q.processAllAvailable()
-      input.addData(all.drop(13): _*) // the rest of the burst hour
-      q.processAllAvailable()
-      val streamed = spark.read.parquet(s"$out/spikes")
-        .collect().map(_.toSeq).toSet
-      val batch = ops.EventsOps.rateSpikes(spark.createDataFrame(all))
-        .collect().map(_.toSeq).toSet
-      assert(streamed === batch)
-      // and the burst hour really is the one flagged spike
-      val spikes = spark.read.parquet(s"$out/spikes")
-        .filter(col("spike")).collect()
-      assert(spikes.length === 1 && spikes.head.getAs[Long]("n") === 12L)
-    } finally q.stop()
+    withTempDir("ratespike") { outDir =>
+      val out = outDir.toString
+      withTempDir("ratespike_ckpt") { ckptDir =>
+        val ckpt = ckptDir.toString
+        // a quiet day then a burst hour, split MID-HOUR across micro-
+        // batches so the pin proves per-batch partial counts re-sum to
+        // the global hourly grain
+        def hr(h: Int, m: Int) = ts(f"2024-01-01 $h%02d:$m%02d:00")
+        val quiet = (0 until 10).map(h =>
+          Ev(h.toLong, hr(h, 5), 1L, "click", 1.0))
+        val burst = (0 until 12).map(i =>
+          Ev(100L + i, hr(10, i * 4), 1L, "click", 1.0))
+        val all = quiet ++ burst
+        val q = StreamingDemo.startRateSpikeSink(input.toDF(), out, Some(ckpt))
+        try {
+          input.addData(all.take(13): _*) // quiet hours + part of the burst
+          q.processAllAvailable()
+          input.addData(all.drop(13): _*) // the rest of the burst hour
+          q.processAllAvailable()
+          val streamed = spark.read.parquet(s"$out/spikes")
+            .collect().map(_.toSeq).toSet
+          val batch = ops.EventsOps.rateSpikes(spark.createDataFrame(all))
+            .collect().map(_.toSeq).toSet
+          assert(streamed === batch)
+          // and the burst hour really is the one flagged spike
+          val spikes = spark.read.parquet(s"$out/spikes")
+            .filter(col("spike")).collect()
+          assert(spikes.length === 1 && spikes.head.getAs[Long]("n") === 12L)
+        } finally q.stop()
+      }
+    }
   }
 
   test("Trigger.AvailableNow drains what exists, then stops on its own") {
@@ -526,34 +536,35 @@ class StreamingSpec extends SparkSpec {
     spark.conf.set(key,
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val input = MemoryStream[Ev]
-    val out = StreamingDemo.runningTotalsV2(spark, input.toDF())
-      .writeStream.format("memory").queryName("tws_test")
-      .outputMode("update")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("tws_ckpt").toString)
-      .start()
-    try {
-      input.addData(
-        Ev(1L, ts("2024-01-01 00:01:00"), 7L, "click", 1.5),
-        Ev(2L, ts("2024-01-01 00:02:00"), 7L, "click", 2.5))
-      out.processAllAvailable()
-      input.addData(
-        Ev(3L, ts("2024-01-01 00:03:00"), 7L, "view", 4.0),
-        Ev(4L, ts("2024-01-01 00:04:00"), 7L, "view", 0.5))
-      out.processAllAvailable()
-      val last = spark.table("tws_test")
-        .filter(col("userId") === 7L).orderBy(col("n").desc).head()
-      // totals identical to what v1 (mapGroupsWithState) accumulates …
-      assert(last.getAs[Long]("n") === 4L)
-      assert(math.abs(last.getAs[Double]("total") - 8.5) < 1e-9)
-      // … and the bounded ListState holds exactly the batch twin's
-      // last-3 window (q_events_running_totals: values 2.5, 4.0, 0.5
-      // by ts order = arrival order here → recent_n 3, recent_max 4.0)
-      assert(last.getAs[Int]("recentN") === 3)
-      assert(math.abs(last.getAs[Double]("recentMax") - 4.0) < 1e-9)
-    } finally {
-      out.stop()
-      prev match { case Some(v) => spark.conf.set(key, v); case None => spark.conf.unset(key) }
+    withTempDir("tws_ckpt") { tmp =>
+      val out = StreamingDemo.runningTotalsV2(spark, input.toDF())
+        .writeStream.format("memory").queryName("tws_test")
+        .outputMode("update")
+        .option("checkpointLocation", tmp.toString)
+        .start()
+      try {
+        input.addData(
+          Ev(1L, ts("2024-01-01 00:01:00"), 7L, "click", 1.5),
+          Ev(2L, ts("2024-01-01 00:02:00"), 7L, "click", 2.5))
+        out.processAllAvailable()
+        input.addData(
+          Ev(3L, ts("2024-01-01 00:03:00"), 7L, "view", 4.0),
+          Ev(4L, ts("2024-01-01 00:04:00"), 7L, "view", 0.5))
+        out.processAllAvailable()
+        val last = spark.table("tws_test")
+          .filter(col("userId") === 7L).orderBy(col("n").desc).head()
+        // totals identical to what v1 (mapGroupsWithState) accumulates …
+        assert(last.getAs[Long]("n") === 4L)
+        assert(math.abs(last.getAs[Double]("total") - 8.5) < 1e-9)
+        // … and the bounded ListState holds exactly the batch twin's
+        // last-3 window (q_events_running_totals: values 2.5, 4.0, 0.5
+        // by ts order = arrival order here → recent_n 3, recent_max 4.0)
+        assert(last.getAs[Int]("recentN") === 3)
+        assert(math.abs(last.getAs[Double]("recentMax") - 4.0) < 1e-9)
+      } finally {
+        out.stop()
+        prev match { case Some(v) => spark.conf.set(key, v); case None => spark.conf.unset(key) }
+      }
     }
   }
 
@@ -779,54 +790,55 @@ class StreamingSpec extends SparkSpec {
     // cost, identical result.
     val s = spark
     import s.implicits._
-    val base = java.nio.file.Files.createTempDirectory("availnow_resume")
-    val staging = base.resolve("staging").toString
-    val sink = base.resolve("sink").toString
-    val ckpt = base.resolve("ckpt").toString
-    def hr(h: Int, m: Int) = ts(f"2024-01-01 $h%02d:$m%02d:00")
-    // 8 quiet hours staged as 4 files, then a later burst hour as the
-    // separately-arriving 5th file
-    val first = (0 until 40).map(i =>
-      (hr(i % 8, (i * 7) % 60), if (i % 3 == 0) "view" else "click"))
-    val late = (0 until 9).map(i => (hr(9, i * 6), "click"))
-    first.toDF("ts", "event_type").repartition(4).write.parquet(staging)
+    withTempDir("availnow_resume") { base =>
+      val staging = base.resolve("staging").toString
+      val sink = base.resolve("sink").toString
+      val ckpt = base.resolve("ckpt").toString
+      def hr(h: Int, m: Int) = ts(f"2024-01-01 $h%02d:$m%02d:00")
+      // 8 quiet hours staged as 4 files, then a later burst hour as the
+      // separately-arriving 5th file
+      val first = (0 until 40).map(i =>
+        (hr(i % 8, (i * 7) % 60), if (i % 3 == 0) "view" else "click"))
+      val late = (0 until 9).map(i => (hr(9, i * 6), "click"))
+      first.toDF("ts", "event_type").repartition(4).write.parquet(staging)
 
-    def drain(): Unit = {
-      val stream = s.readStream.schema(s.read.parquet(staging).schema)
-        .option("maxFilesPerTrigger", "2").parquet(staging)
-      val q = StreamingDemo.startRateSpikeSink(
-        stream, sink, Some(ckpt), availableNow = true)
-      assert(q.awaitTermination(120000L), "AvailableNow drain did not terminate")
+      def drain(): Unit = {
+        val stream = s.readStream.schema(s.read.parquet(staging).schema)
+          .option("maxFilesPerTrigger", "2").parquet(staging)
+        val q = StreamingDemo.startRateSpikeSink(
+          stream, sink, Some(ckpt), availableNow = true)
+        assert(q.awaitTermination(120000L), "AvailableNow drain did not terminate")
+      }
+      def batchIds: Set[Long] = s.read.parquet(s"$sink/hourly_parts")
+        .select(col("batch_id").cast("long")).distinct()
+        .collect().map(_.getLong(0)).toSet
+      def ledgerRows(ids: Set[Long]) = s.read.parquet(s"$sink/hourly_parts")
+        .filter(col("batch_id").cast("long").isin(ids.toSeq: _*))
+        .collect().map(_.toSeq).toSet
+
+      drain()
+      assert(batchIds === Set(0L, 1L)) // 4 files / maxFilesPerTrigger=2
+      val committed = ledgerRows(Set(0L, 1L))
+
+      late.toDF("ts", "event_type").coalesce(1)
+        .write.mode("append").parquet(staging)
+      drain() // same checkpoint — resume, not re-drain
+      assert(batchIds === Set(0L, 1L, 2L),
+        "resume must add exactly one micro-batch for the one new file")
+      // the new batch carries exactly the new rows (a full re-read would
+      // put all 49 events' weight here), and the old partitions are
+      // untouched — the incremental-cost half of the claim
+      val newN = s.read.parquet(s"$sink/hourly_parts")
+        .filter(col("batch_id").cast("long") === 2L)
+        .agg(sum(col("n"))).head.getLong(0)
+      assert(newN === late.size.toLong)
+      assert(ledgerRows(Set(0L, 1L)) === committed)
+      // the identical-result half: merged spikes == batch twin over all 5
+      val streamed = s.read.parquet(s"$sink/spikes").collect().map(_.toSeq).toSet
+      val twin = ops.EventsOps.rateSpikes(s.read.parquet(staging))
+        .collect().map(_.toSeq).toSet
+      assert(streamed === twin)
     }
-    def batchIds: Set[Long] = s.read.parquet(s"$sink/hourly_parts")
-      .select(col("batch_id").cast("long")).distinct()
-      .collect().map(_.getLong(0)).toSet
-    def ledgerRows(ids: Set[Long]) = s.read.parquet(s"$sink/hourly_parts")
-      .filter(col("batch_id").cast("long").isin(ids.toSeq: _*))
-      .collect().map(_.toSeq).toSet
-
-    drain()
-    assert(batchIds === Set(0L, 1L)) // 4 files / maxFilesPerTrigger=2
-    val committed = ledgerRows(Set(0L, 1L))
-
-    late.toDF("ts", "event_type").coalesce(1)
-      .write.mode("append").parquet(staging)
-    drain() // same checkpoint — resume, not re-drain
-    assert(batchIds === Set(0L, 1L, 2L),
-      "resume must add exactly one micro-batch for the one new file")
-    // the new batch carries exactly the new rows (a full re-read would
-    // put all 49 events' weight here), and the old partitions are
-    // untouched — the incremental-cost half of the claim
-    val newN = s.read.parquet(s"$sink/hourly_parts")
-      .filter(col("batch_id").cast("long") === 2L)
-      .agg(sum(col("n"))).head.getLong(0)
-    assert(newN === late.size.toLong)
-    assert(ledgerRows(Set(0L, 1L)) === committed)
-    // the identical-result half: merged spikes == batch twin over all 5
-    val streamed = s.read.parquet(s"$sink/spikes").collect().map(_.toSeq).toSet
-    val twin = ops.EventsOps.rateSpikes(s.read.parquet(staging))
-      .collect().map(_.toSeq).toSet
-    assert(streamed === twin)
   }
 
   test("drain state never exceeds the documented bound (progress capture)") {
@@ -925,22 +937,21 @@ class StreamingSpec extends SparkSpec {
     // NumberFormatException here used to take down every drain in
     // the JVM).
     import java.nio.file.{Files, Paths}
-    val scratch = Files.createTempDirectory("graft_sweep_spec_")
-    def plant(name: String): java.nio.file.Path = {
-      val d = scratch.resolve(name)
-      Files.createDirectories(d.resolve("ckpt"))
-      Files.writeString(d.resolve("ckpt").resolve("offsets"), "x")
-      d
-    }
-    // 999999999 exceeds Linux's pid space (pid_max caps at 2^22), so
-    // no live process can own it — deterministic "dead"
-    val dead = plant("graft_stream_drain_sf_p999999999")
-    val live = plant("graft_stream_drain_sf_p" + ProcessHandle.current().pid())
-    val emptySuffix = plant("graft_stream_hostile_p")
-    val overLong = plant("graft_stream_hostile_p99999999999999999999999999")
-    val nonDigit = plant("graft_stream_hostile_p12x34")
-    val foreign = plant("unrelated_tool_output")
-    try {
+    withTempDir("graft_sweep_spec_") { scratch =>
+      def plant(name: String): java.nio.file.Path = {
+        val d = scratch.resolve(name)
+        Files.createDirectories(d.resolve("ckpt"))
+        Files.writeString(d.resolve("ckpt").resolve("offsets"), "x")
+        d
+      }
+      // 999999999 exceeds Linux's pid space (pid_max caps at 2^22), so
+      // no live process can own it — deterministic "dead"
+      val dead = plant("graft_stream_drain_sf_p999999999")
+      val live = plant("graft_stream_drain_sf_p" + ProcessHandle.current().pid())
+      val emptySuffix = plant("graft_stream_hostile_p")
+      val overLong = plant("graft_stream_hostile_p99999999999999999999999999")
+      val nonDigit = plant("graft_stream_hostile_p12x34")
+      val foreign = plant("unrelated_tool_output")
       streaming.StreamQueries.sweepStaleTrees(scratch)
       assert(!Files.exists(dead), "dead-pid tree must be swept")
       assert(Files.exists(live), "live-pid tree must be kept")
@@ -948,9 +959,6 @@ class StreamingSpec extends SparkSpec {
       assert(Files.exists(overLong), ">Long pid suffix must be ignored, not thrown on")
       assert(Files.exists(nonDigit), "non-digit pid suffix must be ignored")
       assert(Files.exists(foreign), "non-graft entries must never be touched")
-    } finally {
-      // best-effort scratch cleanup
-      streaming.StreamQueries.rmRf(scratch)
     }
   }
 
@@ -960,9 +968,8 @@ class StreamingSpec extends SparkSpec {
     // must fail, naming the drain
     val s = spark
     import s.implicits._
-    val staging = java.nio.file.Files.createTempDirectory("graft_one_file_")
-    val dir = staging.toString
-    try {
+    withTempDir("graft_one_file_") { staging =>
+      val dir = staging.toString
       Seq((ts("2024-01-01 00:01:00"), "view"), (ts("2024-01-01 00:02:00"), "click"))
         .toDF("ts", "event_type").coalesce(1)
         .write.mode("overwrite").parquet(dir)
@@ -973,6 +980,6 @@ class StreamingSpec extends SparkSpec {
       }
       assert(e.getMessage.startsWith("q_stream_one_file:"), e.getMessage)
       assert(e.getMessage.contains("micro-batch"), e.getMessage)
-    } finally streaming.StreamQueries.rmRf(staging)
+    }
   }
 }

@@ -66,36 +66,38 @@ class TestdataContractSpec extends SparkSpec {
 
   test("readEvents branches: µs footer reads direct, int64-nanos footer rescales") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_tsunit").toString
-    val base = Timestamp.valueOf("2024-03-01 12:00:00")
-    val rows = Seq((1L, base, 7L, "view", 1.0, "{}"))
+    withTempDir("graft_tsunit") { dir =>
+      val tmp = dir.toString
+      val base = Timestamp.valueOf("2024-03-01 12:00:00")
+      val rows = Seq((1L, base, 7L, "view", 1.0, "{}"))
 
-    // µs: Spark writes TimestampType as timestamp[us] — the typed branch.
-    val usPath = s"$tmp/events_us.parquet"
-    rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .write.parquet(usPath)
-    val usRead = Tables.readEvents(spark, usPath)
-    assert(usRead.select("ts").as[Timestamp].head() === base)
+      // µs: Spark writes TimestampType as timestamp[us] — the typed branch.
+      val usPath = s"$tmp/events_us.parquet"
+      rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+        .write.parquet(usPath)
+      val usRead = Tables.readEvents(spark, usPath)
+      assert(usRead.select("ts").as[Timestamp].head() === base)
 
-    // ns: a raw INT64 nanos column is what a TIMESTAMP(NANOS) footer
-    // surfaces as under nanosAsLong — the rescale branch.
-    val nsPath = s"$tmp/events_ns.parquet"
-    rows.map { case (id, ts, u, t, v, p) => (id, ts.getTime * 1000000L, u, t, v, p) }
-      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .write.parquet(nsPath)
-    val nsRead = Tables.readEvents(spark, nsPath)
-    assert(nsRead.select("ts").as[Timestamp].head() === base)
+      // ns: a raw INT64 nanos column is what a TIMESTAMP(NANOS) footer
+      // surfaces as under nanosAsLong — the rescale branch.
+      val nsPath = s"$tmp/events_ns.parquet"
+      rows.map { case (id, ts, u, t, v, p) => (id, ts.getTime * 1000000L, u, t, v, p) }
+        .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+        .write.parquet(nsPath)
+      val nsRead = Tables.readEvents(spark, nsPath)
+      assert(nsRead.select("ts").as[Timestamp].head() === base)
 
-    // A deliberately mis-unit'd corpus (µs ticks in a raw int64 column)
-    // is indistinguishable from nanos in the footer; the reader divides
-    // and the 2024 pin above is the guard. Assert the failure mode is
-    // the documented one: the value lands nowhere near 2024.
-    val badPath = s"$tmp/events_bad.parquet"
-    rows.map { case (id, ts, u, t, v, p) => (id, ts.getTime * 1000L, u, t, v, p) }
-      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .write.parquet(badPath)
-    val badYear = Tables.readEvents(spark, badPath)
-      .select(year(col("ts"))).as[Int].head()
-    assert(badYear === 1970)
+      // A deliberately mis-unit'd corpus (µs ticks in a raw int64 column)
+      // is indistinguishable from nanos in the footer; the reader divides
+      // and the 2024 pin above is the guard. Assert the failure mode is
+      // the documented one: the value lands nowhere near 2024.
+      val badPath = s"$tmp/events_bad.parquet"
+      rows.map { case (id, ts, u, t, v, p) => (id, ts.getTime * 1000L, u, t, v, p) }
+        .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+        .write.parquet(badPath)
+      val badYear = Tables.readEvents(spark, badPath)
+        .select(year(col("ts"))).as[Int].head()
+      assert(badYear === 1970)
+    }
   }
 }
