@@ -296,7 +296,7 @@ object Advanced {
     // side: built once per session per (dim plan, key, sizing), like
     // every other shared stage, so repeated invocations neither rescan
     // the dim nor broadcast a second filter
-    val bloom = graft.SessionMemo.getOrElseUpdateObj(dim.sparkSession,
+    val bloom = graft.SessionMemo.getOrElseUpdate(dim.sparkSession,
       s"bloom:${graft.SessionMemo.planKey(dim)}:$dimKey:$expectedItems:$fpp") {
       dim.stat.bloomFilter(dimKey, expectedItems, fpp)
     }
@@ -341,13 +341,11 @@ object Advanced {
                       basketCol: String, itemCol: String,
                       minSupport: Long = 2L): org.apache.spark.sql.DataFrame = {
     // the distinct basket-item table feeds THREE consumers (total,
-    // item counts, the basket grouping) — memoized + persisted once
-    // per input per session (same lifecycle pattern as the dedup pair
-    // families; bench 1.4 s → see bench_detail)
-    val op = graft.SessionMemo.getOrElseUpdate(baskets.sparkSession,
+    // item counts, the basket grouping) — shared once per input per
+    // session, read by q_copurchase and the Graft facade
+    val op = graft.SessionMemo.shared(baskets.sparkSession,
       s"copurchase_op:${graft.SessionMemo.planKey(baskets)}:$basketCol:$itemCol") {
-      baskets.select(col(basketCol).as("o"), col(itemCol).as("p"))
-        .distinct().persist()
+      baskets.select(col(basketCol).as("o"), col(itemCol).as("p")).distinct()
     }
     val total = op.agg(countDistinct(col("o")).as("total_orders"))
     // pinned: both enrich joins below broadcast this frame — without

@@ -453,11 +453,11 @@ object PipelineOps {
     * (`length(text)` if the caller has nothing better). */
   def datasetBuild(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
       // both shared stages (gate survivors, split-tagged survivors)
-      // feed two consumers each — memoized + persisted per (session,
-      // input plan), NOT bare-persisted: a bare persist on a
-      // caller-derived frame would leak one orphan cache entry per
-      // distinct input (the nearDupScreen/profile lifecycle rule)
-      val gated = graft.SessionMemo.getOrElseUpdate(docs.sparkSession,
+      // are read twice by this plan (q_dataset_build, the Graft
+      // facade) — shared per (session, input plan), NOT
+      // bare-persisted: a bare persist on a caller-derived frame
+      // would leak one orphan cache entry per distinct input
+      val gated = graft.SessionMemo.shared(docs.sparkSession,
         s"dataset_gated:${graft.SessionMemo.planKey(docs)}") {
         docs
           .withColumn("toks", split(col("text"), " "))
@@ -470,14 +470,13 @@ object PipelineOps {
             (col("n_symbols").cast("double") / col("n_chars") < 0.1) &&
             array_contains(col("toks"), "the"))
           .select(col("doc_id"), col("text"))
-          .persist()
       }
       val keep = gated
         .groupBy(sha2(col("text"), 256).as("h"))
         .agg(min(col("doc_id")).as("doc_id"))
         .select(col("doc_id"))
       // 0.8 / 0.9 of the hash modulus 2147483629, as exact integers
-      val surv = graft.SessionMemo.getOrElseUpdate(docs.sparkSession,
+      val surv = graft.SessionMemo.shared(docs.sparkSession,
         s"dataset_surv:${graft.SessionMemo.planKey(docs)}") {
         gated.join(keep, Seq("doc_id"))
           .withColumn("hh", expr(Num.hashExpr("doc_id")))
@@ -485,7 +484,6 @@ object PipelineOps {
             when(col("hh") < 1717986903L, "train")
               .when(col("hh") < 1932735266L, "val")
               .otherwise("test"))
-          .persist()
       }
       chunkDocuments(surv.select(col("doc_id"), col("text")))
         .join(surv.select(col("doc_id"), col("split")), Seq("doc_id"))

@@ -338,21 +338,19 @@ object QualityOps {
     * lifecycle (entries are freed with the session — WeakHashMap —
     * and `spark.catalog.clearCache()` drops the blocks early; a
     * production pipeline with an unbounded vocab should pre-prune to
-    * a top-K term whitelist like oovRate does). Built through
-    * SessionMemo.materialized so the one-time cache fill lands in the
-    * memo_builds attribution block, not on the first consumer. */
+    * a top-K term whitelist like oovRate does). A [[graft.SessionMemo.shared]]
+    * stage, read by q_source_drift and the Graft facade. */
   /** PUBLIC composable form (exported via [[graft.Graft]]): drift of
     * `groupCol` strata vs the whole frame over `textCol` unigrams. */
   def sourceDrift(docs: DataFrame, groupCol: String = "source",
                   textCol: String = "text"): DataFrame = {
-    val st = graft.SessionMemo.materialized(docs.sparkSession,
+    val st = graft.SessionMemo.shared(docs.sparkSession,
       s"source_drift_st:${graft.SessionMemo.planKey(docs)}:$groupCol:$textCol") {
       docs
         .select(col(groupCol).as("source"),
           explode(split(col(textCol), " ")).as("term"))
         .groupBy(col("source"), col("term"))
         .agg(count(lit(1)).as("c_st"))
-        .persist()
     }
     val srcTot = st.groupBy(col("source")).agg(sum(col("c_st")).as("n_s"))
     val glob = st.groupBy(col("term")).agg(sum(col("c_st")).as("c_t"))

@@ -235,30 +235,26 @@ object VectorOps {
 
   private val duckBuckets = duckBucketsT(0)
 
-  /** Bucketed corpus, memoized + persisted per (session, dir): the
-    * signature pass is shared by every LSH query, q_embed_neardup and
-    * q_embed_incremental (and by min-of-2 bench timing), so one session
-    * computes it once. */
+  /** Bucketed corpus, shared per (session, dir): the signature pass
+    * is read by every LSH query, q_ann_recall, q_ann_cost,
+    * q_embed_neardup and q_embed_incremental, so one session computes
+    * it once. */
   private def bucketed(s: SparkSession, d: String): DataFrame =
-    SessionMemo.getOrElseUpdate(s, s"vec_buckets:$d") {
-      withBucket(normed(s, d)).persist()
-    }
+    SessionMemo.shared(s, s"vec_buckets:$d")(withBucket(normed(s, d)))
 
   /** Second-table bucket index ([[withBucketT]] t = 1), its own
-    * memoized shared stage: at scale each LSH table is its own index. */
+    * shared stage, read by q_ann_lsh_multi: at scale each LSH table
+    * is its own index. */
   private def bucketedT1(s: SparkSession, d: String): DataFrame =
-    SessionMemo.getOrElseUpdate(s, s"vec_buckets:$d:t1") {
-      withBucketT(normed(s, d), 1).persist()
-    }
+    SessionMemo.shared(s, s"vec_buckets:$d:t1")(withBucketT(normed(s, d), 1))
 
   /** A caller corpus's bucket index under memo key `prefix`: one
-    * persisted index per distinct corpus plan per session, so the
-    * facade forms run inside foreachBatch without re-bucketing it. */
+    * shared index per distinct corpus plan per session, read by the
+    * [[annTopK]] and [[embedScreen]] facade forms, so they run inside
+    * foreachBatch without re-bucketing it. */
   private def bucketIndex(prefix: String, corpus: DataFrame): DataFrame =
-    SessionMemo.getOrElseUpdate(corpus.sparkSession,
-      s"$prefix:${SessionMemo.planKey(corpus)}") {
-      withBucket(normedOf(corpus)).persist()
-    }
+    SessionMemo.shared(corpus.sparkSession,
+      s"$prefix:${SessionMemo.planKey(corpus)}")(withBucket(normedOf(corpus)))
 
   /** Within-bucket candidate id pairs for the graded query set from a
     * BUCKETED frame — the single-table LSH candidate set. */
@@ -504,24 +500,21 @@ object VectorOps {
 
   /** Trained coarse centroids (cent_id, cv double[64]) for the graded
     * corpus, in their own memo entry: the nprobe dial ranks a query's
-    * nearest cells against them. Pinned: the index build and every
-    * probe query consume them. */
+    * nearest cells against them. */
   private def ivfCents(s: SparkSession, d: String): DataFrame =
     SessionMemo.getOrElseUpdate(s, s"ivf_cents:$d") {
-      graft.SessionMemo.pinned(ivfCentsOf(normed(s, d)))
+      // pinned (the SessionMemo pin rule): Lloyd-iteration cascade, and the index build derives from it
+      SessionMemo.pinned(ivfCentsOf(normed(s, d)))
     }
 
   /** The assigned corpus index (vec_id, label, v, norm, cell_data), a
     * SessionMemo shared stage: an IVF index is built once and probed
     * many times, so training runs once per (session, dataset) and the
-    * steady state measures the probe join only. Pinned: the cut stops
-    * every consumer replaying the training cascade, and unlike a
-    * localCheckpoint the pinned snapshot recomputes after executor
-    * loss, so one dead executor cannot poison this session-lifetime
-    * stage. Eager, so the memo closure pays for the training. */
+    * steady state measures the probe join only. */
   private def ivfIndexed(s: SparkSession, d: String): DataFrame =
     SessionMemo.getOrElseUpdate(s, s"ivf_index:$d") {
-      graft.SessionMemo.pinned(ivfIndexedOf(normed(s, d), ivfCents(s, d)))
+      // pinned (the SessionMemo pin rule): assigned over the training cascade, and the probe cells derive from it
+      SessionMemo.pinned(ivfIndexedOf(normed(s, d), ivfCents(s, d)))
     }
 
   /** Frame-generic index assembly: assign every normed row to its

@@ -7,8 +7,7 @@ import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ReusedExchangeExec, ShuffleExchangeLike}
 
 /** Exchange census over the registry — the counting half of the
-  * exchange-count plan pin (r12 verdict #5; broadcasts added as
-  * census v2, r13 verdict #7). Every
+  * exchange-count plan pin. Every
   * `groupBy`/`join`/`repartition`/global-sort is a ShuffleExchange in
   * the physical plan; an ACCIDENTAL extra one (the q_source_drift
   * 4x-explode class from r9) costs nothing at sf0.01 and a full extra
@@ -29,31 +28,25 @@ import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ReusedExc
   *    so the count is MATERIALIZATION-INVARIANT: `executedPlan`
   *    equals it only until the node first runs, after which it holds
   *    the finalized post-AQE plan (shuffles elided / converted to
-  *    broadcast). Counting `executedPlan` made the committed fixture
-  *    reproduce only in a virgin session — the test suite's shared
-  *    session had already run every SessionMemo family with actions,
-  *    so ten queries' cached subtrees counted LOWER there and the
-  *    suite went red at the r13 HEAD (r13 verdict #1, measured:
-  *    q_copurchase 11→6, q_bm25 9→5, …);
+  *    broadcast). Counting `executedPlan` would make the count depend
+  *    on whether the session already ran the query: a cached subtree
+  *    that has run counts LOWER than one that has not;
   *  - [[InMemoryTableScanExec]] is DESCENDED into
   *    (`relation.cachedPlan`), so the number is the query's
   *    FULL-LINEAGE shuffle count. This is what makes it stable:
   *    Spark's CacheManager substitutes any registered cached plan
   *    into newly constructed plans at analysis time, so whether a
   *    shared subtree appears raw or as an `InMemoryTableScan`
-  *    depends on which consumer ran first in the session — treating
-  *    the boundary as opaque made four queries count 2-4 when
-  *    counted in a fresh session and 0 after the suite's other specs
-  *    had executed them (measured, r13). Counting through the
-  *    boundary lands on the same total either way;
+  *    depends on which consumer ran first in the session. Counting
+  *    through the boundary lands on the same total either way;
   *  - [[ReusedExchangeExec]] is an opaque leaf: a reused exchange is
   *    one shuffle, already counted at its original site.
   */
 object ExchangeCensus {
 
-  /** (shuffle count, broadcast count). Broadcasts are pinned too
-    * (census v2, r13 verdict #7): a broadcast that silently becomes a
-    * shuffle is caught by the shuffle pin, but the SYMMETRIC risk — a
+  /** (shuffle count, broadcast count). Broadcasts are pinned too: a
+    * broadcast that silently becomes a shuffle is caught by the
+    * shuffle pin, but the SYMMETRIC risk — a
     * broadcast the plan was designed around disappearing (threshold
     * drift, a stats regression making the small side look big) or an
     * unintended NEW broadcast (a genuinely large side being collected
@@ -78,34 +71,24 @@ object ExchangeCensus {
 
   def countShuffles(p: SparkPlan): Int = countExchanges(p)._1
 
-  /** Counts for every registered BATCH query, in sorted-name order.
-    * Queries are EXECUTED once (uncounted `.count()`) first, so every
-    * SessionMemo shared stage is built, cached, AND MATERIALIZED
-    * before any count is taken. Construction alone is not enough
-    * (r14): a lazily-persisted memo (dataset_gated / dataset_surv)
-    * registers its cache eagerly but materializes on first action,
-    * and a MATERIALIZED cached AdaptiveSparkPlanExec exposes its
-    * final plan's output partitioning — so a consumer join above the
-    * cache scan plans one fewer exchange once the cache has run
-    * (measured: q_dataset_build 6 unmaterialized vs 5 materialized).
-    * Executing everything first pins the census to the
-    * all-materialized state, which is the state ANY warm context
-    * (the test suite, a repeated session) is already in — counts are
-    * context-invariant by construction, which `--selfcheck` asserts.
+  /** Counts for every registered BATCH query, in sorted-name order,
+    * from plans built without executing the queries: every
+    * SessionMemo stage that holds a cache is filled when it is built
+    * ([[graft.SessionMemo.shared]], pins), so no query is planned over
+    * an empty cache and the counts do not depend on what the session
+    * ran before, which `--selfcheck` asserts.
     *
-    * The `q_stream_*` drains are excluded ENTIRELY — from the warm
-    * pass AND the counting pass (r13 ADVICE): invoking a drain query
-    * re-runs a full AvailableNow drain (checkpoint + state machinery,
-    * the dominant share of any pass that touches them), and the frame
-    * a drain returns is just a post-hoc parquet read of its sink —
-    * pinning that plan (almost always 1 exchange from the output
-    * sort) says nothing about the drain pipeline itself. Drain plans
-    * are therefore intentionally unpinned; their structure is covered
-    * by StreamingSpec's per-drain semantics and state-bound tests. */
+    * The `q_stream_*` drains are excluded: invoking a drain query
+    * re-runs a full AvailableNow drain (checkpoint + state
+    * machinery), and the frame a drain returns is just a post-hoc
+    * parquet read of its sink — pinning that plan (almost always 1
+    * exchange from the output sort) says nothing about the drain
+    * pipeline itself. Drain plans are therefore intentionally
+    * unpinned; their structure is covered by StreamingSpec's
+    * per-drain semantics and state-bound tests. */
   def censusAll(spark: SparkSession, sfDir: String): Seq[(String, (Int, Int))] = {
     val names = graft.SparkEntry.queries.keys.toSeq.sorted
       .filterNot(_.startsWith("q_stream_"))
-    names.foreach(n => graft.SparkEntry.queries(n)(spark, sfDir).count())
     names.map { n =>
       val df = graft.SparkEntry.queries(n)(spark, sfDir)
       n -> countExchanges(df.queryExecution.executedPlan)

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
 
@@ -39,6 +41,39 @@ class BroadcastReleaseSpec extends SparkSpec {
     assert(rows(memo) === before, "recompute through the released broadcasts changed the rows")
     // the same frame again: the memo holds one entry, not a rebuild
     assert(SparkEntry.queries("q_dedup_minhash")(spark, sfDir) eq memo)
+  }
+
+  /** `t` joined to a broadcast of its own `key` values: a caller frame
+    * no other test builds (so every memo over it gets a new
+    * `planKey`) whose plan completes one broadcast when it runs. */
+  private def fresh(t: DataFrame, key: String): DataFrame =
+    t.join(broadcast(t.select(col(key)).distinct().filter(pmod(col(key), lit(5L)) =!= 4)), key)
+
+  test("shared memos are filled and released at build, before any action") {
+    import SessionMemo.planKey
+    val docs = fresh(Tables.documents(spark, sfDir), "doc_id")
+    val vecs = fresh(Tables.embeddings(spark, sfDir), "vec_id")
+    val baskets = fresh(Tables.lineitem(spark, sfDir), "l_orderkey")
+    // (family, memo keys its build times, the frame a caller gets back)
+    val cases = Seq[(String, Seq[String], () => DataFrame)](
+      ("tf_counts", Seq(s"tf_counts:${planKey(docs)}"),
+        () => ops.TextOps.termCounts(docs)),
+      ("bucketIndex", Seq(s"ann_topk_index:${planKey(vecs)}"),
+        () => ops.VectorOps.annTopK(vecs, vecs.limit(3))),
+      ("datasetBuild", Seq(s"dataset_gated:${planKey(docs)}", s"dataset_surv:${planKey(docs)}"),
+        () => ops.PipelineOps.datasetBuild(docs)),
+      ("copurchase_op", Seq(s"copurchase_op:${planKey(baskets)}:l_orderkey:l_partkey"),
+        () => ops.Advanced.copurchasePairs(baskets, "l_orderkey", "l_partkey")))
+    cases.foreach { case (family, keys, call) =>
+      val caches = call().queryExecution.withCachedData.collect { case m: InMemoryRelation => m }
+      assert(caches.nonEmpty, s"$family: the returned frame reads no cache")
+      caches.foreach { m =>
+        assert(m.cacheBuilder.isCachedColumnBuffersLoaded, s"$family: a cache it reads is not filled")
+        assertReleased(m.cacheBuilder.cachedPlan)
+      }
+      val timed = SessionMemo.buildTimes(spark).keySet
+      keys.foreach(k => assert(timed(k), s"$family: no build time under $k"))
+    }
   }
 
   test("pinnedSlot: same rows before and after its build's broadcasts are released") {

@@ -795,16 +795,16 @@ class PlanSpec extends SparkSpec {
   }
 
   test("shuffle-exchange counts match the committed per-query fixture") {
-    // The exchange-count plan pin (r12 verdict #5): every registered
-    // batch query's planned ShuffleExchange count is frozen in
+    // The exchange-count plan pin: every registered batch query's
+    // planned ShuffleExchange count is frozen in
     // src/test/resources/exchange_counts.tsv. An accidental extra
     // shuffle — the q_source_drift 4x-explode class — fails HERE by
     // query name instead of surfacing as cross-round bench
-    // archaeology. Counting rules (opaque cache/reuse boundaries,
-    // pre-count memo warm pass, and counting from the immutable
-    // AdaptiveSparkPlanExec.initialPlan so a materialized cache and a
-    // fresh session count identically — the r13 red-suite fix) live
-    // in tools.ExchangeCensus; q_stream_* drains are intentionally
+    // archaeology. Counting rules (counting through cache boundaries,
+    // reused exchanges as leaves, and counting from the immutable
+    // AdaptiveSparkPlanExec.initialPlan so a session that ran the
+    // query and a fresh session count identically) live in
+    // tools.ExchangeCensus; q_stream_* drains are intentionally
     // unpinned (their returned frame is only a sink read — see
     // censusAll's doc). Deliberate plan changes regenerate the
     // fixture via `sbt "runMain graft.tools.ExchangeCensus"` and
